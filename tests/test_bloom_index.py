@@ -9,8 +9,9 @@ from victorialogs_spark.index.bloom import (
     build_token_bloom_index,
     candidate_files,
     read_pruned,
-    words_of_query,
+    tokens_of_query,
 )
+from victorialogs_spark.logsql.parser import parse_query
 
 UTC = dt.timezone.utc
 
@@ -31,11 +32,16 @@ def _write_table(spark, path):
         df.coalesce(1).write.mode("append").parquet(path)
 
 
+def _tokens(query):
+    return tokens_of_query(parse_query(query))
+
+
 def test_words_of_query():
-    assert words_of_query("error") == ["error"]
-    assert words_of_query('"disk full" beta') == ["disk", "full", "beta"]
-    assert words_of_query("app:x error") == ["error"]  # only _msg conjuncts
-    assert words_of_query("error OR warn") == []  # OR is not prunable
+    assert _tokens("error") == {"_msg": ["error"]}
+    assert _tokens('"disk full" beta') == {"_msg": ["disk", "full", "beta"]}
+    # tokens are kept per field
+    assert _tokens("app:x error") == {"app": ["x"], "_msg": ["error"]}
+    assert _tokens("error OR warn") == {}  # OR is not prunable
 
 
 def test_bloom_prunes_files(spark, tmp_path):
@@ -46,10 +52,18 @@ def test_bloom_prunes_files(spark, tmp_path):
 
     n_files = spark.read.parquet(index).count()
     assert n_files == 3
-    assert len(candidate_files(spark, index, ["beta"])) == 1
-    assert len(candidate_files(spark, index, ["zzz_not_there"])) == 0
+
+    def cands(toks):
+        indexed, out = candidate_files(
+            spark, index, tokens_by_field={"_msg": toks}
+        )
+        assert len(indexed) == 3
+        return out
+
+    assert len(cands(["beta"])) == 1
+    assert len(cands(["zzz_not_there"])) == 0
     # conjunctive: tokens from different files → no candidate file
-    assert len(candidate_files(spark, index, ["alpha", "gamma"])) == 0
+    assert len(cands(["alpha", "gamma"])) == 0
 
     pruned = read_pruned(spark, table, index, "beta")
     assert pruned.select(F.input_file_name()).distinct().count() == 1
@@ -147,9 +161,10 @@ def test_bloom_local_probe_matches_spark_probe(spark, tmp_path, monkeypatch):
     build_token_bloom_index(spark, table, index)
 
     for toks in (["beta"], ["alpha", "gamma"], ["zzz_not_there"], ["alpha"]):
-        local = sorted(candidate_files(spark, index, toks))
+        tbf = {"_msg": toks}
+        local = candidate_files(spark, index, tokens_by_field=tbf)
         monkeypatch.setattr(L, "LOCAL_INDEX_MAX_BYTES", 0)
-        dist = sorted(candidate_files(spark, index, toks))
+        dist = candidate_files(spark, index, tokens_by_field=tbf)
         monkeypatch.undo()
         assert local == dist, toks
 
@@ -262,7 +277,10 @@ def test_heterogeneous_sidecar_prunes_soundly(spark, tmp_path):
     assert len(pruned.inputFiles()) == 1  # alpha file still pruned
 
     # a field no sidecar row indexed is never prunable
-    assert len(candidate_files(spark, idx_het, [], tokens_by_field={"host": ["x"]})) == 2
+    indexed, cands = candidate_files(
+        spark, idx_het, tokens_by_field={"host": ["x"]}
+    )
+    assert cands == indexed and len(cands) == 2
 
 
 def test_per_field_probe_local_matches_spark(spark, tmp_path, monkeypatch):
@@ -282,9 +300,10 @@ def test_per_field_probe_local_matches_spark(spark, tmp_path, monkeypatch):
         {"app": ["web"]},  # field no row indexed: nothing prunable
         {},
     ):
-        local = sorted(candidate_files(spark, index, [], tokens_by_field=tbf))
+        local = candidate_files(spark, index, tokens_by_field=tbf)
         monkeypatch.setattr(L, "LOCAL_INDEX_MAX_BYTES", 0)
-        dist = sorted(candidate_files(spark, index, [], tokens_by_field=tbf))
+        dist = candidate_files(spark, index, tokens_by_field=tbf)
         monkeypatch.undo()
         assert local == dist, tbf
-    assert len(candidate_files(spark, index, [], tokens_by_field={"app": ["x"]})) == 3
+    _, cands = candidate_files(spark, index, tokens_by_field={"app": ["x"]})
+    assert len(cands) == 3

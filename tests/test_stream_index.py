@@ -9,10 +9,10 @@ from victorialogs_spark.api import run_query
 from victorialogs_spark.index.bloom import read_pruned
 from victorialogs_spark.index.streams import (
     build_stream_index,
-    prune_files,
     stream_candidate_files,
     stream_constraints_of_query,
 )
+from victorialogs_spark.logsql.parser import parse_query
 
 UTC = dt.timezone.utc
 
@@ -38,19 +38,23 @@ def _write_table(spark, path):
         df.coalesce(1).write.mode("append").parquet(path)
 
 
+def _constraints(query):
+    return stream_constraints_of_query(parse_query(query))
+
+
 def test_stream_constraints_of_query():
-    c = stream_constraints_of_query('{app="web"} error')
+    c = _constraints('{app="web"} error')
     assert c == {"app": {"web"}}
-    c = stream_constraints_of_query('{app="web" or app="db"}')
+    c = _constraints('{app="web" or app="db"}')
     assert c == {"app": {"web", "db"}}
     # an OR term without '=' on the field makes it unprunable
-    assert stream_constraints_of_query('{app="web" or env="x"}') == {}
+    assert _constraints('{app="web" or env="x"}') == {}
     # negations never prune
-    assert stream_constraints_of_query('{app!="web"}') == {}
-    c = stream_constraints_of_query('_stream_id:in(s1, s2)')
+    assert _constraints('{app!="web"}') == {}
+    c = _constraints('_stream_id:in(s1, s2)')
     assert c == {"_stream_id": {"s1", "s2"}}
     # two conjuncts on one field intersect
-    c = stream_constraints_of_query('{app="web"} {app="db"}')
+    c = _constraints('{app="web"} {app="db"}')
     assert c == {"app": set()}
 
 
@@ -78,9 +82,15 @@ def test_stream_index_prunes_files(spark, tmp_path):
     assert cands == set()
 
     full = spark.read.parquet(table)
-    files = list(full.inputFiles())
-    assert len(prune_files(spark, table, index, '{app="web"}', files)) == 1
-    assert len(prune_files(spark, table, index, "plain words", files)) == 3
+
+    def n_files(q):
+        return len(
+            read_pruned(spark, table, None, q, stream_index_path=index)
+            .inputFiles()
+        )
+
+    assert n_files('{app="web"}') == 1
+    assert n_files("plain words") == 3
 
     # end-to-end through read_pruned (stream sidecar only, no bloom)
     pruned = read_pruned(
@@ -342,3 +352,58 @@ def test_mixed_version_sidecar_disables_empty_pruning(spark, tmp_path,
     monkeypatch.undo()
     assert local2 == dist2
     assert len(local2[1]) == 1
+
+
+def _register_both(spark, tmp_path):
+    from victorialogs_spark.index.bloom import (
+        build_token_bloom_index,
+        register_bloom_index,
+    )
+    from victorialogs_spark.index.streams import register_stream_index
+
+    table = str(tmp_path / "t")
+    sidx = str(tmp_path / "sidx")
+    bidx = str(tmp_path / "bidx")
+    _write_table(spark, table)
+    build_stream_index(spark, table, sidx, fields=["_stream_id", "app"])
+    build_token_bloom_index(spark, table, bidx)
+    register_stream_index(table, sidx)
+    register_bloom_index(table, bidx)
+    return table, sidx, bidx
+
+
+def test_run_query_opens_table_once(spark, tmp_path):
+    """Planning a query on a path with both sidecars registered runs ONE
+    Spark job: the table's schema inference. The sidecar probes run
+    driver-side, the pruned reader and the unpruned subquery source
+    reuse that schema."""
+    table, _, _ = _register_both(spark, tmp_path)
+    sc = spark.sparkContext
+    listener_bus = sc._jsc.sc().listenerBus()
+    for i, q in enumerate(["web", '{app="web"} message']):
+        group = f"open-once-{i}"
+        sc.setJobGroup(group, "plan only")
+        try:
+            out = run_query(spark, table, q)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        listener_bus.waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, q
+        assert len(out.inputFiles()) == 1, q
+
+
+def test_missing_sidecar_means_no_pruning(spark, tmp_path):
+    """A registered sidecar whose directory is gone prunes nothing: the
+    path form returns the unpruned answer instead of failing, for either
+    sidecar."""
+    import shutil
+
+    for which in (1, 2):  # the stream sidecar, then the bloom sidecar
+        paths = _register_both(spark, tmp_path / str(which))
+        table, gone = paths[0], paths[which]
+        shutil.rmtree(gone)
+        full = spark.read.parquet(table)
+        for q in ('{app="web"}', "web", '{app="db"} message'):
+            got = sorted(tuple(r) for r in run_query(spark, table, q).collect())
+            want = sorted(tuple(r) for r in run_query(spark, full, q).collect())
+            assert got == want and len(got) == 4, (gone, q)

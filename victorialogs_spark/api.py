@@ -16,11 +16,14 @@ def run_query(
     end_ns: int | None = None,
 ) -> DataFrame:
     """Run a LogsQL query against a log DataFrame, or against a log-table
-    PATH — the path form consults any bloom index registered via
-    ``index.bloom.register_bloom_index`` and prunes input files for the
-    query's word filters before the scan starts (the reference probes its
-    per-block token blooms on every word filter,
-    lib/logstorage/filter_phrase.go:85-122).
+    PATH. The path form opens the table once through
+    ``index.bloom.open_log_table``, which prunes input files through the
+    sidecars registered for the path (``register_bloom_index``,
+    ``register_stream_index``) before the scan starts (the reference
+    probes its per-block token blooms on every word filter,
+    lib/logstorage/filter_phrase.go:85-122). Subqueries plan against an
+    unpruned reader of the same path that reuses the opened schema, so
+    no second schema inference runs.
 
     ``start_ns``/``end_ns`` are the API-level global time filter (the
     HTTP start/end args); subqueries inherit it unless they set
@@ -34,9 +37,9 @@ def run_query(
         path = df
         df = open_log_table(spark, path, query)
         # subqueries / join / union / stream_context must plan against the
-        # UNPRUNED table — the bloom prune narrows only the outer scan,
+        # UNPRUNED table — the sidecar prune narrows only the outer scan,
         # never what other plan nodes can see
-        source_df = spark.read.parquet(path)
+        source_df = spark.read.schema(df.schema).parquet(path)
     q = parse_query(query, timestamp_ns)
     gt = None
     if start_ns is not None or end_ns is not None:

@@ -465,12 +465,13 @@ class _State:
             self.inc("vl_spill_migrations_total", "status", "ok")
             self._migrate_fails = 0
             # 4. tier-2: rewrite any day whose live file count crossed
-            #    the gate into clustered files (compact_day's layout:
-            #    stream-hashed, (_stream_id, _time)-sorted, bloom on
-            #    _stream_id). Same crash protocol as every other step —
-            #    new files are orphans until the manifest commit, old
-            #    files stay on disk until the NEXT migration so live
-            #    plans never lose them. Failures here are gated PER DAY
+            #    the gate into clustered files (ingest.write_clustered,
+            #    compact_day's layout: stream-hashed, (_stream_id,
+            #    _time)-sorted, bloom on _stream_id). Same crash
+            #    protocol as every other step — new files are orphans
+            #    until the manifest commit, old files stay on disk
+            #    until the NEXT migration so live plans never lose
+            #    them. Failures here are gated PER DAY
             #    (_compact_fails, inside _compact_days) and must never
             #    reach the tier-1 counter: the migration above already
             #    COMMITTED, so counting a compaction failure against
@@ -551,7 +552,7 @@ class _State:
                 self.inc("vl_spill_compactions_total", "status", "error")
 
     def _compact_one_day(self, day: str, files: list[str]) -> None:
-        from pyspark.sql import functions as F
+        from victorialogs_spark.streaming.ingest import write_clustered
 
         paths = [os.path.join(self._table_dir, p) for p in files]
         day_dir = os.path.join(self._table_dir, day)
@@ -562,24 +563,7 @@ class _State:
             self.spark.read.option("mergeSchema", "true")
             .parquet(*paths)
         )
-        sort_cols = [
-            c for c in ("_stream_id", "_time") if c in df.columns
-        ]
-        if sort_cols:
-            # hash-partition on the first cluster key so each output
-            # file holds a SUBSET of streams (the compact_day rule:
-            # round-robin would put every stream in every file and
-            # kill sidecar pruning)
-            out = df.repartition(n_out, F.col(sort_cols[0]))
-            out = out.sortWithinPartitions(*sort_cols)
-        else:
-            out = df.coalesce(n_out)
-        writer = out.write.mode("append").option("compression", "zstd")
-        if "_stream_id" in df.columns:
-            writer = writer.option(
-                "parquet.bloom.filter.enabled#_stream_id", "true"
-            )
-        writer.parquet(day_dir)
+        write_clustered(df, day_dir, n_out, "append")
         new_files = sorted(set(self._list_table_files()) - before)
         with self.lock:
             self._compact_fails.pop(day, None)  # success resets the gate

@@ -1,1 +1,2 @@
-"""Side indexes: token-bloom file pruning for word filters (bloom.py)."""
+"""Side indexes: token-bloom (bloom.py) and stream-value (streams.py)
+file pruning, both applied by ``bloom.read_pruned``."""

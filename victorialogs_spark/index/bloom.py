@@ -16,10 +16,12 @@ bitset build). Probe reads only the tiny sidecar table.
 from __future__ import annotations
 
 import hashlib
-import re
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from victorialogs_spark.logsql import ast as A
 
 BITS_PER_TOKEN = 16  # same density as the reference
 NUM_HASHES = 6
@@ -120,126 +122,60 @@ def _maybe_contains(bloom: bytes, token: str) -> bool:
 def candidate_files(
     spark: SparkSession,
     index_path: str,
-    tokens: list[str],
-    tokens_by_field: dict[str, list[str]] | None = None,
-) -> list[str]:
-    """Files that may contain ALL of ``tokens`` (bloom AND-semantics, the
-    same conjunctive pruning the reference applies per block). Small
-    local sidecars probe driver-side (index/local.py); otherwise the
-    probe runs distributed over the sidecar — only matching file NAMES
-    reach the driver, never the bloom bitsets (at 100 TB the sidecar
-    holds one row per file; bitsets can be MBs each).
+    tokens_by_field: dict[str, list[str]],
+) -> tuple[set[str], set[str]]:
+    """(indexed_files, candidate_files): candidates may contain ALL the
+    query tokens of the fields their own sidecar row indexed (bloom
+    AND-semantics, the same conjunctive pruning the reference applies
+    per block). Small local sidecars probe driver-side (index/local.py);
+    otherwise one distributed pass over the sidecar yields both sets —
+    only file names reach the driver, never the bloom bitsets (at 100 TB
+    the sidecar holds one row per file; bitsets can be MBs each).
 
-    When ``tokens_by_field`` is given, each file is probed ONLY with the
-    tokens of fields THAT file's sidecar row indexed (per-row "fields"):
-    in a heterogeneous sidecar (partial rebuild / append with a different
-    field set), probing a file with tokens of a field it never indexed
-    would wrongly prune matching files — r15 advice. A file whose field
-    set carries no query tokens is kept (nothing prunable about it)."""
+    Each file is probed ONLY with the tokens of fields its row indexed
+    (per-row "fields"): in a heterogeneous sidecar (partial rebuild /
+    append with a different field set), probing a file with tokens of a
+    field it never indexed would wrongly prune matching files. A file
+    whose field set carries no query tokens is kept (nothing prunable
+    about it), so tokens on unindexed fields never prune."""
     from victorialogs_spark.index.local import read_local_index
 
-    if tokens_by_field is not None:
-        def _req(fields_str):
-            out: list[str] = []
-            for f in (fields_str or "_msg").split(","):
-                out.extend(tokens_by_field.get(f, ()))
-            return out
-
-        local = read_local_index(index_path)
-        if local is not None:
-            return [
-                r["file"]
-                for r in local
-                if r["bloom"] is not None
-                and all(
-                    _maybe_contains(bytes(r["bloom"]), t)
-                    for t in _req(r.get("fields"))
-                )
-            ]
-
-        def _probe_f(b, fields_str) -> bool:
-            return b is not None and all(
-                _maybe_contains(bytes(b), t) for t in _req(fields_str)
-            )
-
-        probe = F.udf(_probe_f, "boolean")
-        idx = spark.read.parquet(index_path)
-        fields_col = (
-            F.col("fields") if "fields" in idx.columns else F.lit("_msg")
+    def _may_match(bloom, fields_str) -> bool:
+        return bloom is not None and all(
+            _maybe_contains(bytes(bloom), t)
+            for f in (fields_str or "_msg").split(",")
+            for t in tokens_by_field.get(f, ())
         )
-        return [
-            r["file"]
-            for r in idx.where(probe(F.col("bloom"), fields_col))
-            .select("file")
-            .collect()
-        ]
-
-    toks = list(tokens)
 
     local = read_local_index(index_path)
     if local is not None:
-        return [
-            r["file"]
-            for r in local
-            if r["bloom"] is not None
-            and all(_maybe_contains(bytes(r["bloom"]), t) for t in toks)
-        ]
-
-    def _probe(b) -> bool:
-        return b is not None and all(
-            _maybe_contains(bytes(b), t) for t in toks
+        return (
+            {r["file"] for r in local},
+            {r["file"] for r in local if _may_match(r["bloom"], r.get("fields"))},
         )
-
-    probe = F.udf(_probe, "boolean")
     idx = spark.read.parquet(index_path)
-    return [r["file"] for r in idx.where(probe(F.col("bloom"))).select("file").collect()]
+    fields_col = F.col("fields") if "fields" in idx.columns else F.lit("_msg")
+    probe = F.udf(_may_match, "boolean")
+    rows = idx.select(
+        "file", probe(F.col("bloom"), fields_col).alias("hit")
+    ).collect()
+    return {r["file"] for r in rows}, {r["file"] for r in rows if r["hit"]}
 
 
-def _indexed_fields(spark: SparkSession, index_path: str) -> set[str]:
-    """The field set a sidecar was built over, from its recorded
-    "fields" column; sidecars predating that column were always built
-    with the default ["_msg"]."""
-    from victorialogs_spark.index.local import read_local_index
-
-    local = read_local_index(index_path)
-    if local is not None:
-        out: set[str] = set()
-        for r in local:
-            out.update((r.get("fields") or "_msg").split(","))
-        return out or {"_msg"}
-    try:
-        idx = spark.read.parquet(index_path)
-        if "fields" not in idx.columns:
-            return {"_msg"}
-        # union over DISTINCT row values — a heterogeneous sidecar
-        # (partial rebuild / append over a different field set) must
-        # surface every field any row indexed, not just the first row's
-        # (r15 advice); per-file soundness is handled by candidate_files'
-        # tokens_by_field probe
-        out = set()
-        for row in idx.select("fields").distinct().collect():
-            out.update((row[0] or "_msg").split(","))
-        return out or {"_msg"}
-    except Exception:  # noqa: BLE001 — unreadable sidecar: no pruning
-        return set()
-
-
-def words_of_query(query: str, field: str = "_msg") -> list[str]:
-    """Extract the top-level conjunct word/phrase tokens on ``field`` from a
-    LogsQL query — the prunable part of the filter."""
-    from victorialogs_spark.logsql import ast as A
-    from victorialogs_spark.logsql.parser import parse_query
-
-    q = parse_query(query)
+def tokens_of_query(q: A.Query) -> dict[str, list[str]]:
+    """The prunable part of a parsed query's filter: the word/phrase
+    tokens of its top-level conjuncts, per field."""
     conjuncts = q.filter.children if isinstance(q.filter, A.FAnd) else [q.filter]
-    toks: list[str] = []
+    out: dict[str, list[str]] = {}
     for c in conjuncts:
-        if isinstance(c, A.FPhrase) and c.field == field and not c.case_insensitive:
+        if isinstance(c, A.FPhrase) and not c.case_insensitive:
             # py_tokens, not re.findall: Python re has no \p{L}, and the
             # probe MUST classify exactly like the JVM index build or
-            # pruning silently drops matching files (r15 tokenizer parity)
-            toks.extend(py_tokens(c.phrase))
-    return toks
+            # pruning silently drops matching files
+            toks = py_tokens(c.phrase)
+            if toks:
+                out.setdefault(c.field, []).extend(toks)
+    return out
 
 
 def read_pruned(
@@ -249,66 +185,60 @@ def read_pruned(
     query: str,
     stream_index_path: str | None = None,
 ) -> DataFrame:
-    """Read the log table scanning ONLY files that may match the query's
-    word filters (token-bloom sidecar, ``index_path``) AND its stream
-    constraints (stream-value sidecar, ``stream_index_path`` —
-    index/streams.py). Unknown (unindexed) files are always included.
-    Returns the full table reader when nothing is prunable."""
-    tokens_by_field: dict[str, list[str]] = {}
-    if index_path:
-        # the probe is only sound for tokens of fields the sidecar
-        # actually indexed: a sidecar built over a label column must not
-        # prune on _msg tokens (files whose label bloom lacks the token
-        # would be dropped even though their _msg matches — r14 review
-        # finding). Collect tokens PER indexed field so each file is
-        # probed only with the fields its own sidecar row indexed
-        # (heterogeneous sidecars — r15 advice).
-        for f in sorted(_indexed_fields(spark, index_path)):
-            t = words_of_query(query, field=f)
-            if t:
-                tokens_by_field[f] = t
+    """Open the log table at ``table_path`` for ``query``, scanning ONLY
+    files that may match its word filters (token-bloom sidecar,
+    ``index_path``) AND its stream constraints (stream-value sidecar,
+    ``stream_index_path`` — index/streams.py).
+
+    The one place a table path is opened: one schema-inferring read of
+    the table, one parse of the query, one probe per sidecar. Files a
+    sidecar does not list are always kept, and a sidecar that cannot be
+    read (deleted, corrupt) prunes nothing. Returns the full table
+    reader when nothing is prunable; a pruned reader otherwise carries
+    the full reader's schema, so partition columns stay populated."""
+    from victorialogs_spark.index.streams import (
+        stream_candidate_files,
+        stream_constraints_of_query,
+    )
+    from victorialogs_spark.logsql.parser import parse_query
+
     full = spark.read.parquet(table_path)
-    if not tokens_by_field and stream_index_path is None:
+    q = parse_query(query)
+    probes = []
+    if index_path and (tokens := tokens_of_query(q)):
+        probes.append((candidate_files, index_path, tokens))
+    if stream_index_path and (constraints := stream_constraints_of_query(q)):
+        probes.append((stream_candidate_files, stream_index_path, constraints))
+    if not probes:
         return full
     # metadata-only file listing — a select(input_file_name()).distinct()
     # would scan every row just to enumerate files, costing more than the
     # pruning saves
     all_files = list(full.inputFiles())
-    hive = any("=" in f.rsplit("/", 2)[-2] for f in all_files if "/" in f)
     keep = all_files
-    if tokens_by_field:
-        from victorialogs_spark.index.local import read_local_index
-
-        local = read_local_index(index_path)
-        if local is not None:
-            indexed = {r["file"] for r in local}
-        else:
-            indexed = {
-                r["file"]
-                for r in spark.read.parquet(index_path).select("file").collect()
-            }
-        cands = set(
-            candidate_files(
-                spark, index_path, [], tokens_by_field=tokens_by_field
+    for probe, sidecar, wanted in probes:
+        try:
+            indexed, cands = probe(spark, sidecar, wanted)
+        except Exception as e:  # noqa: BLE001 — unreadable sidecar: no pruning
+            warnings.warn(
+                f"sidecar {sidecar} is unreadable ({type(e).__name__});"
+                " not pruning through it",
+                stacklevel=2,
             )
-        )
+            continue
         keep = [f for f in keep if f not in indexed or f in cands]
-    if stream_index_path is not None:
-        from victorialogs_spark.index.streams import prune_files
-
-        keep = prune_files(spark, table_path, stream_index_path, query, keep)
     if not keep:
         return full.limit(0)
     if len(keep) == len(all_files):
         return full
-    reader = spark.read.schema(full.schema)
-    if hive:
-        # basePath keeps partition columns (_day=... directory values)
-        # populated when reading leaf files directly — without it a
-        # day-partitioned table (the compact_day layout) would come back
-        # with NULL partition columns
-        reader = reader.option("basePath", table_path)
-    return reader.parquet(*keep)
+    # basePath keeps partition columns (_day=... directory values)
+    # populated when reading leaf files directly; on a flat table it is
+    # a no-op
+    return (
+        spark.read.schema(full.schema)
+        .option("basePath", table_path)
+        .parquet(*keep)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -318,7 +248,9 @@ def read_pruned(
 # blooms on every word filter (lib/logstorage/filter_phrase.go:85-122).
 # ---------------------------------------------------------------------------
 
-_REGISTRY: dict[str, str] = {}
+# the one sidecar registry: normalized table path -> {kind: sidecar path},
+# kind "bloom" (this module) or "streams" (index/streams.py)
+_REGISTRY: dict[str, dict[str, str]] = {}
 
 
 def _norm_path(p: str) -> str:
@@ -340,23 +272,26 @@ def _norm_path(p: str) -> str:
     return p.rstrip("/")
 
 
+def register_sidecar(table_path: str, kind: str, index_path: str) -> None:
+    """Associate a ``kind`` ("bloom" or "streams") sidecar with a
+    log-table path; ``open_log_table`` prunes through every sidecar
+    registered for the path."""
+    _REGISTRY.setdefault(_norm_path(table_path), {})[kind] = index_path
+
+
 def register_bloom_index(table_path: str, index_path: str) -> None:
     """Associate a sidecar bloom index with a log-table path. Subsequent
     ``api.run_query(spark, table_path, query)`` calls prune input files
     through it automatically."""
-    _REGISTRY[_norm_path(table_path)] = index_path
+    register_sidecar(table_path, "bloom", index_path)
 
 
 def open_log_table(spark: SparkSession, table_path: str, query: str) -> DataFrame:
-    """Open a log table for a query, applying every registered sidecar
-    prune (token bloom + stream values). Falls back to a plain reader
-    when nothing is registered or nothing in the query is prunable;
-    correctness never depends on the indexes."""
-    from victorialogs_spark.index.streams import _STREAM_REGISTRY
-
-    key = _norm_path(table_path)
-    idx = _REGISTRY.get(key)
-    sidx = _STREAM_REGISTRY.get(key)
-    if idx is None and sidx is None:
-        return spark.read.parquet(table_path)
-    return read_pruned(spark, table_path, idx, query, stream_index_path=sidx)
+    """Open a log table for a query through ``read_pruned``, applying
+    every sidecar registered for the path (token bloom + stream values).
+    Correctness never depends on the indexes."""
+    sidecars = _REGISTRY.get(_norm_path(table_path), {})
+    return read_pruned(
+        spark, table_path, sidecars.get("bloom"), query,
+        stream_index_path=sidecars.get("streams"),
+    )

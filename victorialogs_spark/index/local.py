@@ -27,11 +27,11 @@ import os
 # round-trips cost 30-50x that)
 LOCAL_INDEX_MAX_BYTES = 32 << 20
 
-# (resolved path) -> (fingerprint, rows): one pruned query probes the
-# sidecar up to three times (read_pruned's indexed-set + candidate_files
-# + stream_candidate_files), and each uncached read materializes up to
-# 32 MiB of parquet into Python dicts (several-fold memory expansion
-# for bloom bitsets). The fingerprint (per-part size+mtime) invalidates
+# (resolved path) -> (fingerprint, rows): a pruned query reads each
+# registered sidecar once, but every query on the table reads it again,
+# and each uncached read materializes up to 32 MiB of parquet into
+# Python dicts (several-fold memory expansion for bloom bitsets); the
+# memo serves those reads across queries. The fingerprint (per-part size+mtime) invalidates
 # on any rewrite, so a re-built sidecar is never served stale. Bounded:
 # a session touches a handful of sidecars; evict FIFO past 8. Locked:
 # HTTP facade handler threads probe concurrently, and an unguarded

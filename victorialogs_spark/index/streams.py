@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from victorialogs_spark.logsql import ast as A
+
 MAX_VALUES_PER_FILE = 4096
 
 # on-disk format version. v2: NULL label values are recorded as "" (the
@@ -29,9 +31,6 @@ MAX_VALUES_PER_FILE = 4096
 # predates v2 and its value sets may lack "" — the reader treats "" as
 # unprunable through such files rather than pruning wrong.
 FORMAT_VERSION = 2
-
-_STREAM_REGISTRY: dict[str, str] = {}
-
 
 def build_stream_index(
     spark: SparkSession,
@@ -94,10 +93,10 @@ def build_stream_index(
     ).parquet(index_path)
 
 
-def stream_constraints_of_query(query: str) -> dict[str, set[str]]:
-    """Extract per-field equality value sets from the query's TOP-LEVEL
-    conjuncts — the prunable part of stream filters, AND-semantics
-    across fields:
+def stream_constraints_of_query(q: A.Query) -> dict[str, set[str]]:
+    """Extract per-field equality value sets from a parsed query's
+    TOP-LEVEL conjuncts — the prunable part of stream filters,
+    AND-semantics across fields:
 
     - ``_stream_id:in(id, ...)`` → {"_stream_id": ids}
     - ``{a="x"}`` → {"a": {"x"}}; ``{a="x" or a="y"}`` → {"a": {"x","y"}}
@@ -105,10 +104,6 @@ def stream_constraints_of_query(query: str) -> dict[str, set[str]]:
     An OR term that does not constrain a field with ``=`` makes that
     field unprunable (negations/regexes never prune — conservative,
     like the reference's matching-streams resolution)."""
-    from victorialogs_spark.logsql import ast as A
-    from victorialogs_spark.logsql.parser import parse_query
-
-    q = parse_query(query)
     conjuncts = q.filter.children if isinstance(q.filter, A.FAnd) else [q.filter]
     out: dict[str, set[str]] = {}
 
@@ -136,7 +131,7 @@ def stream_constraints_of_query(query: str) -> dict[str, set[str]]:
                     fields.setdefault(f_, set()).add(v)
             for f_ in sound or set():
                 _merge(f_, fields[f_])
-    return {k: v for k, v in out.items()}
+    return out
 
 
 # above this many wanted values per field, the probe joins a broadcast
@@ -298,23 +293,6 @@ def register_stream_index(table_path: str, index_path: str) -> None:
     """Associate a stream-value sidecar with a log-table path;
     ``api.run_query(spark, table_path, query)`` prunes through it
     automatically (composes with a registered bloom index)."""
-    from victorialogs_spark.index.bloom import _norm_path
+    from victorialogs_spark.index.bloom import register_sidecar
 
-    _STREAM_REGISTRY[_norm_path(table_path)] = index_path
-
-
-def prune_files(
-    spark: SparkSession,
-    table_path: str,
-    index_path: str,
-    query: str,
-    files: list[str],
-) -> list[str]:
-    """Filter a file listing through the sidecar for ``query``. Unindexed
-    files always survive; returns ``files`` unchanged when the query has
-    no prunable stream constraint."""
-    constraints = stream_constraints_of_query(query)
-    if not constraints:
-        return files
-    indexed, cands = stream_candidate_files(spark, index_path, constraints)
-    return [f for f in files if f not in indexed or f in cands]
+    register_sidecar(table_path, "streams", index_path)

@@ -179,6 +179,37 @@ def detect_value_types(df: DataFrame) -> dict[str, str]:
     return out
 
 
+def write_clustered(
+    df: DataFrame, path: str, n_files: int, mode: str
+) -> None:
+    """Write ``df`` to ``path`` as ``n_files`` zstd parquet files with
+    rows clustered ``(_stream_id, _time)`` and a parquet bloom filter on
+    ``_stream_id``: the one implementation of the compacted-file layout
+    the stream sidecar (index/streams.py) prunes through, shared by
+    :func:`compact_day` and the HTTP server's day compaction."""
+    sort_cols = [c for c in ("_stream_id", "_time") if c in df.columns]
+    if sort_cols:
+        # hash-partition on the FIRST cluster key (stream id when
+        # present): each output file holds a SUBSET of streams, not a
+        # round-robin slice of all of them — a round-robin repartition
+        # put every stream in every file, so the per-file stream-value
+        # sidecar could never prune a compacted day (60/60 files
+        # survived a single-stream filter). One hot stream skewing a
+        # file is the documented trade — the reference's parts have the
+        # same shape (a stream's blocks concentrate in few parts).
+        out = df.repartition(
+            n_files, qcol(sort_cols[0])
+        ).sortWithinPartitions(*sort_cols)
+    else:
+        out = df.coalesce(n_files)
+    writer = out.write.mode(mode).option("compression", "zstd")
+    if "_stream_id" in df.columns:
+        writer = writer.option(
+            "parquet.bloom.filter.enabled#_stream_id", "true"
+        )
+    writer.parquet(path)
+
+
 def compact_day(
     spark: SparkSession, table_dir: str, day: str, target_files: int = 1,
     type_columns: bool = False,
@@ -191,10 +222,11 @@ def compact_day(
     Rows are clustered ``(_stream_id, _time)`` within each output file —
     the reference's block layout (every block holds ONE stream's rows in
     time order, block.go:15-24), re-expressed as parquet row-group
-    locality: stream filters skip row groups via column min/max stats and
-    the `_stream_id` bloom filter written below, and `_time` ranges prune
-    within a stream. At 100 TB this clustering is what keeps a
-    `{app="x"} _time:5m` query from touching every row group of the day.
+    locality (:func:`write_clustered`): stream filters skip row groups
+    via column min/max stats and the `_stream_id` bloom filter, and
+    `_time` ranges prune within a stream. At 100 TB this clustering is
+    what keeps a `{app="x"} _time:5m` query from touching every row
+    group of the day.
 
     type_columns=True additionally re-encodes uniformly-numeric string
     columns typed (values_encoder.go:109-127 parity). IMPORTANT: typing
@@ -236,28 +268,7 @@ def compact_day(
                 ),
             )
     tmp = str(part) + ".compact"
-    sort_cols = [c for c in ("_stream_id", "_time") if c in df.columns]
-    if sort_cols:
-        # hash-partition on the FIRST cluster key (stream id when
-        # present): each output file holds a SUBSET of streams, not a
-        # round-robin slice of all of them — a round-robin repartition
-        # put every stream in every file, so the per-file stream-value
-        # sidecar (index/streams.py) could never prune a compacted day
-        # (round-7 layout bench caught it: 60/60 files survived a
-        # single-stream filter). One hot stream skewing a file is the
-        # documented trade — the reference's parts have the same shape
-        # (a stream's blocks concentrate in few parts).
-        out = df.repartition(
-            target_files, qcol(sort_cols[0])
-        ).sortWithinPartitions(*sort_cols)
-    else:
-        out = df.coalesce(target_files)
-    writer = out.write.mode("overwrite").option("compression", "zstd")
-    if "_stream_id" in df.columns:
-        writer = writer.option(
-            "parquet.bloom.filter.enabled#_stream_id", "true"
-        )
-    writer.parquet(tmp)
+    write_clustered(df, tmp, target_files, "overwrite")
     # swap without ever removing the live day dir: move the compacted
     # files IN under unique names, then delete exactly the snapshot.
     # Concurrent appends (files not in the snapshot) survive untouched,
