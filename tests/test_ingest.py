@@ -740,3 +740,147 @@ def test_log_rows_corpus(spark):
         if sorted(got) != sorted(want):
             failures.append(f"opts {o.get('ignoreFields')}: got {got} want {want}")
     assert not failures, "\n\n".join(failures[:3])
+
+
+NON_OBJECT_LINES = ["5", "null", "true", "[1]"]
+
+
+def test_non_object_json_line_is_malformed(spark, tmp_path):
+    """A JSON line that is valid JSON but not an object is a malformed
+    line: the batch and streaming paths drop it, the driver-side
+    /insert/jsonline parser rejects it with a ValueError that says so."""
+    from victorialogs_spark.schema import ingest_ndjson
+
+    lines = ['{"_msg": "a"}', *NON_OBJECT_LINES, '{"_msg": "b"}']
+    indir = tmp_path / "in"
+    indir.mkdir()
+    (indir / "a.ndjson").write_text("\n".join(lines) + "\n")
+    df = ingest_ndjson_distributed(spark, str(indir))
+    assert sorted(r["_msg"] for r in df.collect()) == ["a", "b"]
+
+    table = str(tmp_path / "table")
+    q = start_ndjson_ingest(spark, str(indir), table, str(tmp_path / "ckpt"))
+    q.awaitTermination(60)
+    assert q.exception() is None
+    got = spark.read.parquet(table).select("_msg").collect()
+    assert sorted(r["_msg"] for r in got) == ["a", "b"]
+
+    for bad in NON_OBJECT_LINES:
+        with pytest.raises(ValueError, match="must be an object"):
+            ingest_ndjson(spark, ['{"_msg": "a"}', bad])
+
+
+def test_insert_jsonline_rejects_non_object_line(spark):
+    """/insert/jsonline answers a non-object line with a 400 that names
+    the problem, and stores nothing from the request."""
+    import urllib.error
+    import urllib.request
+
+    from victorialogs_spark.http_server import serve
+
+    srv = serve(spark)
+    try:
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{srv.port}/insert/jsonline",
+            data=b'{"_msg": "a"}\n5\n', method="POST",
+        )
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(req)
+        assert err.value.code == 400
+        assert "must be an object" in err.value.read().decode()
+    finally:
+        srv.stop()
+
+
+def test_streamless_ingest_lands_in_the_empty_stream(spark, tmp_path):
+    """Without stream fields every NDJSON path puts rows in the empty
+    stream "{}" with one shared _stream_id, like the driver-side parser
+    and every protocol parser."""
+    from victorialogs_spark.schema import ingest_ndjson
+
+    rows = [
+        {"_time": "2024-01-01T10:00:00Z", "_msg": "m1", "app": "w"},
+        {"_time": "2024-01-01T11:00:00Z", "_msg": "m2"},
+    ]
+    indir = tmp_path / "in"
+    indir.mkdir()
+    _write_ndjson(indir / "a.ndjson", rows)
+    drv = ingest_ndjson(spark, [json.dumps(r) for r in rows])
+    (want_id,) = {r["_stream_id"] for r in drv.collect()}
+    assert {r["_stream"] for r in drv.collect()} == {"{}"}
+
+    frames = {"distributed": ingest_ndjson_distributed(spark, str(indir))}
+    jvm_schema = "_time string, _msg string, app string"
+    for name, schema in (("dynamic", None), ("jvm", jvm_schema)):
+        table = str(tmp_path / f"table_{name}")
+        q = start_ndjson_ingest(
+            spark, str(indir), table, str(tmp_path / f"ckpt_{name}"),
+            json_schema=schema,
+        )
+        q.awaitTermination(60)
+        frames[name] = spark.read.parquet(table)
+    for name, df in frames.items():
+        got = {(r["_stream"], r["_stream_id"]) for r in df.collect()}
+        assert got == {("{}", want_id)}, name
+
+
+def test_driver_and_distributed_ndjson_parity(spark, tmp_path):
+    """schema.ingest_ndjson (driver-side, /insert/jsonline) and
+    ingest_ndjson_distributed run one row transform: every column they
+    share holds the same value for the same lines."""
+    from victorialogs_spark.schema import ingest_ndjson
+
+    rows = [
+        # first time candidate; nested objects, numbers, bools, nulls
+        {"ts": "2024-01-01T00:00:01Z", "message": "first", "app": "web",
+         "ctx": {"user": {"id": 7}, "ok": True}, "n": 29.27,
+         "big": 12345678901234, "flag": False, "nothing": None,
+         "tags": ["a", 1]},
+        # second time candidate (unix seconds); the first msg candidate
+        # is empty so the second one renames; ignored prefix dropped
+        {"time": "1704067202", "msg": "", "message": "second", "app": "db",
+         "debug.x": "drop me", "debug": {"y": 1}},
+        # '0' means no timestamp; no msg candidate → default _msg
+        {"ts": "0", "log": {"text": "x"}},
+        # no time at all
+        {"message": "no time", "app": "web"},
+        # the chosen time field AND a literal _time: the time field wins
+        {"ts": "2024-01-01T00:00:05Z", "_time": "1999-01-01T00:00:00Z",
+         "message": "both"},
+        # a literal _time and no candidate present: it is the row time
+        {"_time": "2024-01-01T00:00:06Z", "message": "literal only"},
+    ]
+    lines = [json.dumps(r) for r in rows]
+    p = tmp_path / "in.ndjson"
+    p.write_text("\n".join(lines) + "\n")
+    opts = dict(
+        time_field=["ts", "time"], msg_field=["msg", "message"],
+        stream_fields=["app"], ignore_fields=["debug.*"],
+        extra_fields={"env": "prod"},
+    )
+    now = spark.sql("select current_timestamp() as t").first()["t"]
+    drv_df = ingest_ndjson(spark, lines, **opts)
+    dist_df = ingest_ndjson_distributed(spark, str(p), **opts)
+    drv = {r["_msg"]: r.asDict() for r in drv_df.collect()}
+    dist = {r["_msg"]: r.asDict() for r in dist_df.collect()}
+    later = spark.sql("select current_timestamp() as t").first()["t"]
+
+    assert set(drv) == set(dist) and len(drv) == len(rows)
+    assert set(dist_df.columns) == set(drv_df.columns) | {"_other"}
+    # nothing spills: a literal _time is consumed, never kept aside
+    assert all(r["_other"] == {} for r in dist.values())
+    now_rows = {"no time", next(m for m in drv if m.startswith("missing"))}
+    for msg, d in drv.items():
+        got = dict(dist[msg])
+        got.pop("_other")
+        if msg in now_rows:  # ingest-time now(), taken once per query
+            assert now <= d.pop("_time") <= later
+            assert now <= got.pop("_time") <= later
+        assert got == d, msg
+    assert drv["first"]["ctx.user.id"] == "7"
+    assert drv["first"]["tags"] == '["a",1]'
+    assert drv["first"]["flag"] == "false" and drv["first"]["n"] == "29.27"
+    assert "debug.x" not in drv["second"] and "debug.y" not in drv["second"]
+    assert drv["second"]["env"] == "prod"
+    assert drv["both"]["_time"] == dt.datetime(2024, 1, 1, 0, 0, 5)
+    assert drv["literal only"]["_time"] == dt.datetime(2024, 1, 1, 0, 0, 6)

@@ -36,12 +36,11 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from victorialogs_spark.schema import load_table, with_stream_id
+    from victorialogs_spark.schema import load_table
     from victorialogs_spark.session import get_spark
     from victorialogs_spark.sources.ndjson import (
+        finish_parsed,
         parse_ndjson_lines,
-        promote_columns,
-        with_event_time,
     )
 
     spark = get_spark("ingest-bench")
@@ -91,12 +90,11 @@ def main() -> int:
 
         def run_pandas():
             lines = spark.read.text(corpus).repartition(parallelism)
-            out = with_event_time(parse_ndjson_lines(lines))
-            out = promote_columns(
-                out,
+            return finish_parsed(
+                parse_ndjson_lines(lines),
+                ["event_type"],
                 ["_msg", "event_id", "event_type", "user_id", "value", "props"],
             )
-            return with_stream_id(out, ["event_type"])
 
         def run_jvm():
             # schema inference scan INCLUDED in the timing (the honest

@@ -1072,20 +1072,15 @@ class _Handler(BaseHTTPRequestHandler):
         }
         if path == "/select/logsql/query":
             limit = int(self._get(params, "limit", "0"))
-            # the UNBOUNDED tenant frame: the endpoint builders apply
-            # start/end themselves (tenant filtering must still apply)
-            base = st.df()
-            if "tenant" in base.columns:
-                from victorialogs_spark.schema import for_tenant
-
-                base = for_tenant(base, *self._tenant()).drop("tenant")
             from victorialogs_spark.logsql.parser import parse_query
 
             if limit > 0 and ep.can_return_last_n(parse_query(q, ts)):
                 # limit on a plain query means "the NEWEST N rows,
                 # ascending" (reference getLastNQueryResults), not the
-                # first N the scan happens to produce
-                out = ep.query_last_n(spark, base, q, limit, **common)
+                # first N the scan happens to produce; df is the
+                # unbounded tenant frame — the endpoint builders apply
+                # start/end themselves
+                out = ep.query_last_n(spark, df, q, limit, **common)
                 lines = (
                     json.dumps(
                         ep.row_to_wire_dict(r), separators=(",", ":")
@@ -1094,7 +1089,7 @@ class _Handler(BaseHTTPRequestHandler):
                 )
                 limit = 0  # already applied
             else:
-                lines = ep.query_ndjson(spark, base, q, **common)
+                lines = ep.query_ndjson(spark, df, q, **common)
             # pull the first line BEFORE sending headers: query_ndjson is
             # a generator, so parse/plan/first-batch errors fire here and
             # surface as a clean 400 instead of corrupting a 200 stream

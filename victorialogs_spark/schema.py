@@ -16,10 +16,12 @@ from typing import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from victorialogs_spark.functions.natural import unix_auto_timestamp
-from victorialogs_spark.functions.casts import _try_cast
-
 RESERVED = ("_time", "_msg", "_stream", "_stream_id", "_day")
+
+DEFAULT_MSG = (
+    "missing _msg field; see "
+    "https://docs.victoriametrics.com/victorialogs/keyconcepts/#message-field"
+)
 
 
 def normalize_log_df(
@@ -167,97 +169,50 @@ def ingest_ndjson(
     stream_fields: list[str] | None = None,
     ignore_fields: list[str] | None = None,
     extra_fields: dict[str, str] | None = None,
-    default_msg_value: str = "missing _msg field; see https://docs.victoriametrics.com/victorialogs/keyconcepts/#message-field",
+    default_msg_value: str = DEFAULT_MSG,
     decolorize_fields: list[str] | None = None,
 ) -> DataFrame:
     """NDJSON → log DataFrame applying the reference's ingest transforms
     (_time_field/_msg_field/_stream_fields/ignore_fields/extra_fields,
-    app/vlinsert/insertutil/common_params.go:32-100).
-
-    Scale note: driver-side test helper only. Bulk ingest is
-    sources/ndjson.py (mapInPandas, fully distributed) and
-    streaming/ingest.py (Structured Streaming micro-batches).
+    app/vlinsert/insertutil/common_params.go:32-100) — the server's
+    /insert/jsonline path. Lines are parsed on the driver with the shared
+    row transform (sources/ndjson.ndjson_row) into one wide frame:
+    ``_time``, then every key seen, sorted; no ``_other`` spill map. A
+    line that is not a JSON object raises ValueError. For files too big
+    for the driver use sources/ndjson.ingest_ndjson_distributed, or
+    streaming/ingest.py for a watched directory.
     """
-    if isinstance(path_or_lines, str):
-        lines_df = spark.read.text(path_or_lines)
-        lines = [r.value for r in lines_df.collect()]
-    else:
-        lines = list(path_or_lines)
-    rows: list[dict[str, str]] = []
-    keys: set[str] = set()
-    for line in lines:
-        line = line.strip()
-        if not line:
-            continue
-        flat = flatten_json(json.loads(line))
-        if ignore_fields:
-            # prefix FILTERS, like every common-args field list
-            # (log_rows.go fieldsFilter; r15 log-rows corpus)
-            from victorialogs_spark.functions.prefixfilter import (
-                match_filters,
-            )
-
-            flat = {
-                k: v for k, v in flat.items()
-                if not match_filters([f or "_msg" for f in ignore_fields], k)
-            }
-        if decolorize_fields:
-            from victorialogs_spark.functions.prefixfilter import (
-                match_filters,
-            )
-            from victorialogs_spark.functions.text import (
-                drop_color_sequences,
-            )
-
-            deco = [f or "_msg" for f in decolorize_fields]
-            for k in list(flat):
-                if match_filters(deco, k):
-                    flat[k] = drop_color_sequences(flat[k])
-        if extra_fields:
-            flat.update(extra_fields)
-        # _time_field / _msg_field are CANDIDATE LISTS: the first
-        # PRESENT time field is consumed (ExtractTimestampFromFields),
-        # the first NON-EMPTY msg field renames to _msg (RenameField) —
-        # apptest key_concepts corpus (r15)
-        tfs = [time_field] if isinstance(time_field, str) else list(time_field)
-        for tf in tfs:
-            if tf in flat:
-                if tf != "_time":
-                    flat["_time"] = flat.pop(tf)
-                break
-        mfs = [msg_field] if isinstance(msg_field, str) else list(msg_field)
-        for mf in mfs:
-            if flat.get(mf, "") != "":
-                if mf != "_msg":
-                    flat["_msg"] = flat.pop(mf)
-                break
-        if not flat.get("_msg"):
-            flat["_msg"] = default_msg_value
-        rows.append(flat)
-        keys.update(flat)
-    keys.discard("_time")
-    cols = ["_time"] + sorted(keys)
-    data = [tuple(r.get(c, "") for c in cols) for r in rows]
-    df = spark.createDataFrame(data, schema=", ".join(f"`{c}` string" for c in cols))
-    df = df.withColumn(
-        "_time",
-        F.coalesce(
-            # try_*: ANSI mode makes plain to_timestamp throw on unix-secs;
-            # numeric stamps auto-detect their unit (s/ms/µs/ns, the
-            # reference's TryParseUnixTimestamp boundaries — r15)
-            F.try_to_timestamp(F.col("_time")),
-            # '0' means "no timestamp" and takes now() like ''/'-'
-            # (insertutil parseTimestamp; r15 ingest-timestamp corpus)
-            unix_auto_timestamp(F.nullif(F.col("_time"), F.lit("0"))),
-            F.current_timestamp(),
-        ),
+    from victorialogs_spark.sources.ndjson import (
+        event_time,
+        finish_row,
+        ndjson_row,
     )
+
+    if isinstance(path_or_lines, str):
+        path_or_lines = [
+            r.value for r in spark.read.text(path_or_lines).collect()
+        ]
+    rows: list[tuple[str, dict[str, str]]] = []
+    keys: set[str] = set()
+    for line in path_or_lines:
+        flat = ndjson_row(
+            line, time_field, msg_field, ignore_fields, extra_fields,
+            decolorize_fields,
+        )
+        if flat is not None:
+            rows.append(finish_row(flat, default_msg_value))
+            keys.update(flat)
+    cols = sorted(keys)
+    data = [(t, *(flat.get(c, "") for c in cols)) for t, flat in rows]
+    df = spark.createDataFrame(
+        data, schema=", ".join(f"`{c}` string" for c in ["_time", *cols])
+    )
+    df = df.withColumn("_time", event_time(F.col("_time")))
     # _stream always exists — rows ingested without stream fields belong
     # to the empty stream "{}" (log_rows.go; r15 log-rows corpus)
-    df = with_stream_id(
-        df, [f for f in (stream_fields or []) if f in df.columns]
+    return with_stream_id(
+        df, [f for f in stream_fields or [] if f in df.columns]
     )
-    return df
 
 
 # columns stored as parquet TIMESTAMP(NANOS), which Spark's reader rejects

@@ -1,28 +1,42 @@
-"""Distributed NDJSON ingestion (the /insert/jsonline path at scale).
+"""The shared ingest row path, and distributed NDJSON ingestion.
 
-Unlike ``schema.ingest_ndjson`` (a driver-side test helper), this path never
-materializes rows on the driver: lines are read as a distributed text scan
-and parsed/flattened per-partition via Arrow-batched ``mapInPandas``
-(json_parser.go flattening semantics: nested keys dot-joined, arrays /
-numbers / bools kept as their JSON string representation).
+Every payload format ends in the same two shapes:
 
-The parsed stream carries a ``fields map<string,string>`` column; a sampled
-key-promotion step lifts frequent keys to top-level string columns (the
-"promoted columns + spill map" model from SURVEY.md §1.2).
+- a per-row flat dict of string fields that may carry a raw ``_time``
+  string — :func:`ndjson_row` builds it for one NDJSON line, and the
+  protocol parsers in sources/protocols.py build it for theirs;
+- a ``(_time_raw, fields map<string,string>)`` frame — :func:`parse_payloads`
+  runs a row parser over a frame of payloads on executors (Arrow-batched
+  ``mapInPandas``), finishing each row with :func:`finish_row`.
+
+:func:`finish_parsed` turns that frame into log rows: event time, a
+sampled key promotion to top-level string columns (the "promoted
+columns + spill map" model from SURVEY.md §1.2) and the stream id.
+
+``ingest_ndjson_distributed`` (NDJSON files at scale, never materialized
+on the driver) and streaming/ingest.start_ndjson_ingest run this path;
+``schema.ingest_ndjson`` (the server's /insert/jsonline) runs the same
+:func:`ndjson_row` / :func:`finish_row` in a driver-side loop.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterator
+from typing import Any, Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from victorialogs_spark.functions.natural import unix_auto_timestamp
 from pyspark.sql import types as T
 
-from victorialogs_spark.schema import flatten_json, with_stream_id
+from victorialogs_spark.functions.natural import unix_auto_timestamp
+from victorialogs_spark.functions.prefixfilter import match_filters
+from victorialogs_spark.functions.text import drop_color_sequences
+from victorialogs_spark.schema import (
+    DEFAULT_MSG,
+    attach_stream_id,
+    flatten_json,
+    with_stream_id,
+)
 
 PARSED_SCHEMA = T.StructType(
     [
@@ -31,13 +45,125 @@ PARSED_SCHEMA = T.StructType(
     ]
 )
 
-DEFAULT_MSG = (
-    "missing _msg field; see "
-    "https://docs.victoriametrics.com/victorialogs/keyconcepts/#message-field"
-)
-
 PROMOTE_SAMPLE_ROWS = 10_000
 MAX_PROMOTED_COLS = 2000  # mirrors the reference's per-block column cap
+
+
+def ndjson_row(
+    line: str,
+    time_field: str | list[str] = "_time",
+    msg_field: str | list[str] = "_msg",
+    ignore_fields: list[str] | None = None,
+    extra_fields: dict[str, str] | None = None,
+    decolorize_fields: list[str] | None = None,
+) -> dict[str, str] | None:
+    """One NDJSON line → its flat fields, None for a blank line. Applies
+    the reference's ingest transforms (_time_field/_msg_field/
+    ignore_fields/extra_fields/decolorize_fields,
+    insertutil/common_params.go:32-100): json_parser.go flattening
+    (nested keys dot-joined, arrays/numbers/bools kept as their JSON
+    text); ignore/decolorize names are prefix FILTERS ('foo.*' drops
+    every foo.-prefixed field) and extra fields re-add after the drop
+    (log_rows.go via the r15 log-rows corpus); '' in those lists names
+    _msg. _time_field/_msg_field are CANDIDATE LISTS: the first PRESENT
+    time field becomes ``_time`` (ExtractTimestampFromFields), the first
+    NON-EMPTY msg field renames to ``_msg`` (RenameField) — apptest
+    key_concepts corpus (r15). Raises ValueError on a line that is not a
+    JSON object."""
+    line = line.strip()
+    if not line:
+        return None
+    obj = json.loads(line)
+    if not isinstance(obj, dict):
+        raise ValueError(f"JSON log line must be an object, got {line[:64]!r}")
+    flat = flatten_json(obj)
+    if ignore_fields:
+        ig = [f or "_msg" for f in ignore_fields]
+        flat = {k: v for k, v in flat.items() if not match_filters(ig, k)}
+    if decolorize_fields:
+        deco = [f or "_msg" for f in decolorize_fields]
+        for k in flat:
+            if match_filters(deco, k):
+                flat[k] = drop_color_sequences(flat[k])
+    if extra_fields:
+        flat.update(extra_fields)
+    for tf in [time_field] if isinstance(time_field, str) else time_field:
+        if tf in flat:
+            flat["_time"] = flat.pop(tf)
+            break
+    for mf in [msg_field] if isinstance(msg_field, str) else msg_field:
+        if flat.get(mf, "") != "":
+            flat["_msg"] = flat.pop(mf)
+            break
+    return flat
+
+
+def finish_row(
+    flat: dict[str, str], default_msg: str = DEFAULT_MSG
+) -> tuple[str, dict[str, str]]:
+    """A parsed row → (raw ``_time`` string, fields): ``_time`` is popped
+    ('' when absent) and a row without a non-empty ``_msg`` gets the
+    default message."""
+    t = flat.pop("_time", "")
+    if not flat.get("_msg"):
+        flat["_msg"] = default_msg
+    return t, flat
+
+
+def payload_frame(
+    spark: SparkSession, payloads, binary: bool = False, wholetext: bool = False
+) -> DataFrame:
+    """A payload source → the one-column frame :func:`parse_payloads`
+    reads: a path/glob (text lines, whole files with ``wholetext``, or
+    binaryFile ``content`` with ``binary``), a DataFrame (its ``value``
+    or ``content`` column), or a list of ``bytes`` payloads."""
+    col = "content" if binary else "value"
+    if isinstance(payloads, str):
+        if binary:
+            return spark.read.format("binaryFile").load(payloads).select(col)
+        return spark.read.text(payloads, wholetext=wholetext)
+    if isinstance(payloads, DataFrame):
+        return payloads.select(col)
+    return spark.createDataFrame(
+        [(bytearray(p),) for p in payloads], "content binary"
+    )
+
+
+def parse_payloads(
+    frame: DataFrame,
+    parse: Callable[[Any], list[dict]],
+    default_msg: str = DEFAULT_MSG,
+) -> DataFrame:
+    """Payloads → (_time_raw, fields) rows on executors, in Arrow
+    batches. ``frame`` holds a ``value`` text column or a binary
+    ``content`` column; ``parse`` turns one payload into parsed rows
+    (:func:`finish_row` completes each). A payload whose parse raises is
+    dropped whole: malformed input never fails the ingest."""
+    col = "content" if "content" in frame.columns else "value"
+
+    def _emit(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            times, fields = [], []
+            for payload in pdf[col]:
+                try:
+                    rows = parse(payload)
+                except Exception:
+                    continue
+                for flat in rows:
+                    t, flat = finish_row(flat, default_msg)
+                    times.append(t)
+                    fields.append(flat)
+            if times:  # empty frames infer float64 dtype, breaking Arrow maps
+                yield pd.DataFrame(
+                    {
+                        "_time_raw": pd.Series(times, dtype="object"),
+                        "fields": pd.Series(fields, dtype="object"),
+                    }
+                )
+
+    return frame.mapInPandas(_emit, PARSED_SCHEMA)
 
 
 def parse_ndjson_lines(
@@ -49,94 +175,39 @@ def parse_ndjson_lines(
     default_msg_value: str = DEFAULT_MSG,
     decolorize_fields: list[str] | None = None,
 ) -> DataFrame:
-    """text lines (column ``value``) → (_time_raw, fields map) rows.
-    Executes on executors in Arrow batches; malformed lines are dropped.
-    Applies the reference's ingest transforms (_time_field/_msg_field/
-    ignore_fields/extra_fields/decolorize_fields,
-    insertutil/common_params.go:32-100; ignore/decolorize names are
-    prefix FILTERS — 'foo.*' drops every foo.-prefixed field, and extra
-    fields re-add after the drop: log_rows.go via the r15 log-rows
-    corpus)."""
-    # '' in a field list names the canonical _msg field (log_rows.go)
-    ig = [f or "_msg" for f in ignore_fields or []]
-    ex = dict(extra_fields or {})
-    deco = [f or "_msg" for f in decolorize_fields or []]
-    tfs = [time_field] if isinstance(time_field, str) else list(time_field)
-    mfs = [msg_field] if isinstance(msg_field, str) else list(msg_field)
+    """text lines (column ``value``) → (_time_raw, fields map) rows via
+    :func:`ndjson_row`; malformed and non-object lines are dropped."""
 
-    def _parse(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def one(line: str) -> list[dict]:
+        flat = ndjson_row(
+            line, time_field, msg_field, ignore_fields, extra_fields,
+            decolorize_fields,
+        )
+        return [] if flat is None else [flat]
 
-        from victorialogs_spark.functions.prefixfilter import match_filters
+    return parse_payloads(lines, one, default_msg_value)
 
 
-        for pdf in batches:
-            times, fields = [], []
-            for line in pdf["value"]:
-                line = (line or "").strip()
-                if not line:
-                    continue
-                try:
-                    flat = flatten_json(json.loads(line))
-                except (json.JSONDecodeError, AttributeError):
-                    continue
-                if ig:
-                    flat = {
-                        k: v
-                        for k, v in flat.items()
-                        if not match_filters(ig, k)
-                    }
-                if deco:
-                    from victorialogs_spark.functions.text import (
-                        drop_color_sequences,
-                    )
-
-                    for k in list(flat):
-                        if match_filters(deco, k):
-                            flat[k] = drop_color_sequences(flat[k])
-                flat.update(ex)
-                # first-present time candidate / first-non-empty msg
-                # candidate (ExtractTimestampFromFields + RenameField)
-                t = ""
-                for tf in tfs:
-                    if tf in flat:
-                        t = flat.pop(tf)
-                        break
-                for mf in mfs:
-                    if flat.get(mf, "") != "":
-                        if mf != "_msg":
-                            flat["_msg"] = flat.pop(mf)
-                        break
-                if not flat.get("_msg"):
-                    flat["_msg"] = default_msg_value
-                times.append(t)
-                fields.append(flat)
-            if times:  # empty frames infer float64 dtype, breaking Arrow maps
-                yield pd.DataFrame(
-                    {
-                        "_time_raw": pd.Series(times, dtype="object"),
-                        "fields": pd.Series(fields, dtype="object"),
-                    }
-                )
-
-    return lines.mapInPandas(_parse, PARSED_SCHEMA)
-
-
-def with_event_time(parsed: DataFrame) -> DataFrame:
-    """_time_raw (RFC3339 / unix seconds / empty) → _time timestamp."""
-    from victorialogs_spark.functions.casts import _try_cast
-
-    t = F.coalesce(
+def event_time(raw: Column) -> Column:
+    """A raw ``_time`` string (RFC3339 / unix stamp / empty) → timestamp,
+    ingest-time now() when it is missing or unparseable."""
+    return F.coalesce(
         # try_*: ANSI mode makes plain to_timestamp THROW on e.g. unix-secs;
         # numeric stamps auto-detect their unit (s/ms/µs/ns, the
         # reference's TryParseUnixTimestamp boundaries — r15)
-        F.try_to_timestamp(F.col("_time_raw")),
+        F.try_to_timestamp(raw),
         # '0' means "no timestamp" and takes now() like ''/'-'
         # (insertutil parseTimestamp; r15 ingest-timestamp corpus)
-        unix_auto_timestamp(F.nullif(F.col("_time_raw"), F.lit("0"))),
+        unix_auto_timestamp(F.nullif(raw, F.lit("0"))),
         F.current_timestamp(),
     )
-    return parsed.withColumn("_time", t).drop("_time_raw")
+
+
+def with_event_time(parsed: DataFrame) -> DataFrame:
+    """_time_raw → _time timestamp (:func:`event_time`)."""
+    return parsed.withColumn("_time", event_time(F.col("_time_raw"))).drop(
+        "_time_raw"
+    )
 
 
 def promote_columns(
@@ -169,6 +240,25 @@ def promote_columns(
     )
     cols.append(spill.alias("_other"))
     return parsed.select(*cols)
+
+
+def finish_parsed(
+    parsed: DataFrame,
+    stream_fields: list[str] | None,
+    promote_keys: list[str] | None,
+) -> DataFrame:
+    """(_time_raw, fields) rows → log rows: event time, column promotion,
+    stream id. ``stream_fields=None`` keeps a parser-computed per-row
+    ``_stream`` (loki labels, OTLP resource attributes) and only hashes
+    it; otherwise ``_stream`` is built from the listed fields."""
+    out = promote_columns(with_event_time(parsed), promote_keys)
+    if stream_fields is None and "_stream" in out.columns:
+        return attach_stream_id(out)
+    # every row belongs to a stream — without stream fields it is the
+    # empty one "{}" (log_rows.go; r15 key-concepts corpus)
+    return with_stream_id(
+        out, [f for f in stream_fields or [] if f in out.columns]
+    )
 
 
 def _flatten_schema_cols(
@@ -220,6 +310,10 @@ def ingest_ndjson_jvm(
       like ``["a", 1]`` round-trips as ``["a","1"]`` (all-string);
     - number normalization is the JVM's, not CPython's (identical for
       typical values; differs in exotic exponent formatting).
+    Two more come from this twin keeping its own tail: a literal
+    ``_time`` on a row without ``time_field`` spills to ``_other``
+    instead of becoming the row time, and without ``stream_fields`` no
+    ``_stream``/``_stream_id`` columns are added.
 
     Schema inference is one extra scan of the input; at 100 TB either
     pass a representative sample's schema or accept the scan — both
@@ -339,13 +433,8 @@ def ingest_ndjson_distributed(
     promote_keys: list[str] | None = None,
 ) -> DataFrame:
     """NDJSON file(s)/dir → log DataFrame, fully distributed."""
-    lines = spark.read.text(path)
-    parsed = with_event_time(
-        parse_ndjson_lines(
-            lines, time_field, msg_field, ignore_fields, extra_fields
-        )
+    parsed = parse_ndjson_lines(
+        spark.read.text(path), time_field, msg_field, ignore_fields,
+        extra_fields,
     )
-    out = promote_columns(parsed, promote_keys)
-    if stream_fields:
-        out = with_stream_id(out, [f for f in stream_fields if f in out.columns])
-    return out
+    return finish_parsed(parsed, stream_fields or [], promote_keys)

@@ -1,8 +1,9 @@
 """Ingestion-protocol parsers: the payload formats of the reference's
 /insert/* endpoints (app/vlinsert/*), re-expressed as distributed
-DataFrame transforms. Each parser turns raw payload text into the common
-``(_time_raw, fields map<string,string>)`` shape from sources.ndjson, so
-column promotion / stream-id assignment / day partitioning are shared.
+DataFrame transforms. Each format contributes only its payload → rows
+parser; the shared row path in sources.ndjson does the rest (payload
+input, the Arrow batch emitter, the row finisher and the
+event-time / column-promotion / stream-id tail).
 
 Covered formats (each a mapInPandas batch parser — executors only):
 - Elasticsearch bulk NDJSON  (app/vlinsert/elasticsearch)
@@ -13,55 +14,26 @@ Covered formats (each a mapInPandas batch parser — executors only):
                               __REALTIME_TIMESTAMP µs)
 - Datadog logs JSON          (app/vlinsert/datadog)
 
-The HTTP layer itself is out of scope (this engine is a library); these
-parsers accept the payload bodies as text files / DataFrames of lines.
+The parsers accept payloads as text files / DataFrames of lines (binary
+files, ``content`` DataFrames or lists of ``bytes`` for the protobuf
+formats); the server's /insert/* handlers (http_server.py) feed them the
+request bodies.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from victorialogs_spark.schema import flatten_json, with_stream_id
+from victorialogs_spark.schema import flatten_json
 from victorialogs_spark.sources.ndjson import (
-    DEFAULT_MSG,
     PARSED_SCHEMA,
-    promote_columns,
-    with_event_time,
+    finish_parsed,
+    finish_row,
+    parse_payloads,
+    payload_frame,
 )
-
-
-def _batch_parser(parse_line: Callable[[str], list[dict]]):
-    """Wrap a line → [flat-dict] parser into a mapInPandas function.
-    Each produced dict may carry ``_time`` (string) + string fields."""
-
-    def _parse(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            times, fields = [], []
-            for line in pdf["value"]:
-                try:
-                    rows = parse_line(line or "")
-                except Exception:
-                    continue
-                for flat in rows:
-                    t = flat.pop("_time", "")
-                    if not flat.get("_msg"):
-                        flat["_msg"] = DEFAULT_MSG
-                    times.append(t)
-                    fields.append(flat)
-            if times:  # empty frames infer float64 dtype, breaking Arrow maps
-                yield pd.DataFrame(
-                    {
-                        "_time_raw": pd.Series(times, dtype="object"),
-                        "fields": pd.Series(fields, dtype="object"),
-                    }
-                )
-
-    return _parse
 
 
 def stream_label_str(labels: list[tuple[str, str]]) -> str:
@@ -71,26 +43,6 @@ def stream_label_str(labels: list[tuple[str, str]]) -> str:
     dropped (absent ≡ empty), same rendering as schema.with_stream_id."""
     parts = [f'{k}="{v}"' for k, v in sorted(dict(labels).items()) if v != ""]
     return "{" + ",".join(parts) + "}"
-
-
-def _finish(
-    parsed: DataFrame,
-    stream_fields: list[str] | None,
-    promote_keys: list[str] | None,
-) -> DataFrame:
-    out = promote_columns(with_event_time(parsed), promote_keys)
-    if "_stream" in out.columns:
-        # parser-computed per-row stream identity — just hash it
-        from victorialogs_spark.schema import attach_stream_id
-
-        out = attach_stream_id(out)
-    else:
-        # every row belongs to a stream — without stream fields it is
-        # the empty one "{}" (log_rows.go; r15 key-concepts corpus)
-        out = with_stream_id(
-            out, [f for f in (stream_fields or []) if f in out.columns]
-        )
-    return out
 
 
 # ------------------------------------------------------------ elasticsearch
@@ -131,13 +83,8 @@ def parse_elasticsearch_bulk(
             flat["_msg"] = flat.pop("message")
         return [flat]
 
-    lines = (
-        spark.read.text(path_or_lines)
-        if isinstance(path_or_lines, str)
-        else path_or_lines
-    )
-    parsed = lines.mapInPandas(_batch_parser(one), PARSED_SCHEMA)
-    return _finish(parsed, stream_fields, promote_keys)
+    parsed = parse_payloads(payload_frame(spark, path_or_lines), one)
+    return finish_parsed(parsed, stream_fields, promote_keys)
 
 
 def parse_es_timestamp_ns(s: str) -> int | None:
@@ -237,15 +184,9 @@ def parsed_rows_df(
     finished logs DataFrame. The HTTP layer uses this for protocols whose
     request-level semantics need stateful/strict parsing (ES bulk
     alternation) that a per-line distributed parser can't express."""
-    data = []
-    for flat in rows:
-        flat = dict(flat)
-        t = flat.pop("_time", "")
-        if not flat.get("_msg"):
-            flat["_msg"] = DEFAULT_MSG
-        data.append((t, flat))
+    data = [finish_row(dict(flat)) for flat in rows]
     parsed = spark.createDataFrame(data, PARSED_SCHEMA)
-    return _finish(parsed, stream_fields, promote_keys)
+    return finish_parsed(parsed, stream_fields, promote_keys)
 
 
 # ------------------------------------------------------- unix timestamps
@@ -498,15 +439,10 @@ def parse_loki_push(
             return []
         return loki_json_rows(line, msg_fields, parse_message)
 
-    lines = (
-        spark.read.text(path_or_lines)
-        if isinstance(path_or_lines, str)
-        else path_or_lines
-    )
-    parsed = lines.mapInPandas(_batch_parser(one), PARSED_SCHEMA)
+    parsed = parse_payloads(payload_frame(spark, path_or_lines), one)
     # loki stream labels: promote + use every label as a stream field is
     # caller-specific; default promotes sampled keys only
-    return _finish(parsed, None, promote_keys)
+    return finish_parsed(parsed, None, promote_keys)
 
 
 def loki_pb_rows(
@@ -552,44 +488,14 @@ def parse_loki_protobuf(
     executors via the dependency-free codecs in sources/loki_pb.py."""
     from victorialogs_spark.sources.loki_pb import snappy_decode
 
-    if isinstance(payloads, str):
-        bin_df = spark.read.format("binaryFile").load(payloads).select("content")
-    elif isinstance(payloads, DataFrame):
-        bin_df = payloads.select("content")
-    else:
-        bin_df = spark.createDataFrame(
-            [(bytearray(p),) for p in payloads], "content binary"
-        )
+    def one(payload) -> list[dict]:
+        raw = bytes(payload)
+        if snappy:
+            raw = snappy_decode(raw)
+        return loki_pb_rows(raw, msg_fields, parse_message)
 
-    def _parse(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            times, fields = [], []
-            for payload in pdf["content"]:
-                try:
-                    raw = bytes(payload)
-                    if snappy:
-                        raw = snappy_decode(raw)
-                    rows = loki_pb_rows(raw, msg_fields, parse_message)
-                except Exception:
-                    continue
-                for flat in rows:
-                    t = flat.pop("_time", "")
-                    if not flat.get("_msg"):
-                        flat["_msg"] = DEFAULT_MSG
-                    times.append(t)
-                    fields.append(flat)
-            if times:
-                yield pd.DataFrame(
-                    {
-                        "_time_raw": pd.Series(times, dtype="object"),
-                        "fields": pd.Series(fields, dtype="object"),
-                    }
-                )
-
-    parsed = bin_df.mapInPandas(_parse, PARSED_SCHEMA)
-    return _finish(parsed, None, promote_keys)
+    parsed = parse_payloads(payload_frame(spark, payloads, binary=True), one)
+    return finish_parsed(parsed, None, promote_keys)
 
 
 # --------------------------------------------------------------------- otlp
@@ -741,13 +647,8 @@ def parse_otlp_logs(
                     out.append(flat)
         return out
 
-    lines = (
-        spark.read.text(path_or_lines)
-        if isinstance(path_or_lines, str)
-        else path_or_lines
-    )
-    parsed = lines.mapInPandas(_batch_parser(one), PARSED_SCHEMA)
-    return _finish(parsed, None, promote_keys)
+    parsed = parse_payloads(payload_frame(spark, path_or_lines), one)
+    return finish_parsed(parsed, None, promote_keys)
 
 
 def parse_otlp_protobuf(
@@ -763,41 +664,11 @@ def parse_otlp_protobuf(
     executors via the dependency-free wire decoder (sources/otlp_pb.py)."""
     from victorialogs_spark.sources.otlp_pb import decode_logs_data
 
-    if isinstance(payloads, str):
-        bin_df = spark.read.format("binaryFile").load(payloads).select("content")
-    elif isinstance(payloads, DataFrame):
-        bin_df = payloads.select("content")
-    else:
-        bin_df = spark.createDataFrame(
-            [(bytearray(p),) for p in payloads], "content binary"
-        )
-
-    def _parse(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            times, fields = [], []
-            for payload in pdf["content"]:
-                try:
-                    rows = decode_logs_data(bytes(payload))
-                except Exception:
-                    continue
-                for flat in rows:
-                    t = flat.pop("_time", "")
-                    if not flat.get("_msg"):
-                        flat["_msg"] = DEFAULT_MSG
-                    times.append(t)
-                    fields.append(flat)
-            if times:
-                yield pd.DataFrame(
-                    {
-                        "_time_raw": pd.Series(times, dtype="object"),
-                        "fields": pd.Series(fields, dtype="object"),
-                    }
-                )
-
-    parsed = bin_df.mapInPandas(_parse, PARSED_SCHEMA)
-    return _finish(parsed, None, promote_keys)
+    parsed = parse_payloads(
+        payload_frame(spark, payloads, binary=True),
+        lambda payload: decode_logs_data(bytes(payload)),
+    )
+    return finish_parsed(parsed, None, promote_keys)
 
 
 # ------------------------------------------------------------------- syslog
@@ -835,15 +706,12 @@ def parse_syslog_lines(
         msg = flat.pop("message", "")
         return [{"_time": ts, "_msg": msg, **flat}]
 
-    lines = (
-        spark.read.text(path_or_lines)
-        if isinstance(path_or_lines, str)
-        else path_or_lines
-    )
-    parsed = lines.mapInPandas(_batch_parser(one), PARSED_SCHEMA)
+    parsed = parse_payloads(payload_frame(spark, path_or_lines), one)
     # syslog's default stream fields
     # (insertutil.GetCommonParamsForSyslog:125)
-    return _finish(parsed, ["hostname", "app_name", "proc_id"], promote_keys)
+    return finish_parsed(
+        parsed, ["hostname", "app_name", "proc_id"], promote_keys
+    )
 
 
 # ----------------------------------------------------------------- journald
@@ -859,15 +727,11 @@ def parse_journald_export(
     (app/vlinsert/journald/journald.go:37,66). Reads whole files (entries
     span lines) — one file per task, fine for export-style drops. Also
     accepts a one-column DataFrame of whole export blobs (HTTP bodies)."""
-    rdd_like = (
-        spark.read.text(path_or_blobs, wholetext=True)
-        if isinstance(path_or_blobs, str)
-        else path_or_blobs
+    parsed = parse_payloads(
+        payload_frame(spark, path_or_blobs, wholetext=True), journald_entries
     )
-
-    parsed = rdd_like.mapInPandas(_batch_parser(journald_entries), PARSED_SCHEMA)
     # journald's default stream fields (journald.go defaultStreamFields)
-    return _finish(
+    return finish_parsed(
         parsed, ["_MACHINE_ID", "_HOSTNAME", "_SYSTEMD_UNIT"], promote_keys
     )
 
@@ -1062,10 +926,5 @@ def parse_datadog_logs(
             return []
         return datadog_rows(line)
 
-    lines = (
-        spark.read.text(path_or_lines)
-        if isinstance(path_or_lines, str)
-        else path_or_lines
-    )
-    parsed = lines.mapInPandas(_batch_parser(one), PARSED_SCHEMA)
-    return _finish(parsed, None, promote_keys)
+    parsed = parse_payloads(payload_frame(spark, path_or_lines), one)
+    return finish_parsed(parsed, None, promote_keys)

@@ -23,11 +23,7 @@ from pyspark.sql import functions as F
 
 from victorialogs_spark.functions.natural import qcol
 from victorialogs_spark.schema import with_day_partition, with_stream_id
-from victorialogs_spark.sources.ndjson import (
-    parse_ndjson_lines,
-    promote_columns,
-    with_event_time,
-)
+from victorialogs_spark.sources.ndjson import finish_parsed, parse_ndjson_lines
 
 
 def start_ndjson_ingest(
@@ -62,14 +58,14 @@ def start_ndjson_ingest(
             out = parse_json_lines_jvm(
                 batch_df, json_schema, time_field, msg_field
             )
-        else:
-            parsed = with_event_time(
-                parse_ndjson_lines(batch_df, time_field, msg_field)
-            )
-            out = promote_columns(parsed, promote_keys)
-        if stream_fields:
             out = with_stream_id(
-                out, [f for f in stream_fields if f in out.columns]
+                out, [f for f in stream_fields or [] if f in out.columns]
+            )
+        else:
+            out = finish_parsed(
+                parse_ndjson_lines(batch_df, time_field, msg_field),
+                stream_fields or [],
+                promote_keys,
             )
         append_day_partitioned(out, table_dir)
 
