@@ -56,6 +56,40 @@ def test_stats_query_range(spark, logs):
     assert len(rows) == 6  # 2 apps × 3 minute buckets
 
 
+def test_stats_values_render_go_style(spark):
+    """stats_query(_range) render floating metrics like Go's FormatFloat
+    'f', -1: plain decimal with every digit of the shortest repr at the
+    magnitudes Spark's string cast writes in E-notation (below 1e-3,
+    from 1e7 up), and integral values without '.0'."""
+    from decimal import Decimal
+
+    rows = [
+        (dt.datetime(2024, 1, 1, 0, 0, i, tzinfo=UTC), "m", v)
+        for i, v in enumerate(["0.0001", "0.0002", "0.0004", "12345678.5", "3"])
+    ]
+    df = spark.createDataFrame(rows, "_time timestamp, _msg string, v string")
+    q = (
+        "v:in(0.0001, 0.0002, 0.0004) | stats avg(v) as small, count() as c"
+    )
+    [raw] = run_query(spark, df, q).collect()
+    small = format(Decimal(repr(raw["small"])), "f")
+    assert len(small) > 20  # more fraction digits than decimal(38,18) kept
+    want = {("small", small), ("c", "3")}
+    got = {(r["name"], r["value"]) for r in ep.stats_query(spark, df, q).collect()}
+    assert got == want
+    got = {
+        (r["name"], r["value"])
+        for r in ep.stats_query_range(spark, df, q, step="1h").collect()
+    }
+    assert got == want
+    for q, want in (
+        ("* | stats sum(v) as big", {("big", "12345681.5007")}),
+        ("v:3 | stats sum(v) as three", {("three", "3")}),
+    ):
+        got = {(r["name"], r["value"]) for r in ep.stats_query(spark, df, q).collect()}
+        assert got == want, q
+
+
 def test_stream_metadata(spark, logs):
     st = {r["_stream"]: r["hits"] for r in ep.streams(spark, logs).collect()}
     assert st == {'{app="web"}': 3, '{app="db"}': 3}

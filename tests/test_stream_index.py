@@ -373,23 +373,29 @@ def _register_both(spark, tmp_path):
 
 
 def test_run_query_opens_table_once(spark, tmp_path):
-    """Planning a query on a path with both sidecars registered runs ONE
-    Spark job: the table's schema inference. The sidecar probes run
-    driver-side, the pruned reader and the unpruned subquery source
-    reuse that schema."""
-    table, _, _ = _register_both(spark, tmp_path)
+    """The first open of a table runs ONE Spark job, its schema
+    inference; every later open of the unchanged table runs none. The
+    sidecar probes run driver-side, and the pruned reader and the
+    unpruned subquery source come from the table's snapshot."""
     sc = spark.sparkContext
     listener_bus = sc._jsc.sc().listenerBus()
-    for i, q in enumerate(["web", '{app="web"} message']):
-        group = f"open-once-{i}"
+    queries = ["web", '{app="web"} message']
+
+    def jobs_to_plan(table, q, group):
         sc.setJobGroup(group, "plan only")
         try:
             out = run_query(spark, table, q)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         listener_bus.waitUntilEmpty()
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, q
         assert len(out.inputFiles()) == 1, q
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for i, first in enumerate(queries):
+        table, _, _ = _register_both(spark, tmp_path / str(i))
+        assert jobs_to_plan(table, first, f"open-once-{i}") == 1, first
+        for j, q in enumerate(queries * 2):
+            assert jobs_to_plan(table, q, f"open-once-{i}-{j}") == 0, q
 
 
 def test_missing_sidecar_means_no_pruning(spark, tmp_path):
@@ -407,3 +413,134 @@ def test_missing_sidecar_means_no_pruning(spark, tmp_path):
             got = sorted(tuple(r) for r in run_query(spark, table, q).collect())
             want = sorted(tuple(r) for r in run_query(spark, full, q).collect())
             assert got == want and len(got) == 4, (gone, q)
+
+
+# ---------------------------------------------------------------------------
+# the table snapshot is never served stale: every test below reads the
+# table once, changes it (or its sidecar) behind the engine's back, and
+# reads again
+# ---------------------------------------------------------------------------
+
+
+def _day_batch(spark, day, app, n):
+    from victorialogs_spark.schema import with_stream_id
+
+    rows = [
+        (dt.datetime(2024, 1, day, 0, 0, j, tzinfo=UTC), f"{app} message {j}", app)
+        for j in range(n)
+    ]
+    df = spark.createDataFrame(rows, "_time timestamp, _msg string, app string")
+    return with_stream_id(df, ["app"]).coalesce(1)
+
+
+def _count(spark, table, q="*"):
+    return run_query(spark, table, q + " | stats count() as n").collect()[0]["n"]
+
+
+def test_append_then_read_sees_new_rows(spark, tmp_path):
+    from victorialogs_spark.streaming.ingest import append_day_partitioned
+
+    table = str(tmp_path / "t")
+    append_day_partitioned(_day_batch(spark, 1, "web", 4), table)
+    assert _count(spark, table) == 4
+    append_day_partitioned(_day_batch(spark, 1, "db", 3), table)
+    append_day_partitioned(_day_batch(spark, 2, "web", 2), table)
+    assert _count(spark, table) == 9
+    assert _count(spark, table, "{app=db}") == 3
+
+
+def test_compact_then_read_sees_new_files(spark, tmp_path):
+    import glob
+    import os
+
+    from victorialogs_spark.index.bloom import open_log_table
+    from victorialogs_spark.streaming.ingest import (
+        append_day_partitioned,
+        compact_table,
+    )
+
+    table = str(tmp_path / "t")
+    for app in ("web", "db", "cache"):
+        append_day_partitioned(_day_batch(spark, 1, app, 4), table)
+
+    def rows():
+        return sorted(
+            (r["_time"], r["_msg"], r["app"])
+            for r in run_query(spark, table, "*").collect()
+        )
+
+    before = rows()
+    assert len(open_log_table(spark, table, "*").inputFiles()) == 3
+    compact_table(spark, table, target_files=1)
+    on_disk = {
+        "file://" + os.path.abspath(f)
+        for f in glob.glob(os.path.join(table, "_day=*", "*.parquet"))
+    }
+    assert len(on_disk) == 1
+    assert set(open_log_table(spark, table, "*").inputFiles()) == on_disk
+    assert rows() == before and len(before) == 12
+
+
+def test_rebuilt_sidecar_prunes_by_new_content(spark, tmp_path):
+    from victorialogs_spark.index.bloom import (
+        build_token_bloom_index,
+        open_log_table,
+        register_bloom_index,
+    )
+
+    table = str(tmp_path / "t")
+    bidx = str(tmp_path / "bidx")
+    _write_table(spark, table)
+    # a sidecar over app only: _msg words prune nothing through it
+    build_token_bloom_index(spark, table, bidx, fields=["app"])
+    register_bloom_index(table, bidx)
+    assert len(open_log_table(spark, table, "web").inputFiles()) == 3
+    build_token_bloom_index(spark, table, bidx)  # now over _msg
+    assert len(open_log_table(spark, table, "web").inputFiles()) == 1
+    assert _count(spark, table, "web") == 4
+
+
+def test_read_is_bound_to_the_calling_session(spark, tmp_path):
+    table = str(tmp_path / "t")
+    _write_table(spark, table)
+    assert run_query(spark, table, "web").sparkSession is spark
+    other = spark.newSession()
+    out = run_query(other, table, "web")
+    assert out.sparkSession is other
+    assert out.count() == 4
+
+
+def test_concurrent_reads_of_one_path(spark, tmp_path):
+    """8 threads read one path at once, right after the table changed
+    under a snapshot an earlier read built: every thread sees the new
+    rows."""
+    import sys
+    import threading
+
+    from victorialogs_spark.streaming.ingest import append_day_partitioned
+
+    table = str(tmp_path / "t")
+    append_day_partitioned(_day_batch(spark, 1, "web", 4), table)
+    assert _count(spark, table) == 4
+    append_day_partitioned(_day_batch(spark, 2, "db", 3), table)
+
+    n = 8
+    start = threading.Barrier(n)
+    got: list = [None] * n
+
+    def read(i):
+        start.wait(timeout=60)
+        got[i] = (_count(spark, table), _count(spark, table, "{app=db}"))
+
+    threads = [threading.Thread(target=read, args=(i,)) for i in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert got == [(7, 3)] * n

@@ -16,14 +16,16 @@ def run_query(
     end_ns: int | None = None,
 ) -> DataFrame:
     """Run a LogsQL query against a log DataFrame, or against a log-table
-    PATH. The path form opens the table once through
+    PATH. The path form opens the table through
     ``index.bloom.open_log_table``, which prunes input files through the
     sidecars registered for the path (``register_bloom_index``,
     ``register_stream_index``) before the scan starts (the reference
     probes its per-block token blooms on every word filter,
-    lib/logstorage/filter_phrase.go:85-122). Subqueries plan against an
-    unpruned reader of the same path that reuses the opened schema, so
-    no second schema inference runs.
+    lib/logstorage/filter_phrase.go:85-122). A local table is opened
+    once per table CHANGE, not once per query: until a file under it
+    changes, later queries reuse its schema, file list and pruned
+    readers and open it with no Spark job. Subqueries plan against the
+    unpruned reader of the same table (``subquery_source``).
 
     ``start_ns``/``end_ns`` are the API-level global time filter (the
     HTTP start/end args); subqueries inherit it unless they set
@@ -32,14 +34,14 @@ def run_query(
 
     source_df = None
     if isinstance(df, str):
-        from victorialogs_spark.index.bloom import open_log_table
+        from victorialogs_spark.index.bloom import open_log_table, subquery_source
 
         path = df
         df = open_log_table(spark, path, query)
         # subqueries / join / union / stream_context must plan against the
         # UNPRUNED table — the sidecar prune narrows only the outer scan,
         # never what other plan nodes can see
-        source_df = spark.read.schema(df.schema).parquet(path)
+        source_df = subquery_source(spark, path, df)
     q = parse_query(query, timestamp_ns)
     gt = None
     if start_ns is not None or end_ns is not None:

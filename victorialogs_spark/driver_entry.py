@@ -1119,9 +1119,9 @@ def _ep_hits_common(spark, sf_dir):
 
 @register(
     "ep_stats_rate_window",
-    "SELECT 'r' AS name, '{}' AS labels,"
-    f" CAST(COUNT(*) / (({_EPW_HI} - {_EPW_LO} + 1) / 1e9) AS VARCHAR) AS value"
-    f" FROM events WHERE epoch_ns(ts) BETWEEN {_EPW_LO} AND {_EPW_HI}",
+    "SELECT 'r' AS name, '{}' AS labels, "
+    + fmt(f"COUNT(*) / (({_EPW_HI} - {_EPW_LO} + 1) / 1e9)")
+    + f" AS value FROM events WHERE epoch_ns(ts) BETWEEN {_EPW_LO} AND {_EPW_HI}",
 )
 def _ep_stats_rate_window(spark, sf_dir):
     """rate() divides by the API start/end window (the reference folds
@@ -1140,7 +1140,7 @@ def _ep_stats_rate_window(spark, sf_dir):
     "ep_stats_query_multi",
     # pins the r15 single-scan melt: one aggregate, one vector row per
     # (metric function, group) — value strings for long/double metrics
-    # must match the wire cast exactly
+    # must match the wire format exactly (doubles Go-style, fmt)
     "WITH g AS (SELECT event_type, COUNT(*) AS c, "
     + dsum("value") + " AS sv, " + davg("value") + " AS av"
     " FROM events GROUP BY event_type)"
@@ -1148,9 +1148,9 @@ def _ep_stats_rate_window(spark, sf_dir):
     " '{\"event_type\":\"' || event_type || '\"}' AS labels,"
     " CAST(c AS VARCHAR) AS value FROM g"
     " UNION ALL SELECT 'sv',"
-    " '{\"event_type\":\"' || event_type || '\"}', CAST(sv AS VARCHAR) FROM g"
+    " '{\"event_type\":\"' || event_type || '\"}', " + fmt("sv") + " FROM g"
     " UNION ALL SELECT 'av',"
-    " '{\"event_type\":\"' || event_type || '\"}', CAST(av AS VARCHAR) FROM g",
+    " '{\"event_type\":\"' || event_type || '\"}', " + fmt("av") + " FROM g",
 )
 def _ep_stats_query_multi(spark, sf_dir):
     from victorialogs_spark import endpoints as ep

@@ -20,7 +20,9 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
+from victorialogs_spark.functions.natural import format_number
 from victorialogs_spark.logsql import ast as A
 from victorialogs_spark.logsql.parser import (
     extract_time_range,
@@ -182,6 +184,16 @@ def _last_stats_pipe(q: A.Query) -> A.PStats:
     return q.pipes[-1]
 
 
+def _metric_value(out: DataFrame, m: str):
+    """A stats result rendered as the wire string: floating values in
+    plain decimal like Go's FormatFloat 'f' (Spark's string cast writes
+    E-notation below 1e-3 and from 1e7 up), anything else cast."""
+    c = F.col(m)
+    if isinstance(out.schema[m].dataType, (DoubleType, FloatType)):
+        return F.when(c.isNotNull(), format_number(c))
+    return c.cast("string")
+
+
 def stats_query(
     spark: SparkSession,
     df: DataFrame,
@@ -215,7 +227,7 @@ def stats_query(
             F.struct(
                 F.lit(m).alias("name"),
                 labels.alias("labels"),
-                F.col(m).cast("string").alias("value"),
+                _metric_value(out, m).alias("value"),
             )
             for m in metric_cols
         ]
@@ -268,7 +280,7 @@ def stats_query_range(
                 F.lit(m).alias("name"),
                 labels.alias("labels"),
                 F.col("_time").alias("_time"),
-                F.col(m).cast("string").alias("value"),
+                _metric_value(out, m).alias("value"),
             )
             for m in metric_cols
         ]

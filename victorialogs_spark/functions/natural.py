@@ -342,17 +342,23 @@ def format_number(c: Column) -> Column:
     decimal point ('18' not '18.0'), and non-integral values render in
     PLAIN decimal — Spark's string cast switches to E-notation at 1e7
     and 1e-3 ('1.23456785E7'), which no Go surface ever emits (r15
-    marshal-float corpus). The decimal(38,18) hop goes through Java's
+    marshal-float corpus). The decimal hop goes through Java's
     BigDecimal.valueOf (shortest double repr), so digits match the
-    'f'-form exactly; |v| ≥ 1e18 or < 1e-15 falls back to the raw cast
+    'f'-form exactly: |v| < 1 takes decimal(38,37), whose 37 fraction
+    digits hold every digit down to 1e-15 (decimal(38,18) rounded
+    0.0004120370370370361 to 0.000412037037037036), larger values take
+    decimal(38,18). |v| ≥ 1e18 or < 1e-15 falls back to the raw cast
     (documented divergence: Go prints those in full). try_cast: a plain
     cast of NaN or an out-of-long-range double THROWS under default
     ANSI mode, and this expression runs on arbitrary user math."""
     as_long = _try_cast(c, "long")
+    # each branch casts to string itself: a CASE over the two decimal
+    # types would widen both to one type and round the small branch again
+    dec = F.when(
+        F.abs(c) < F.lit(1.0), c.cast("decimal(38,37)").cast("string")
+    ).otherwise(c.cast("decimal(38,18)").cast("string"))
     plain = F.regexp_replace(
-        F.regexp_replace(
-            c.cast("decimal(38,18)").cast("string"), "0+$", ""
-        ),
+        F.regexp_replace(dec, "0+$", ""),
         r"\.$",
         "",
     )

@@ -16,7 +16,9 @@ bitset build). Probe reads only the tiny sidecar table.
 from __future__ import annotations
 
 import hashlib
+import threading
 import warnings
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -178,6 +180,56 @@ def tokens_of_query(q: A.Query) -> dict[str, list[str]]:
     return out
 
 
+@dataclass
+class TableSnapshot:
+    """What opening one version of a log table derives: the full reader
+    (one schema-inferring ``spark.read.parquet``), its file list, and the
+    pruned readers already built from it, keyed by their kept files."""
+
+    full: DataFrame
+    files: list[str]
+    pruned: dict[tuple[str, ...], DataFrame] = field(default_factory=dict)
+    lock: threading.Lock = field(default_factory=threading.Lock)
+
+    def reader(self, spark: SparkSession, table_path: str,
+               keep: list[str]) -> DataFrame:
+        """The reader over ``keep``, a subset of ``files``, built once."""
+        key = tuple(keep)
+        with self.lock:
+            df = self.pruned.get(key)
+        if df is None:
+            # basePath keeps partition columns (_day=... directory
+            # values) populated when reading leaf files directly; on a
+            # flat table it is a no-op
+            df = (
+                spark.read.schema(self.full.schema)
+                .option("basePath", table_path)
+                .parquet(*keep)
+            )
+            with self.lock:
+                df = self.pruned.setdefault(key, df)
+        return df
+
+
+def table_snapshot(spark: SparkSession, table_path: str) -> TableSnapshot:
+    """The snapshot of the log table at ``table_path`` for ``spark``. A
+    local table's snapshot is reused until a file or directory under it
+    changes (index/local.py's fingerprint, taken BEFORE Spark lists the
+    table, so a concurrent writer can cause an extra rebuild but never a
+    stale read); any other scheme gets a new snapshot per call."""
+    from victorialogs_spark.index.local import local_path, memo, tree_fingerprint
+
+    def build() -> TableSnapshot:
+        full = spark.read.parquet(table_path)
+        # metadata-only file listing — a select(input_file_name())
+        # .distinct() would scan every row just to enumerate files
+        return TableSnapshot(full, list(full.inputFiles()))
+
+    root = local_path(table_path)
+    fingerprint = tree_fingerprint(root) if root is not None else None
+    return memo(("table", spark, root), fingerprint, build)
+
+
 def read_pruned(
     spark: SparkSession,
     table_path: str,
@@ -190,32 +242,30 @@ def read_pruned(
     ``index_path``) AND its stream constraints (stream-value sidecar,
     ``stream_index_path`` — index/streams.py).
 
-    The one place a table path is opened: one schema-inferring read of
-    the table, one parse of the query, one probe per sidecar. Files a
-    sidecar does not list are always kept, and a sidecar that cannot be
-    read (deleted, corrupt) prunes nothing. Returns the full table
-    reader when nothing is prunable; a pruned reader otherwise carries
-    the full reader's schema, so partition columns stay populated."""
+    The one place a table path is opened. The table's snapshot
+    (``table_snapshot``) is built once per table CHANGE, not once per
+    query: while no file under a local table changes, opening it runs no
+    Spark job, lists nothing and reuses the pruned reader an earlier
+    query with the same kept files built. Each query is parsed once and
+    probes each sidecar once. Files a sidecar does not list are always
+    kept, and a sidecar that cannot be read (deleted, corrupt) prunes
+    nothing. Returns the full table reader when nothing is prunable; a
+    pruned reader otherwise carries the full reader's schema, so
+    partition columns stay populated."""
     from victorialogs_spark.index.streams import (
         stream_candidate_files,
         stream_constraints_of_query,
     )
     from victorialogs_spark.logsql.parser import parse_query
 
-    full = spark.read.parquet(table_path)
+    snap = table_snapshot(spark, table_path)
     q = parse_query(query)
     probes = []
     if index_path and (tokens := tokens_of_query(q)):
         probes.append((candidate_files, index_path, tokens))
     if stream_index_path and (constraints := stream_constraints_of_query(q)):
         probes.append((stream_candidate_files, stream_index_path, constraints))
-    if not probes:
-        return full
-    # metadata-only file listing — a select(input_file_name()).distinct()
-    # would scan every row just to enumerate files, costing more than the
-    # pruning saves
-    all_files = list(full.inputFiles())
-    keep = all_files
+    keep = snap.files
     for probe, sidecar, wanted in probes:
         try:
             indexed, cands = probe(spark, sidecar, wanted)
@@ -227,18 +277,11 @@ def read_pruned(
             )
             continue
         keep = [f for f in keep if f not in indexed or f in cands]
+    if len(keep) == len(snap.files):
+        return snap.full
     if not keep:
-        return full.limit(0)
-    if len(keep) == len(all_files):
-        return full
-    # basePath keeps partition columns (_day=... directory values)
-    # populated when reading leaf files directly; on a flat table it is
-    # a no-op
-    return (
-        spark.read.schema(full.schema)
-        .option("basePath", table_path)
-        .parquet(*keep)
-    )
+        return snap.full.limit(0)
+    return snap.reader(spark, table_path, keep)
 
 
 # ---------------------------------------------------------------------------
@@ -254,22 +297,9 @@ _REGISTRY: dict[str, dict[str, str]] = {}
 
 
 def _norm_path(p: str) -> str:
-    import os
-    import urllib.parse
+    from victorialogs_spark.index.local import local_path
 
-    # strip a file: scheme FIRST (abspath("file:///x") would produce a
-    # cwd-dependent "<cwd>/file:/x" key that never matches a later plain
-    # path lookup — r14 review finding; same idiom as
-    # index/local.read_local_index), then abspath only scheme-less
-    # local paths: abspath would mangle s3://bucket/x into
-    # <cwd>/s3:/bucket/x and make registered indexes unfindable
-    if p.startswith("file:"):
-        p = p[len("file:"):]
-        while p.startswith("//"):
-            p = p[1:]
-    if urllib.parse.urlparse(p).scheme == "":
-        return os.path.abspath(p).rstrip("/")
-    return p.rstrip("/")
+    return local_path(p) or p.rstrip("/")
 
 
 def register_sidecar(table_path: str, kind: str, index_path: str) -> None:
@@ -289,9 +319,25 @@ def register_bloom_index(table_path: str, index_path: str) -> None:
 def open_log_table(spark: SparkSession, table_path: str, query: str) -> DataFrame:
     """Open a log table for a query through ``read_pruned``, applying
     every sidecar registered for the path (token bloom + stream values).
-    Correctness never depends on the indexes."""
+    The table itself is opened once per table change (``table_snapshot``),
+    not once per query. Correctness never depends on the indexes."""
     sidecars = _REGISTRY.get(_norm_path(table_path), {})
     return read_pruned(
         spark, table_path, sidecars.get("bloom"), query,
         stream_index_path=sidecars.get("streams"),
     )
+
+
+def subquery_source(
+    spark: SparkSession, table_path: str, opened: DataFrame
+) -> DataFrame:
+    """The unpruned reader of the table ``opened`` (an ``open_log_table``
+    result) came from, for the plan nodes the sidecar prune must not
+    narrow (subqueries, join, union, stream_context): a local table's
+    snapshot reader; on any other scheme a new reader that reuses
+    ``opened``'s schema, so no second schema inference runs."""
+    from victorialogs_spark.index.local import local_path
+
+    if local_path(table_path) is None:
+        return spark.read.schema(opened.schema).parquet(table_path)
+    return table_snapshot(spark, table_path).full
