@@ -241,6 +241,21 @@ def test_bad_query_is_http_400(server):
     assert ei.value.code == 400
 
 
+def test_negative_content_length_is_http_400(server):
+    """A keep-alive POST with ``Content-Length: -1`` gets a 400 at once;
+    reading a body of length -1 would block the handler thread until
+    the client hung up."""
+    import socket
+
+    with socket.create_connection(("127.0.0.1", server.port), timeout=10) as s:
+        s.sendall(
+            b"POST /insert/jsonline HTTP/1.1\r\nHost: x\r\n"
+            b"Connection: keep-alive\r\nContent-Length: -1\r\n\r\n"
+        )
+        head = s.recv(64)
+    assert head.split(b"\r\n", 1)[0].split(b" ")[1] == b"400"
+
+
 def test_tenant_header_isolation(spark):
     """AccountID/ProjectID headers select the tenant on BOTH paths
     (tenant_id.go:74-84): rows ingested under a tenant are invisible to
@@ -448,9 +463,9 @@ finally:
 
 
 def test_ingest_spill_flush_bounds_plan(spark, tmp_path):
-    """Past FLUSH_ROWS acked rows, pending micro-batches flush to the
-    spill dir as parquet and the queryable frame replans over the file
-    scan: every row stays visible exactly once (across the flush
+    """Past FLUSH_ROWS acked rows, pending micro-batches flush into the
+    spill dir's day-partitioned table and the queryable frame replans
+    over the file scan: every row stays visible exactly once (across the flush
     boundary AND schema evolution between batches), and the frame's
     physical plan contains the spill scan instead of an ever-growing
     union of in-memory batches."""
@@ -491,13 +506,14 @@ def test_ingest_spill_flush_bounds_plan(spark, tmp_path):
         assert json.loads(body)["n"] == "30"
         # flushes are detached to a background writer now; settle it
         assert srv.state.wait_idle()
-        # the flushed scan is really in the plan, and parquet landed
+        # the flushed scan is really in the plan, and parquet landed in
+        # the table
         assert srv.state._pending is not None  # the post-flush batch
         plan = srv.state.df()._jdf.queryExecution().executedPlan().toString()
         assert "parquet" in plan.lower()
         import glob as _glob
 
-        assert _glob.glob(spill + "/*.parquet")
+        assert _glob.glob(spill + "/_table/_day=20240101/*.parquet")
     finally:
         _State.FLUSH_ROWS = old
         srv.stop()

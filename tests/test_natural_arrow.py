@@ -117,19 +117,17 @@ def test_staged_text_sort_plan_uses_arrow(spark):
 
 
 def test_staged_text_sort_results_unchanged(spark):
-    """Flag-off (expression) vs flag-on (Arrow) sort results identical."""
+    """The staged Arrow sort orders rows exactly like a plain orderBy
+    over the natural-key expressions (the path cheap fields and
+    ``_sort_exprs`` still use)."""
     from victorialogs_spark.api import run_query
-    from victorialogs_spark.planner import pipes
+    from victorialogs_spark.functions.natural import natural_keys
 
     rows = [(v,) for v in CASES]
     df = spark.createDataFrame(rows, "h string")
-    q = "* | sort by (h) | fields h"
-    old = pipes.STAGED_TEXT_ARROW
-    try:
-        pipes.STAGED_TEXT_ARROW = False
-        want = [r["h"] for r in run_query(spark, df, q).collect()]
-        pipes.STAGED_TEXT_ARROW = True
-        got = [r["h"] for r in run_query(spark, df, q).collect()]
-    finally:
-        pipes.STAGED_TEXT_ARROW = old
+    want = [r["h"] for r in df.orderBy(*natural_keys(df, "h")).collect()]
+    got = [
+        r["h"]
+        for r in run_query(spark, df, "* | sort by (h) | fields h").collect()
+    ]
     assert got == want

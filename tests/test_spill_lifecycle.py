@@ -1,21 +1,26 @@
-"""Lifecycle of the facade's durable spill dir: flat flushed parquet
-migrates into the day-partitioned table (``<spill>/_table/_day=*``) so
-long-running serve converges to the clustered layout instead of an
-unboundedly growing flat pile. The manifest (``_MANIFEST.json``) is the
-single atomic commit point; these tests pin the crash-consistency
+"""Lifecycle of the facade's durable spill dir: every flush appends its
+rows straight into the day-partitioned table (``<spill>/_table/_day=*``)
+and a day that accumulates COMPACT_FILES files is rewritten into
+clustered files, so long-running serve converges to the clustered layout
+instead of an unboundedly growing pile. The manifest (``_MANIFEST.json``)
+is the single atomic commit point; these tests pin the crash-consistency
 contract around it:
 
-- a kill BETWEEN manifest commit and spill cleanup must not double-count
-  (tombstoned flat files are skipped and deleted at restore);
-- a kill DURING the table write (before the commit) must not
-  double-count either (unlisted table files are orphans, deleted at
-  restore, rows still served from flat);
-- retention on the server covers migrated rows (the verdict's
-  "make apply_retention provably cover migrated rows");
-- time-filtered queries keep seeing un-migrated rows once the table
-  part introduces the ``_day`` column (the NULL-``_day`` pruning hazard).
+- a kill DURING a flush or a compaction (before the commit) must not
+  double-count: unlisted table files are orphans, deleted at restore;
+- a kill between a compaction commit and the reap of the files it
+  replaced must not double-count either (the replaced files are
+  unlisted, deleted at restore);
+- a failed flush keeps every acked row queryable from memory;
+- retention on the server covers flushed rows;
+- time-filtered queries keep seeing pending rows once the table part
+  introduces the ``_day`` column (the NULL-``_day`` pruning hazard);
+- a spill dir written by an older server (flat parquet in the spill
+  root, with or without a manifest) folds into the table once and its
+  rows are served exactly once.
 """
 
+import collections
 import glob
 import json
 import os
@@ -54,33 +59,45 @@ def _lines(day: str, n: int, tag: str) -> bytes:
 
 
 def _drain(srv):
-    """Background flushes are async now: wait for in-flight work, force
-    a final flush of any pending tail, wait again."""
+    """Background flushes are async: wait for in-flight work, force a
+    final flush of any pending tail, wait again."""
     assert srv.state.wait_idle()
     srv.state.flush_now()
     assert srv.state.wait_idle()
 
 
+def _metric(srv, name: str, status: str) -> int:
+    return srv.state.counters.get((name, "status", status), 0)
+
+
+def _flat(spill: str) -> list[str]:
+    return glob.glob(os.path.join(spill, "*.parquet"))
+
+
+def _write_flat(spark, spill: str, day: str, n: int, tag: str) -> list[str]:
+    """Write rows as an older server's flush did: flat parquet in the
+    spill root. Returns the new file basenames."""
+    from victorialogs_spark.schema import ingest_ndjson, with_tenant
+
+    before = set(_flat(spill))
+    df = ingest_ndjson(
+        spark, _lines(day, n, tag).decode().splitlines(),
+        stream_fields=["app"],
+    )
+    with_tenant(df, 0, 0).coalesce(1).write.mode("append").parquet(spill)
+    return sorted(os.path.basename(f) for f in set(_flat(spill)) - before)
+
+
 @pytest.fixture()
-def tiny_thresholds():
-    # tiny flushes; auto-migration OFF so tests drive migrate_now()
-    # deterministically (the background-trigger test lowers it itself)
-    old_flush, old_mig = _State.FLUSH_ROWS, _State.MIGRATE_FILES
-    _State.FLUSH_ROWS = 10
-    _State.MIGRATE_FILES = 99
-    yield
-    _State.FLUSH_ROWS = old_flush
-    _State.MIGRATE_FILES = old_mig
+def tiny_thresholds(monkeypatch):
+    # 12-row posts cross FLUSH_ROWS, so every post flushes
+    monkeypatch.setattr(_State, "FLUSH_ROWS", 10)
 
 
-def test_migration_compacts_flat_pile_into_day_table(
-    spark, tmp_path, tiny_thresholds
-):
+def test_flushes_fill_day_table(spark, tmp_path, tiny_thresholds):
     spill = str(tmp_path / "spill")
     srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
     try:
-        # two days of data across several flushes (12 >= FLUSH_ROWS=10,
-        # so each post flushes one flat file)
         for i in range(2):
             _post(srv, "/insert/jsonline?_stream_fields=app",
                   _lines("2024-01-01", 12, f"a{i}"))
@@ -88,22 +105,12 @@ def test_migration_compacts_flat_pile_into_day_table(
             _post(srv, "/insert/jsonline?_stream_fields=app",
                   _lines("2024-01-02", 12, f"b{i}"))
         _drain(srv)
-        before = _count(srv, '{app="life"}')
-        assert before == 48
-        n_flat_before = len(srv.state._flat_files)
-        assert n_flat_before >= 3
-
-        srv.state.migrate_now()
-
-        # mid-lifecycle oracle: the same query is exact after migration
         assert _count(srv, '{app="life"}') == 48
-        # day partitions materialized, flat pile drained
         days = sorted(os.path.basename(p) for p in
                       glob.glob(os.path.join(spill, "_table", "_day=*")))
         assert days == ["_day=20240101", "_day=20240102"]
-        assert srv.state._flat_files == []
         assert os.path.exists(os.path.join(spill, "_MANIFEST.json"))
-        # time-filtered query after migration: _day pruning must not
+        # time-filtered query over the table: _day pruning must not
         # lose rows (both days in range)
         assert _count(
             srv, '{app="life"} _time:[2024-01-01, 2024-01-03)'
@@ -115,12 +122,65 @@ def test_migration_compacts_flat_pile_into_day_table(
         srv.stop()
 
 
+def test_flushed_rows_sit_once_in_listed_table_files(spark, tmp_path,
+                                                     tiny_thresholds,
+                                                     monkeypatch):
+    """After many flushes from concurrent writers, with day compactions
+    running between them, the spill root holds no flat parquet and every
+    flushed row sits in exactly one manifest-listed table file: the
+    single-flight writer keeps each write's listing diff exact."""
+    import sys
+    import threading
+
+    monkeypatch.setattr(_State, "COMPACT_FILES", 3)
+    spill = str(tmp_path / "spill")
+    srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        def writer(w):
+            for k in range(2):
+                _post(srv, "/insert/jsonline?_stream_fields=app",
+                      _lines(f"2024-01-0{1 + w % 2}", 12, f"r{w}.{k}"))
+
+        threads = [threading.Thread(target=writer, args=(w,))
+                   for w in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        sys.setswitchinterval(switch)
+        _drain(srv)
+        assert _flat(spill) == []
+        assert _metric(srv, "vl_spill_flushes_total", "ok") >= 2
+        manifest = json.load(open(os.path.join(spill, "_MANIFEST.json")))
+        assert manifest["flat_files"] == []
+        assert "migrated_flat" not in manifest
+        with srv.state.lock:
+            assert sorted(manifest["table_files"]) == srv.state._table_files
+        seen = collections.Counter()
+        for rel in manifest["table_files"]:
+            path = os.path.join(spill, "_table", rel)
+            seen.update(r["_msg"] for r in
+                        spark.read.parquet(path).select("_msg").collect())
+        want = {f"r{w}.{k} {j}"
+                for w in range(8) for k in range(2) for j in range(12)}
+        assert set(seen) == want
+        assert set(seen.values()) == {1}
+        assert _count(srv, '{app="life"}') == len(want)
+    finally:
+        sys.setswitchinterval(switch)
+        srv.stop()
+
+
 def test_unmigrated_rows_survive_day_pruning(spark, tmp_path,
                                              tiny_thresholds):
-    """After a migration introduces the _day partition column, newly
-    flushed (flat) and pending rows must still match time-filtered
-    queries — a NULL _day from allowMissingColumns would silently drop
-    them under the planner's day pruning."""
+    """Once flushes introduce the _day partition column, newly flushed
+    and pending (not yet migrated into the table) rows must still match
+    time-filtered queries — a NULL
+    _day from allowMissingColumns would silently drop them under the
+    planner's day pruning."""
     spill = str(tmp_path / "spill")
     srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
     try:
@@ -128,11 +188,10 @@ def test_unmigrated_rows_survive_day_pruning(spark, tmp_path,
             _post(srv, "/insert/jsonline?_stream_fields=app",
                   _lines("2024-01-01", 12, f"m{i}"))
         _drain(srv)
-        srv.state.migrate_now()
         assert srv.state._table_files
-        # new flat flush + a pending (un-flushed) tail on a LATER day
+        # a new flush + a pending (un-flushed) tail on a LATER day
         _post(srv, "/insert/jsonline?_stream_fields=app",
-              _lines("2024-01-02", 12, "flat"))
+              _lines("2024-01-02", 12, "flushed"))
         assert srv.state.wait_idle()
         _post(srv, "/insert/jsonline?_stream_fields=app",
               _lines("2024-01-02", 3, "pend"))
@@ -148,44 +207,43 @@ def test_unmigrated_rows_survive_day_pruning(spark, tmp_path,
 
 
 def test_restart_between_commit_and_cleanup(spark, tmp_path,
-                                            tiny_thresholds):
-    """migrate_now() commits the manifest but leaves the migrated flat
-    files on disk as tombstones (deleted at the NEXT migration, so
-    in-flight plans never lose files) — exactly the state a kill between
-    compaction and spill-cleanup leaves. A restart must serve every row
-    exactly once and finish the cleanup."""
+                                            tiny_thresholds, monkeypatch):
+    """A compaction commit leaves the files it replaced on disk until
+    the next flush reaps them (plans in flight never lose files) —
+    exactly the state a kill between the commit and the reap leaves. A
+    restart must serve every row exactly once and delete them."""
+    monkeypatch.setattr(_State, "COMPACT_FILES", 3)
     spill = str(tmp_path / "spill")
     srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
     try:
-        for i in range(4):
+        for i in range(3):
             _post(srv, "/insert/jsonline?_stream_fields=app",
                   _lines("2024-01-01", 12, f"k{i}"))
-        _drain(srv)
-        srv.state.migrate_now()
-        # tombstones: committed in the manifest, still physically present
-        manifest = json.load(open(os.path.join(spill, "_MANIFEST.json")))
-        assert manifest["migrated_flat"]
-        for name in manifest["migrated_flat"]:
-            assert os.path.exists(os.path.join(spill, name))
-        assert _count(srv, '{app="life"}') == 48
+            _drain(srv)
+        with srv.state.lock:
+            tombs = set(srv.state._table_tombs)
+        assert tombs  # compacted away, not reaped yet
+        for rel in tombs:
+            assert os.path.exists(os.path.join(spill, "_table", rel))
+        assert _metric(srv, "vl_spill_compactions_total", "ok") == 1
+        assert _count(srv, '{app="life"}') == 36
     finally:
         srv.stop()
 
     srv2 = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
     try:
-        assert _count(srv2, '{app="life"}') == 48  # no double count
-        # restore finished the cleanup
-        for name in manifest["migrated_flat"]:
-            assert not os.path.exists(os.path.join(spill, name))
+        assert _count(srv2, '{app="life"}') == 36  # no double count
+        for rel in tombs:  # restore finished the reap
+            assert not os.path.exists(os.path.join(spill, "_table", rel))
     finally:
         srv2.stop()
 
 
 def test_restart_after_partial_table_write(spark, tmp_path,
                                            tiny_thresholds):
-    """A kill DURING the table write leaves parquet under _table that no
-    manifest lists. Restart must delete those orphans and keep serving
-    the rows from their (still-live) flat files — once each."""
+    """A kill DURING a compaction rewrite leaves parquet in a day dir
+    that no manifest lists. Restart must delete those orphans and keep
+    serving the rows from the listed files — once each."""
     spill = str(tmp_path / "spill")
     srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
     try:
@@ -193,16 +251,15 @@ def test_restart_after_partial_table_write(spark, tmp_path,
             _post(srv, "/insert/jsonline?_stream_fields=app",
                   _lines("2024-01-01", 12, f"p{i}"))
         _drain(srv)
-        flat = list(srv.state._flat_files)
-        assert flat
+        listed = list(srv.state._table_files)
+        assert listed
     finally:
         srv.stop()
-    # simulate the crashed migration: copy a flat file into a day dir
-    # (real partial writes are spark part files; any parquet works)
+    # simulate the crashed rewrite: copy a listed file within its day
+    # dir (real partial writes are spark part files; any parquet works)
     day_dir = os.path.join(spill, "_table", "_day=20240101")
-    os.makedirs(day_dir)
     orphan = os.path.join(day_dir, "part-orphan.parquet")
-    shutil.copy(flat[0], orphan)
+    shutil.copy(os.path.join(spill, "_table", listed[0]), orphan)
 
     srv2 = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
     try:
@@ -214,6 +271,8 @@ def test_restart_after_partial_table_write(spark, tmp_path,
 
 def test_server_retention_covers_migrated_rows(spark, tmp_path,
                                                tiny_thresholds):
+    """Retention on the server covers rows flushes migrated into the
+    table."""
     spill = str(tmp_path / "spill")
     srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
     try:
@@ -224,7 +283,6 @@ def test_server_retention_covers_migrated_rows(spark, tmp_path,
             _post(srv, "/insert/jsonline?_stream_fields=app",
                   _lines("2024-01-05", 12, f"n{i}"))
         _drain(srv)
-        srv.state.migrate_now()
         assert _count(srv, '{app="life"}') == 48
 
         dropped = srv.state.apply_retention("20240103")
@@ -243,37 +301,40 @@ def test_server_retention_covers_migrated_rows(spark, tmp_path,
         srv2.stop()
 
 
-def test_background_migration_trigger(spark, tmp_path, tiny_thresholds):
-    """Crossing MIGRATE_FILES at flush time kicks the background
-    migration without blocking the ingest path; reads stay exact while
-    it runs and after it commits."""
+def test_background_flush_commits_to_table(spark, tmp_path,
+                                           tiny_thresholds):
+    """Crossing FLUSH_ROWS kicks a background flush into the table
+    without blocking the ingest path; reads stay exact while it runs
+    and after it commits."""
     spill = str(tmp_path / "spill")
-    _State.MIGRATE_FILES = 3
     srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
     try:
-        for i in range(4):  # 4 flushes >= MIGRATE_FILES=3
+        for i in range(4):
             _post(srv, "/insert/jsonline?_stream_fields=app",
                   _lines("2024-01-01", 12, f"t{i}"))
         deadline = time.time() + 60
         while time.time() < deadline:
             with srv.state.lock:
-                done = (not srv.state._migrating
+                done = (not srv.state._writing
+                        and srv.state._pending is None
                         and bool(srv.state._table_files))
             if done:
                 break
             assert _count(srv, '{app="life"}') == 48  # exact mid-flight
             time.sleep(0.2)
-        assert done, "background migration never committed"
+        assert done, "background flush never committed"
         assert _count(srv, '{app="life"}') == 48
+        assert _metric(srv, "vl_spill_flushes_total", "ok") >= 1
+        assert _metric(srv, "vl_spill_flushes_total", "error") == 0
     finally:
         srv.stop()
 
 
 def test_restart_after_torn_flush(spark, tmp_path, tiny_thresholds):
     """A kill between Spark's multi-file parquet commit and the flush's
-    manifest append leaves flat parquet no manifest lists — those rows
-    were never committed (their flush never acked into the plan), so a
-    restart must delete them instead of half-serving a torn flush."""
+    manifest commit leaves table files no manifest lists — those rows
+    were never committed, so a restart must delete them instead of
+    half-serving a torn flush, even in a day partition of their own."""
     spill = str(tmp_path / "spill")
     srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
     try:
@@ -281,14 +342,16 @@ def test_restart_after_torn_flush(spark, tmp_path, tiny_thresholds):
             _post(srv, "/insert/jsonline?_stream_fields=app",
                   _lines("2024-01-01", 12, f"z{i}"))
         _drain(srv)
-        flat = list(srv.state._flat_files)
-        assert flat
+        listed = list(srv.state._table_files)
+        assert listed
     finally:
         srv.stop()
-    # simulate the torn flush: a part file that landed but whose flush
-    # never reached the manifest commit
-    torn = os.path.join(spill, "part-torn-from-killed-flush.parquet")
-    shutil.copy(flat[0], torn)
+    # simulate the torn flush: a part file that landed in a new day
+    # partition but whose flush never reached the manifest commit
+    torn_dir = os.path.join(spill, "_table", "_day=20240102")
+    os.makedirs(torn_dir)
+    torn = os.path.join(torn_dir, "part-torn-from-killed-flush.parquet")
+    shutil.copy(os.path.join(spill, "_table", listed[0]), torn)
 
     srv2 = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
     try:
@@ -300,23 +363,69 @@ def test_restart_after_torn_flush(spark, tmp_path, tiny_thresholds):
 
 def test_legacy_spill_dir_without_manifest(spark, tmp_path,
                                            tiny_thresholds):
-    """A pre-lifecycle spill dir (flat parquet, no _MANIFEST.json) must
+    """A pre-manifest spill dir (flat parquet, no _MANIFEST.json) must
     restore every flat file — the flat_files key is absent, which means
-    legacy, not torn."""
+    legacy, not torn — by folding them into the table."""
     spill = str(tmp_path / "spill")
+    os.makedirs(spill)
+    _write_flat(spark, spill, "2024-01-01", 12, "l0")
+    _write_flat(spark, spill, "2024-01-01", 12, "l1")
+
     srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
     try:
-        for i in range(2):
-            _post(srv, "/insert/jsonline?_stream_fields=app",
-                  _lines("2024-01-01", 12, f"l{i}"))
-        _drain(srv)
+        assert _count(srv, '{app="life"}') == 24
+        assert _flat(spill) == []
+        assert srv.state._table_files
     finally:
         srv.stop()
-    os.remove(os.path.join(spill, "_MANIFEST.json"))  # pre-r13 layout
 
+
+def test_restore_folds_older_spill_dir_once(spark, tmp_path,
+                                            tiny_thresholds):
+    """A spill dir an older server left — table files, live flat files
+    listed under "flat_files", and migrated flat files tombstoned under
+    "migrated_flat" — restores with every row served exactly once and
+    no flat parquet left on disk; a second restart serves the same."""
+    from victorialogs_spark.schema import ingest_ndjson, with_tenant
+    from victorialogs_spark.streaming.ingest import append_day_partitioned
+
+    spill = str(tmp_path / "spill")
+    table = os.path.join(spill, "_table")
+    os.makedirs(spill)
+    # 12 migrated rows: in the table AND still in a tombstoned flat file
+    migrated = _write_flat(spark, spill, "2024-01-01", 12, "mig")
+    df = ingest_ndjson(
+        spark, _lines("2024-01-01", 12, "mig").decode().splitlines(),
+        stream_fields=["app"],
+    )
+    append_day_partitioned(with_tenant(df, 0, 0), table)
+    table_files = sorted(
+        os.path.relpath(p, table)
+        for p in glob.glob(os.path.join(table, "_day=*", "*.parquet"))
+    )
+    # 24 live rows that never migrated
+    live = _write_flat(spark, spill, "2024-01-02", 12, "live0")
+    live += _write_flat(spark, spill, "2024-01-03", 12, "live1")
+    with open(os.path.join(spill, "_MANIFEST.json"), "w") as fh:
+        json.dump({"migrated_flat": migrated, "table_files": table_files,
+                   "flat_files": live}, fh)
+
+    srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
+    try:
+        assert _count(srv, '{app="life"}') == 36
+        assert _count(srv, '"live1"') == 12
+        assert _flat(spill) == []
+        manifest = json.load(open(os.path.join(spill, "_MANIFEST.json")))
+        assert manifest["flat_files"] == []
+        assert "migrated_flat" not in manifest
+        assert set(manifest["table_files"]) == set(
+            srv.state._list_table_files()
+        )
+    finally:
+        srv.stop()
     srv2 = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
     try:
-        assert _count(srv2, '{app="life"}') == 24
+        assert _count(srv2, '{app="life"}') == 36
     finally:
         srv2.stop()
 
@@ -325,9 +434,10 @@ def test_automatic_retention_on_migration_and_restore(
     spark, tmp_path, tiny_thresholds
 ):
     """With retention_days set, expired day partitions drop at the
-    migration commit (one manifest write covers migration + retention)
-    and again at restore — the reference's -retentionPeriod watcher
-    folded into the lifecycle's existing commit points."""
+    commit of the flush that migrates rows into the table (one manifest
+    write covers flush + retention) and
+    again at restore — the reference's -retentionPeriod watcher folded
+    into the lifecycle's existing commit points."""
     import datetime as dt
 
     spill = str(tmp_path / "spill")
@@ -346,10 +456,8 @@ def test_automatic_retention_on_migration_and_restore(
             _post(srv, "/insert/jsonline?_stream_fields=app",
                   _lines(new_day, 12, f"y{i}"))
         _drain(srv)
-        assert _count(srv, '{app="life"}') == 48  # flat: not yet covered
-        srv.state.migrate_now()
-        # migration commit applied retention: the 30-day-old partition
-        # never becomes servable from the table
+        # the flush commits applied retention: the 30-day-old partition
+        # never stays servable from the table
         assert _count(srv, '{app="life"}') == 24
         assert not glob.glob(
             os.path.join(spill, "_table", f"_day={old_day.replace('-', '')}")
@@ -367,33 +475,31 @@ def test_automatic_retention_on_migration_and_restore(
 
 
 def test_day_compaction_bounds_table_file_count(spark, tmp_path,
-                                                tiny_thresholds):
-    """Tier-2 of the lifecycle: once a day partition accumulates
-    COMPACT_FILES live files, the migration pass rewrites it into a
-    clustered file set — the table-file count must PLATEAU instead of
-    growing by a few files per migration forever. Old files tombstone
-    (reaped at the next migration / restore), counts stay exact after
-    every cycle, and a restart serves the compacted layout with the
-    on-disk file set converged to the manifest."""
-    old_cf = _State.COMPACT_FILES
-    _State.COMPACT_FILES = 3
+                                                tiny_thresholds,
+                                                monkeypatch):
+    """Once a day partition accumulates COMPACT_FILES live files, the
+    flush thread rewrites it into a clustered file set — the table-file
+    count must PLATEAU instead of growing by a file per flush forever.
+    Old files tombstone (reaped one commit later / at restore), counts
+    stay exact after every cycle, and a restart serves the compacted
+    layout with the on-disk file set converged to the manifest."""
+    monkeypatch.setattr(_State, "COMPACT_FILES", 3)
     spill = str(tmp_path / "spill")
     srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
     total = 0
     compacted = 0
     try:
-        for i in range(6):  # each cycle: flush one file, migrate it
+        for i in range(6):  # each cycle: flush one file
             _post(srv, "/insert/jsonline?_stream_fields=app",
                   _lines("2024-01-01", 12, f"c{i}"))
             total += 12
             _drain(srv)
-            srv.state.migrate_now()
             assert _count(srv, '{app="life"}') == total  # exact mid-cycle
             with srv.state.lock:
                 live = list(srv.state._table_files)
                 tombs = set(srv.state._table_tombs)
             # the gate bounds the live set: never COMPACT_FILES or more
-            # right after a migration pass
+            # right after a flush
             assert len(live) < _State.COMPACT_FILES, live
             if tombs:
                 compacted += 1
@@ -402,7 +508,6 @@ def test_day_compaction_bounds_table_file_count(spark, tmp_path,
                     assert os.path.exists(os.path.join(spill, "_table", rel))
         assert compacted >= 1  # the gate actually fired
     finally:
-        _State.COMPACT_FILES = old_cf
         srv.stop()
 
     # restart: manifest lists exactly the live set; tombstones and
@@ -418,13 +523,12 @@ def test_day_compaction_bounds_table_file_count(spark, tmp_path,
         srv2.stop()
 
 
-def test_transient_migration_failure_retries(spark, tmp_path,
-                                             tiny_thresholds,
-                                             monkeypatch):
-    """One failed migration must NOT disable the lifecycle for the
-    process (the unbounded-flat-pile regression): the gate retries
-    until MIGRATE_MAX_FAILS consecutive failures, and a success resets
-    the counter."""
+def test_failed_flush_keeps_rows_queryable(spark, tmp_path,
+                                           tiny_thresholds, monkeypatch):
+    """A flush whose table write fails keeps its rows in memory: every
+    acked row stays queryable, the failure is counted, and the spill
+    degrades to the in-memory union instead of re-running a doomed
+    write after every request."""
     from victorialogs_spark.streaming import ingest as ingest_mod
 
     spill = str(tmp_path / "spill")
@@ -433,46 +537,26 @@ def test_transient_migration_failure_retries(spark, tmp_path,
         _post(srv, "/insert/jsonline?_stream_fields=app",
               _lines("2024-01-01", 12, "t0"))
         _drain(srv)
-
-        real = ingest_mod.append_day_partitioned
+        assert _metric(srv, "vl_spill_flushes_total", "ok") == 1
 
         def boom(*a, **k):
-            raise RuntimeError("transient blip")
+            raise RuntimeError("write failure")
 
         monkeypatch.setattr(ingest_mod, "append_day_partitioned", boom)
-        srv.state.migrate_now()
-        assert srv.state._migrate_fails == 1
-        assert srv.state._migrate_ok  # still enabled
-        assert _count(srv, '{app="life"}') == 12  # flat stays live
-
-        # blip clears -> the retry succeeds and resets the counter
-        monkeypatch.setattr(ingest_mod, "append_day_partitioned", real)
-        srv.state.migrate_now()
-        assert srv.state._migrate_fails == 0
-        assert _count(srv, '{app="life"}') == 12
-        with srv.state.lock:
-            assert not srv.state._flat_files
-
-        # persistent failure: after MIGRATE_MAX_FAILS consecutive
-        # failures the BACKGROUND gate goes dark (manual migrate_now
-        # still allowed), instead of re-running a doomed rewrite
-        monkeypatch.setattr(ingest_mod, "append_day_partitioned", boom)
-        for i in range(_State.MIGRATE_MAX_FAILS):
+        _post(srv, "/insert/jsonline?_stream_fields=app",
+              _lines("2024-01-02", 12, "t1"))
+        assert srv.state.wait_idle()
+        assert _metric(srv, "vl_spill_flushes_total", "error") == 1
+        assert not srv.state._spill_ok
+        assert _count(srv, '{app="life"}') == 24  # flushed + re-attached
+        # later posts stay in memory and queryable; no more flushes run
+        for i in range(3):
             _post(srv, "/insert/jsonline?_stream_fields=app",
-                  _lines("2024-01-02", 12, f"p{i}"))
-            _drain(srv)
-            srv.state.migrate_now()
-        assert srv.state._migrate_fails == _State.MIGRATE_MAX_FAILS
-        old_mig = _State.MIGRATE_FILES
-        _State.MIGRATE_FILES = 1
-        try:
-            with srv.state.lock:
-                srv.state._maybe_migrate_locked()
-                assert not srv.state._migrating  # gate is dark
-        finally:
-            _State.MIGRATE_FILES = old_mig
-        # reads stay correct throughout (rows served from flat)
-        assert _count(srv, '{app="life"}') == 12 + 12 * _State.MIGRATE_MAX_FAILS
+                  _lines("2024-01-02", 12, f"u{i}"))
+        _drain(srv)
+        assert _metric(srv, "vl_spill_flushes_total", "error") == 1
+        assert _count(srv, '{app="life"}') == 60
+        assert _count(srv, '{app="life"} _time:[2024-01-02, 2024-01-03)') == 48
     finally:
         srv.stop()
 
@@ -482,7 +566,7 @@ def test_retention_defers_days_under_compaction(spark, tmp_path,
     """apply_retention() racing a compaction must not physically delete
     the day files the rewrite is reading: the day drops LOGICALLY (out
     of _table_files, out of query results, into _table_tombs) and the
-    bytes are reaped at the next migration instead."""
+    bytes are reaped by the next flush instead."""
     import datetime as dt
 
     spill = str(tmp_path / "spill")
@@ -498,7 +582,6 @@ def test_retention_defers_days_under_compaction(spark, tmp_path,
         _post(srv, "/insert/jsonline?_stream_fields=app",
               _lines(new_day, 12, "new"))
         _drain(srv)
-        srv.state.migrate_now()
         assert _count(srv, '{app="life"}') == 24
 
         with srv.state.lock:
@@ -522,11 +605,10 @@ def test_retention_defers_days_under_compaction(spark, tmp_path,
             assert set(day_files) <= srv.state._table_tombs
             srv.state._compacting_days = set()
 
-        # the next migration reaps the deferred bytes
+        # the next flush reaps the deferred bytes
         _post(srv, "/insert/jsonline?_stream_fields=app",
               _lines(new_day, 12, "new2"))
         _drain(srv)
-        srv.state.migrate_now()
         for rel in day_files:
             assert not os.path.exists(os.path.join(spill, "_table", rel))
         assert _count(srv, '{app="life"}') == 24
@@ -537,13 +619,14 @@ def test_retention_defers_days_under_compaction(spark, tmp_path,
 def test_manual_retention_during_migration_no_resurrection(
     spark, tmp_path, tiny_thresholds, monkeypatch
 ):
-    """A manual apply_retention() landing INSIDE a migration's race
-    window (after the Spark rewrite, before the manifest commit) must
-    not resurrect the expired day's previously-committed table files,
-    must leave live-day rows exact, and must not corrupt lifecycle
-    state (the racing drop of the just-written expired files is
-    semantically the same drop the retention_days fold would apply at
-    that very commit — expired rows may vanish, never double-count)."""
+    """A manual apply_retention() landing INSIDE the race window of a
+    flush migrating rows into the table (after the Spark write, before
+    the manifest commit) must not
+    resurrect the expired day's previously-committed table files, must
+    leave live-day rows exact, and must not corrupt lifecycle state
+    (the racing drop of the just-written expired files is semantically
+    the same drop the retention_days fold would apply at that very
+    commit — expired rows may vanish, never double-count)."""
     import datetime as dt
 
     from victorialogs_spark.streaming import ingest as ingest_mod
@@ -565,17 +648,13 @@ def test_manual_retention_during_migration_no_resurrection(
         _post(srv, "/insert/jsonline?_stream_fields=app",
               _lines(new_day, 12, "new1"))
         _drain(srv)
-        srv.state.migrate_now()
         with srv.state.lock:
             committed = [p for p in srv.state._table_files
                          if p.startswith(f"_day={old_label}")]
         assert committed
 
-        # round 2: more expired-day rows in the flat pile; retention
-        # fires inside the migration's write->commit window
-        _post(srv, "/insert/jsonline?_stream_fields=app",
-              _lines(old_day, 12, "old2"))
-        _drain(srv)
+        # round 2: more expired-day rows; retention fires inside the
+        # flush's write->commit window
         real = ingest_mod.append_day_partitioned
 
         def write_then_retention(df, table_dir):
@@ -586,20 +665,19 @@ def test_manual_retention_during_migration_no_resurrection(
         monkeypatch.setattr(
             ingest_mod, "append_day_partitioned", write_then_retention
         )
-        srv.state.migrate_now()
+        _post(srv, "/insert/jsonline?_stream_fields=app",
+              _lines(old_day, 12, "old2"))
+        _drain(srv)
         monkeypatch.setattr(ingest_mod, "append_day_partitioned", real)
 
         with srv.state.lock:
             live = list(srv.state._table_files)
-            flat = list(srv.state._flat_files)
         # no resurrection: the round-1 files retention dropped must not
-        # rejoin the manifest at the racing migration's commit
+        # rejoin the manifest at the racing flush's commit
         assert not (set(committed) & set(live)), (committed, live)
         # the racing retention deleted the expired day's just-written
-        # files before the commit's listing: expired rows are gone from
-        # both tiers (the flat batch tombstoned at the commit), live-day
-        # rows are exact, nothing double-counts
-        assert flat == []
+        # files before the commit's listing: expired rows are gone,
+        # live-day rows are exact, nothing double-counts
         assert _count(srv, '{app="life"}') == 12
         assert _count(srv, f'{{app="life"}} _time:[{old_day}, {new_day})') == 0
         with srv.state.lock:
@@ -635,11 +713,9 @@ def test_empty_store_serves_empty_results(spark, tmp_path,
         ).strftime("%Y-%m-%d")
         _post(srv, "/insert/jsonline?_stream_fields=app",
               _lines(old_day, 12, "x"))
-        _drain(srv)
-        assert _count(srv, '{app="life"}') == 12  # flat tier serves
-        # migration commit folds retention: the only day expires and the
+        # the flush commit folds retention: the only day expires and the
         # store is empty again — reads must go back to 0, not 400
-        srv.state.migrate_now()
+        _drain(srv)
         assert _count(srv, '{app="life"}') == 0
         assert _count(srv, '_time:[2020-01-01, 2030-01-01)') == 0
     finally:
@@ -647,17 +723,15 @@ def test_empty_store_serves_empty_results(spark, tmp_path,
 
 
 @pytest.mark.slow  # ~42 s failure-injection soak
-def test_compaction_failure_does_not_disable_migration(
+def test_compaction_failure_does_not_disable_flushes(
     spark, tmp_path, tiny_thresholds, monkeypatch
 ):
-    """Tier-2 failures are gated PER DAY, never against the tier-1
-    counter: a day whose clustered rewrite always fails must (a) leave
-    every migration committing normally — no unbounded flat pile —
-    (b) keep serving its un-compacted files exactly, and (c) stop
-    burning rewrite attempts after COMPACT_MAX_FAILS while OTHER days
-    still compact."""
-    old_cf = _State.COMPACT_FILES
-    _State.COMPACT_FILES = 2
+    """Compaction failures are gated PER DAY and never stop flushing: a
+    day whose clustered rewrite always fails must (a) leave every flush
+    committing normally, (b) keep serving its un-compacted files
+    exactly, and (c) stop burning rewrite attempts after
+    COMPACT_MAX_FAILS while OTHER days still compact."""
+    monkeypatch.setattr(_State, "COMPACT_FILES", 2)
     spill = str(tmp_path / "spill")
     srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
     attempts = {"n": 0}
@@ -672,16 +746,15 @@ def test_compaction_failure_does_not_disable_migration(
     monkeypatch.setattr(_State, "_compact_one_day", boom)
     total = 0
     try:
-        for i in range(6):  # each cycle: flush one file, migrate
+        for i in range(6):  # each cycle: flush one file
             _post(srv, "/insert/jsonline?_stream_fields=app",
                   _lines("2024-01-01", 12, f"f{i}"))
             total += 12
             _drain(srv)
-            srv.state.migrate_now()
-            # tier-1 keeps committing: the flat pile never accumulates
-            assert srv.state._flat_files == []
-            assert srv.state._migrate_fails == 0
-            assert srv.state._migrate_ok
+            # flushes keep committing into the table
+            assert srv.state._spill_ok
+            assert _metric(srv, "vl_spill_flushes_total", "ok") == i + 1
+            assert _metric(srv, "vl_spill_flushes_total", "error") == 0
             # rows stay exact from the un-compacted files
             assert _count(srv, '{app="life"}') == total
         # the failing day was attempted exactly COMPACT_MAX_FAILS times
@@ -689,19 +762,17 @@ def test_compaction_failure_does_not_disable_migration(
         with srv.state.lock:
             fails = dict(srv.state._compact_fails)
         assert fails["_day=20240101"] == _State.COMPACT_MAX_FAILS
-        # a healthy OTHER day still compacts (tombstones appear for it)
+        # a healthy OTHER day still compacts
         for i in range(2):
             _post(srv, "/insert/jsonline?_stream_fields=app",
                   _lines("2024-01-02", 12, f"g{i}"))
             total += 12
             _drain(srv)
-            srv.state.migrate_now()
-        srv.state.migrate_now()
         assert _count(srv, '{app="life"}') == total
+        assert _metric(srv, "vl_spill_compactions_total", "ok") >= 1
         with srv.state.lock:
             day2 = [p for p in srv.state._table_files
                     if p.startswith("_day=20240102")]
         assert day2  # committed and served
     finally:
-        _State.COMPACT_FILES = old_cf
         srv.stop()

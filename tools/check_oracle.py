@@ -50,18 +50,41 @@ def norm_rows(cols, rows):
     return sorted(tuple(norm_cell(r[i]) for i in order) for r in rows)
 
 
+def connect(sf_dir: str = SF_DIR) -> "duckdb.DuckDBPyConnection":
+    """A DuckDB connection with one view per testdata table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def compare(s_cols, s_rows, d_cols, d_rows) -> list[str]:
+    """Differences between a Spark result and its DuckDB oracle: schema
+    (sorted column names), row count, then the normalized value
+    multiset. Empty when they match."""
+    problems = []
+    if sorted(s_cols) != sorted(d_cols):
+        problems.append(f"schema: spark={sorted(s_cols)} duck={sorted(d_cols)}")
+    if len(s_rows) != len(d_rows):
+        problems.append(f"rowcount: spark={len(s_rows)} duck={len(d_rows)}")
+    if not problems:
+        a, b = norm_rows(s_cols, s_rows), norm_rows(d_cols, d_rows)
+        if a != b:
+            diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
+            problems.append(f"values: first diffs {diff}")
+    return problems
+
+
 def main(argv: list[str]) -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
     from victorialogs_spark.session import get_spark
 
     spark = get_spark("check-oracle")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = connect()
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -94,16 +117,7 @@ def main(argv: list[str]) -> int:
             failures.append(name)
             print(f"FAIL  {name}: duckdb error: {e}")
             continue
-        problems = []
-        if sorted(s_cols) != sorted(d_cols):
-            problems.append(f"schema: spark={sorted(s_cols)} duck={sorted(d_cols)}")
-        if len(s_rows) != len(d_rows):
-            problems.append(f"rowcount: spark={len(s_rows)} duck={len(d_rows)}")
-        if not problems:
-            a, b = norm_rows(s_cols, s_rows), norm_rows(d_cols, d_rows)
-            if a != b:
-                diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
-                problems.append(f"values: first diffs {diff}")
+        problems = compare(s_cols, s_rows, d_cols, d_rows)
         if problems:
             n_fail += 1
             failures.append(name)

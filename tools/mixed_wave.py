@@ -29,9 +29,9 @@ count, same spill-dir layout — use --preingest to build it first): the
 r12 review flagged that comparing the mixed read p95 against a control
 measured at a DIFFERENT thread count left "contention, not queuing" an
 assertion. --preingest N posts N warm-up batches before the wave so the
-control reads over the same (table ∪ flat ∪ pending) layout a sustained
-ingest leaves behind — past MIGRATE_FILES flushes it exercises the spill
-→ day-table migration too.
+control reads over the same (table ∪ pending) layout a sustained ingest
+leaves behind — past COMPACT_FILES flushes into one day it exercises the
+day compaction too.
 
 Each run saves its summary JSON under tools/mixed_wave_runs/<tag>.json
 and the "mixed read+ingest wave" section of SCALE.md is rebuilt from ALL
@@ -126,18 +126,15 @@ def main() -> int:
         for i in range(BATCH_ROWS)
     )
     def spill_layout() -> dict:
-        """Flat/table file counts and bytes under the server's spill dir
-        — the plateau evidence: under sustained ingest with migrations
-        running, flat files must hover around MIGRATE_FILES (+ one
+        """Table file count and bytes under the server's spill dir — the
+        plateau evidence: under sustained ingest with day compaction
+        running, a day's files must hover below COMPACT_FILES (+ one
         tombstone batch), not grow with wave length."""
         import glob as _glob
 
         d = srv.spill_dir
-        flat = _glob.glob(os.path.join(d, "*.parquet"))
         tab = _glob.glob(os.path.join(d, "_table", "_day=*", "*.parquet"))
         return {
-            "flat_files": len(flat),
-            "flat_mb": round(sum(os.path.getsize(f) for f in flat) / 1e6, 1),
             "table_files": len(tab),
             "table_mb": round(sum(os.path.getsize(f) for f in tab) / 1e6, 1),
         }
@@ -288,8 +285,8 @@ def main() -> int:
     # removed by stop(), which zeroed this in the first control run
     layout_end = spill_layout()
     with srv.state._mlock:
-        migrations_ok = srv.state.counters.get(
-            ("vl_spill_migrations_total", "status", "ok"), 0
+        flushes_ok = srv.state.counters.get(
+            ("vl_spill_flushes_total", "status", "ok"), 0
         )
     srv.stop()
 
@@ -316,7 +313,7 @@ def main() -> int:
         "mid_wave_oracle": oracle_name if oracle_ok else "FAIL",
         "spill_layout_start": layout_start,
         "spill_layout_end": layout_end,
-        "spill_migrations": migrations_ok,
+        "spill_flushes": flushes_ok,
         "drift": drift,
     }
     print(json.dumps(summary))
@@ -344,18 +341,18 @@ def main() -> int:
         f"Reader threads run a 3-query LogsQL mix over preloaded sf0.1"
         f" events + ingested rows; writer threads post {BATCH_ROWS}-row"
         f" NDJSON `/insert/jsonline` batches — ONE facade/session"
-        f" (tools/mixed_wave.py). Acked batches flush to the parquet"
-        f" spill dir every {_State.FLUSH_ROWS:,} rows; past"
-        f" {_State.MIGRATE_FILES} flat files a background migration"
-        " compacts them into the day-partitioned `_table` and reads"
-        " replan over (table ∪ flat ∪ pending). The writers=0 row is the"
+        f" (tools/mixed_wave.py). Acked batches flush into the spill"
+        f" dir's day-partitioned `_table` every {_State.FLUSH_ROWS:,}"
+        f" rows; a day holding {_State.COMPACT_FILES} files is rewritten"
+        " into clustered files, and reads replan over (table ∪ pending)."
+        " The writers=0 row is the"
         " LIKE-FOR-LIKE control (same reader count, spill layout"
         " pre-built by --preingest) the r12 review asked for.",
         "",
         "| run (tag) | read p50/p95/max (n) | write p50/p95 | ingest rows/s |"
-        " flat files start→end | table files start→end | migrations |"
+        " table files start→end | flushes |"
         " oracle | drift |",
-        "|---|---|---|---|---|---|---|---|---|",
+        "|---|---|---|---|---|---|---|---|",
     ]
     for r in runs:
         ls, le = r.get("spill_layout_start", {}), r.get("spill_layout_end", {})
@@ -372,11 +369,9 @@ def main() -> int:
             f" | {r['read_p50']:.2f}/{r['read_p95']:.2f}/{r['read_max']:.2f} s"
             f" ({r['reads']})"
             f" | {wr} | {ing}"
-            f" | {ls.get('flat_files', '?')}→{le.get('flat_files', '?')}"
-            f" ({ls.get('flat_mb', '?')}→{le.get('flat_mb', '?')} MB)"
             f" | {ls.get('table_files', '?')}→{le.get('table_files', '?')}"
             f" ({ls.get('table_mb', '?')}→{le.get('table_mb', '?')} MB)"
-            f" | {r.get('spill_migrations', 0)}"
+            f" | {r.get('spill_flushes', '?')}"
             f" | {r['mid_wave_oracle']}"
             f" | {'NONE' if not r['drift'] else r['drift']} |"
         )

@@ -2,9 +2,8 @@
 ``_time`` spans 4 days with ``retention_days=1`` live, proving on a
 RUNNING server that
 
-(a) day partitions age out of BOTH storage tiers — old-day rows leave
-    the flat pile via migration and the day-partitioned table via the
-    retention fold on each migration commit;
+(a) day partitions age out of the day-partitioned table via the
+    retention fold on each flush commit;
 (b) a mid-soak query over the retained window stays EXACT throughout
     (lower/upper-bounded by the acked-row snapshots around each read —
     retention never touches live days, ingest visibility is ack-order);
@@ -14,7 +13,7 @@ RUNNING server that
 The writer walks "time" forward: phase k of 4 posts rows stamped with
 day D-3+k (D = today UTC), so by mid-soak the earliest days are
 strictly older than the retention cutoff (now - 1 day) and every
-migration commit folds their drop. Days D-1 and D can never expire
+flush commit folds their drop. Days D-1 and D can never expire
 during the run.
 
 Usage: python tools/retention_soak.py [--duration 360] [--out FILE]
@@ -54,9 +53,9 @@ def main() -> int:
     spark = get_spark("retention-soak")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # small tiers so both lifecycles churn many times inside the soak
+    # small thresholds so flushes and compactions churn many times
+    # inside the soak
     _State.FLUSH_ROWS = 400
-    _State.MIGRATE_FILES = 6
     _State.COMPACT_FILES = 8
 
     spill = f"/tmp/vl_retention_soak_{os.getpid()}"
@@ -104,12 +103,11 @@ def main() -> int:
     )
 
     def layout() -> dict:
-        flat = glob.glob(os.path.join(spill, "*.parquet"))
         per_day = {
             os.path.basename(p): len(glob.glob(os.path.join(p, "*.parquet")))
             for p in glob.glob(os.path.join(spill, "_table", "_day=*"))
         }
-        return {"flat_files": len(flat), "table_days": per_day}
+        return {"table_files": sum(per_day.values()), "table_days": per_day}
 
     def writer():
         seq = 0
@@ -162,19 +160,15 @@ def main() -> int:
     for t in threads:
         t.join()
 
-    # settle: drain pending, run migrations until old-day rows are gone
-    # from BOTH tiers (first pass migrates remaining flat rows + folds
-    # retention; second reaps tombstones deferred past a compaction)
+    # settle: flush the pending tail (its commit folds retention)
     assert srv.state.wait_idle()
     srv.state.flush_now()
     assert srv.state.wait_idle()
-    srv.state.migrate_now()
-    srv.state.migrate_now()
 
     final = layout()
     # the plateau contract is on the LIVE file set (what a plan reads);
     # on-disk = live + tombstones a compaction left for the NEXT
-    # migration's reap (migrate_now no-ops on an empty flat pile, so the
+    # flush's reap (flush_now no-ops on an empty pending union, so the
     # settle can't force the reap — bounded by one compaction's worth)
     with srv.state.lock:
         live_by_day: dict[str, int] = {}
@@ -182,6 +176,9 @@ def main() -> int:
             day = rel.split(os.sep, 1)[0]
             live_by_day[day] = live_by_day.get(day, 0) + 1
     final["table_days_live"] = live_by_day
+    final["flushes_ok"] = srv.state.counters.get(
+        ("vl_spill_flushes_total", "status", "ok"), 0
+    )
     report = {
         "duration_s": DURATION,
         "days": days,
@@ -203,7 +200,7 @@ def main() -> int:
     old_q = f'{{app="soakapp"}} _time:[{days[0]}, {live_days[0]})'
     old_rows = count(old_q)
     verdicts.append((
-        "old-day rows gone from BOTH tiers (post-migration query = 0)",
+        "old-day rows gone (post-settle query = 0)",
         old_rows == 0,
         f"old-window count = {old_rows}",
     ))

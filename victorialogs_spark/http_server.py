@@ -7,25 +7,26 @@ produced by the same code paths the library API uses (an e2e GET of
 
 stdlib ThreadingHTTPServer on purpose: the work happens in Spark; the
 facade only parses params and streams results. Ingested rows stage in an
-in-memory micro-batch union and FLUSH to a parquet spill dir every
-_State.FLUSH_ROWS acked rows, so the queryable frame is (preloaded table
-∪ day-partitioned table scan ∪ flat spill scan ∪ a bounded union tail)
-no matter how long ingest runs — the production shape, where acked
-writes land in storage and memory only holds the tail. Point
+in-memory micro-batch union and FLUSH every _State.FLUSH_ROWS acked rows
+straight into the day-partitioned table ``<spill>/_table/_day=*``, so
+the queryable frame is (preloaded table ∪ table scan ∪ a bounded union
+tail) no matter how long ingest runs — the production shape, where
+acked writes land in storage and memory only holds the tail. Point
 ``spill_dir`` at a durable path to keep flushed rows across restarts.
 
-Spill lifecycle (the reference's small-parts → big-part LSM merge,
-datadb.go:75-82): once _State.MIGRATE_FILES flat files accumulate, a
-background migration rewrites them into ``<spill>/_table/_day=*``
-(clustered ``(_stream_id, _time)`` like compact_day output) and commits
-by atomically replacing ``_MANIFEST.json`` — the SINGLE commit point.
-Tombstoned flat files stay on disk until the next migration (so plans
-in flight never lose files) and are reaped at the next migration or
-restart. A kill on either side of the commit cannot double-count:
-before it, partial table files are unlisted orphans (deleted at
-restore, rows still served flat); after it, tombstoned flat files are
-skipped (rows served from the table). ``_State.apply_retention`` drops
-whole day partitions from the migrated table, manifest included.
+Spill lifecycle (the reference's per-day partitions with small parts
+merging into big parts inside each partition, datadb.go:75-82): a flush
+appends its rows to their day partitions and commits the new files by
+atomically replacing ``_MANIFEST.json`` — the SINGLE commit point. The
+same background thread then rewrites any day that holds
+_State.COMPACT_FILES live files into clustered ``(_stream_id, _time)``
+files, committed the same way. Table files the manifest does not list
+are orphans (a torn flush or a killed compaction) and are deleted at
+restore; compacted-away files are reaped one commit later, so plans in
+flight never lose files. ``_State.apply_retention`` drops whole day
+partitions, manifest included. Flat parquet in the spill root is the
+layout of older servers: restore folds it into the table once, through
+the flush path.
 """
 
 from __future__ import annotations
@@ -110,7 +111,7 @@ class _State:
     # instead of growing with ingest count (the same lineage rule
     # iterative algorithms follow, datapipe/clusters.py)
     CHECKPOINT_EVERY = 16
-    # acked micro-batches flush to the spill dir as parquet once this
+    # acked micro-batches flush into the day-partitioned table once this
     # many rows accumulate; queries then replan over a plain file scan
     # instead of an ever-growing union of in-memory checkpoint blocks.
     # Before this bound existed, a sustained ingest wave pushed read p95
@@ -120,32 +121,15 @@ class _State:
     # — and mirrors production, where acked writes land in storage and
     # memory only stages the tail.
     FLUSH_ROWS = 20_000
-    # flat spill files migrate into the day-partitioned table once this
-    # many accumulate. Without a lifecycle the spill dir is an unbounded
-    # flat pile every read scans in full (at the measured 1,971 rows/s
-    # that is ~425 files/day, read cost growing linearly forever); with
-    # it, long-running serve converges to the same clustered layout
-    # compact_day produces — the reference's small-parts → big-part LSM
-    # merge (datadb.go:75-82) applied to the facade's write path.
-    MIGRATE_FILES = 8
-    # tier-2 of the LSM: once a single day partition accumulates this
-    # many live table files (each migration appends a few), the
-    # migration pass rewrites that day into clustered files — without
-    # it the table-file count grows linearly with migrations forever
-    # (the 10-minute soak reached 72 files / 9 migrations) and every
-    # read pays a task per file, the same unbounded-pile failure the
-    # flat tier had
+    # once a single day partition holds this many live table files (each
+    # flush appends one or a few), the flush thread rewrites that day
+    # into clustered files — without it the table-file count grows
+    # linearly with flushes forever and every read pays a task per file.
+    # The reference's small-parts → big-part merge (datadb.go:75-82).
     COMPACT_FILES = 16
-    # consecutive migration failures before the lifecycle gives up for
-    # the process lifetime: transient failures retry (at the next flush
-    # that re-trips the MIGRATE_FILES gate), persistent ones — a parquet
-    # schema the partitioned writer rejects — stop after this many
-    # attempts instead of re-running a doomed rewrite per flush
-    MIGRATE_MAX_FAILS = 3
     # consecutive PER-DAY compaction failures before that day is skipped
-    # (it keeps serving from its un-compacted files); tier-2 failures
-    # are deliberately gated separately from MIGRATE_MAX_FAILS — one
-    # unrewritable day must never disable healthy tier-1 migrations
+    # (it keeps serving from its un-compacted files): one unrewritable
+    # day must not re-run a doomed rewrite after every flush
     COMPACT_MAX_FAILS = 3
 
     def __init__(
@@ -162,7 +146,7 @@ class _State:
         self.retention_days = retention_days
         self._depth = 0
         self._preloaded = logs  # the table served at startup, if any
-        self._base = logs  # preloaded ∪ table scan ∪ flat spill scan
+        self._base = logs  # preloaded ∪ table scan
         self._pending: DataFrame | None = None  # un-flushed micro-batches
         self._pending_rows = 0
         self._spill_dir = spill_dir
@@ -173,79 +157,81 @@ class _State:
         self._manifest_path = (
             os.path.join(spill_dir, "_MANIFEST.json") if spill_dir else None
         )
-        self._flat_files: list[str] = []  # live (un-migrated) spill files
-        self._migrated: set[str] = set()  # tombstoned basenames, not yet rm'd
         self._table_tombs: set[str] = set()  # compacted-away, not yet rm'd
         self._table_files: list[str] = []  # manifest-listed, rel to _table
         self._flushing: DataFrame | None = None  # detached, being written
-        self._flushing_rows = 0
-        self._migrating = False
-        self._migrate_ok = spill_dir is not None
-        # consecutive _migrate failures; the gate only goes permanently
-        # dark at MIGRATE_MAX_FAILS so one transient blip (executor
-        # hiccup, disk pressure, a racing manual apply_retention) can't
-        # silently revert serve to the unbounded flat-pile behavior —
-        # but a schema-shaped failure that recurs stops burning rewrites
-        self._migrate_fails = 0
+        # a flush thread (write, commit, day compaction) is running. Table
+        # writes are single-flight, so a before/after listing diff names
+        # exactly the files the running write added
+        self._writing = False
         # days a compaction rewrite is reading OUTSIDE the lock;
         # retention defers their physical deletion (logical drop +
         # tombstones) so the in-flight read never loses files
         self._compacting_days: set[str] = set()
-        # consecutive rewrite failures per day (tier-2 gate; a success
-        # resets its day, COMPACT_MAX_FAILS skips it)
+        # consecutive rewrite failures per day (a success resets its
+        # day, COMPACT_MAX_FAILS skips it)
         self._compact_fails: dict[str, int] = {}
-        # a DURABLE spill dir may already hold rows flushed by a prior
-        # server run — they were acked, so they must be queryable from
-        # request one, not only after the next flush re-reads the dir.
-        # The manifest is the commit record of past flushes, migrations
-        # and retention: a flat file it tombstones is ALREADY in the
-        # table (kill landed between manifest commit and spill cleanup —
-        # finish the cleanup, don't double-count); a table file it does
-        # NOT list is a crashed migration's partial write (kill landed
-        # mid-write, before the commit — the rows are still in their
-        # flat files, delete the orphans, don't double-count); and a
-        # flat file it does not list under "flat_files" is a TORN FLUSH
-        # (kill landed between Spark's multi-file parquet commit and the
-        # manifest append — those rows were never acked, delete the
-        # partial files so a fraction of a flush can't half-appear). A
-        # manifest without the "flat_files" key is pre-lifecycle legacy:
-        # every non-tombstoned flat file is live.
-        if spill_dir is not None:
-            import glob as _glob
-
-            manifest = self._read_manifest()
-            tombs = set(manifest.get("migrated_flat", []))
-            listed = manifest.get("table_files", [])
-            flat_listed = manifest.get("flat_files")
-            flat_all = sorted(_glob.glob(os.path.join(spill_dir, "*.parquet")))
-            for f in flat_all:
-                name = os.path.basename(f)
-                if name in tombs:
-                    os.remove(f)  # committed migration: rows live in table
-                elif flat_listed is not None and name not in flat_listed:
-                    os.remove(f)  # torn flush: never committed, never acked
-                else:
-                    self._flat_files.append(f)
-            on_disk = set(self._list_table_files())
-            self._table_files = [p for p in listed if p in on_disk]
-            for orphan in sorted(on_disk - set(listed)):
-                os.remove(os.path.join(self._table_dir, orphan))
-            if self._flat_files or self._table_files:
-                if retention_days is not None and self._table_files:
-                    # a prior run's old days must drop at startup, not
-                    # only after the next migration commits
-                    if self._apply_retention_locked(
-                        self._retention_keep_from()
-                    ):
-                        self._write_manifest_locked()
-                self._replan_base_locked()
-                self.logs = self._base
         # Prometheus-style counters, named like the reference's
         # (vl_http_requests_total{path=...}, vl_http_errors_total{...},
         # vl_rows_ingested_total{type=...} — app/vlselect/main.go:290+,
         # insertutil/common_params.go:318). Key = (name, label_k, label_v).
         self.counters: dict[tuple[str, str, str], int] = {}
         self._mlock = threading.Lock()
+        if spill_dir is not None:
+            self._restore()
+
+    def _restore(self) -> None:
+        """Serve the rows a prior server run flushed into a DURABLE spill
+        dir from request one — they were acked. The manifest is the
+        commit record: a table file it does not list is a torn flush or
+        a killed compaction (kill landed before the commit) and is
+        deleted, so a fraction of a write never half-appears.
+
+        Flat parquet in the spill root is the layout of older servers
+        (rows flushed there waited for a migration into the table).
+        Live flat files — listed under "flat_files", or every one when
+        the manifest predates that key — fold into the table once,
+        through the flush path; the new manifest lists
+        ``"flat_files": []``, so a flat file still on disk after a kill
+        counts as torn and is deleted, never served twice. Flat files
+        named under "migrated_flat" are already in the table."""
+        import glob as _glob
+
+        manifest = self._read_manifest()
+        listed = manifest.get("table_files", [])
+        flat_listed = manifest.get("flat_files")
+        tombs = set(manifest.get("migrated_flat", []))
+        fold = []
+        for f in sorted(_glob.glob(os.path.join(self._spill_dir, "*.parquet"))):
+            name = os.path.basename(f)
+            if name in tombs or (
+                flat_listed is not None and name not in flat_listed
+            ):
+                os.remove(f)
+            else:
+                fold.append(f)
+        on_disk = set(self._list_table_files())
+        self._table_files = [p for p in listed if p in on_disk]
+        for orphan in sorted(on_disk - set(listed)):
+            os.remove(os.path.join(self._table_dir, orphan))
+        if self._table_files:
+            if self.retention_days is not None and not fold:
+                # a prior run's old days must drop at startup, not only
+                # after the next flush commits (a fold commit applies
+                # retention itself)
+                if self._apply_retention_locked(self._retention_keep_from()):
+                    self._write_manifest_locked()
+            self._replan_base_locked()
+            self.logs = self._base
+        if fold:
+            self._pending = self.spark.read.option(
+                "mergeSchema", "true"
+            ).parquet(*fold)
+            self._pending_rows = self._pending.count()
+            self.flush_now()
+            if self._spill_ok:  # committed: the rows live in the table
+                for f in fold:
+                    os.remove(f)
 
     def inc(self, name: str, label: str, value: str, n: int = 1) -> None:
         with self._mlock:
@@ -293,21 +279,19 @@ class _State:
 
     def _write_manifest_locked(self) -> None:
         """Atomically replace the manifest — the SINGLE commit point of a
-        flush, a migration, and retention. Everything else (parquet
-        writes, spill deletion) is recoverable from it on restart:
-        "flat_files" makes a torn multi-file flush impossible to
-        half-serve (files Spark's committer moved before the kill are
-        unlisted and deleted at restore)."""
+        flush, a compaction and retention. Everything else (parquet
+        writes, file deletion) is recoverable from it on restart: table
+        files it does not list are deleted at restore. A degraded spill
+        writes nothing: no table write follows a failed flush, and the
+        manifest on disk must keep listing the flat files a failed
+        restore fold left live (restore filters listed files that
+        retention deleted since)."""
+        if not self._spill_ok:
+            return
         tmp = self._manifest_path + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(
-                {
-                    "migrated_flat": sorted(self._migrated),
-                    "table_files": sorted(self._table_files),
-                    "flat_files": sorted(
-                        os.path.basename(f) for f in self._flat_files
-                    ),
-                },
+                {"table_files": sorted(self._table_files), "flat_files": []},
                 fh,
             )
             fh.flush()
@@ -327,14 +311,14 @@ class _State:
         )
 
     def _replan_base_locked(self) -> None:
-        """Rebuild ``_base`` = preloaded ∪ table scan ∪ flat spill scan.
-        Both scans use EXPLICIT file lists (never a directory glob): a
-        glob would resurrect tombstoned flat files after a migration
-        commit — an instant double count. When the table part carries
-        the ``_day`` partition column, the other parts derive it from
+        """Rebuild ``_base`` = preloaded ∪ table scan. The scan uses an
+        EXPLICIT file list (never a directory glob): a glob would pick up
+        compacted-away files before their reap — an instant double count
+        — and a running write's uncommitted files. When the table carries
+        the ``_day`` partition column, the preloaded part derives it from
         ``_time`` so the planner's day pruning never sees a NULL ``_day``
         (allowMissingColumns would fill one, and a pruned query would
-        silently drop every un-migrated row)."""
+        silently drop every preloaded row)."""
         from victorialogs_spark.schema import with_day_partition, with_tenant
 
         parts: list[DataFrame] = []
@@ -346,12 +330,6 @@ class _State:
                 self.spark.read.option("mergeSchema", "true")
                 .option("basePath", self._table_dir)
                 .parquet(*paths)
-            )
-        if self._flat_files:
-            parts.append(
-                self.spark.read.option("mergeSchema", "true").parquet(
-                    *self._flat_files
-                )
             )
         pre = self._preloaded
         if pre is not None:
@@ -382,127 +360,14 @@ class _State:
             )
         self._base = base
 
-    def _maybe_migrate_locked(self) -> None:
-        """Kick a background migration when the flat pile crosses the
-        threshold. Single-flight; the Spark work runs WITHOUT the state
-        lock (the batch files are immutable once flushed and new flushes
-        only add files), so read/ingest latency stays flat while the
-        rewrite runs — only the commit takes the lock."""
-        if (
-            not self._migrate_ok
-            or self._migrate_fails >= self.MIGRATE_MAX_FAILS
-            or self._migrating
-            or len(self._flat_files) < self.MIGRATE_FILES
-        ):
-            return
-        self._migrating = True
-        batch = list(self._flat_files)
-        threading.Thread(
-            target=self._migrate, args=(batch,), daemon=True
-        ).start()
-
-    def migrate_now(self) -> None:
-        """Synchronous migration of the current flat pile (tests, CLI
-        maintenance). No-op when empty or a background run is active."""
-        with self.lock:
-            if self._migrating or not self._flat_files:
-                return
-            self._migrating = True
-            batch = list(self._flat_files)
-        self._migrate(batch)
-
-    def _migrate(self, batch: list[str]) -> None:
-        from victorialogs_spark.streaming.ingest import append_day_partitioned
-
-        try:
-            # 1. physically drop the PREVIOUS migration's tombstones
-            #    (flat AND compacted-away table files): every live plan
-            #    was built after that commit (the commit replanned
-            #    _base), so nothing references them anymore
-            with self.lock:
-                tombs = sorted(self._migrated)
-                self._migrated = set()
-                ttombs = sorted(self._table_tombs)
-                self._table_tombs = set()
-            for name in tombs:
-                try:
-                    os.remove(os.path.join(self._spill_dir, name))
-                except FileNotFoundError:
-                    pass
-            for rel in ttombs:
-                try:
-                    os.remove(os.path.join(self._table_dir, rel))
-                except FileNotFoundError:
-                    pass
-            # 2. the rewrite, outside the lock: batch files are immutable
-            #    and only migrations write the table dir (single-flight),
-            #    so a before/after listing diff attributes the new files
-            before = set(self._list_table_files())
-            df = self.spark.read.option("mergeSchema", "true").parquet(*batch)
-            append_day_partitioned(df, self._table_dir)
-            new_files = sorted(set(self._list_table_files()) - before)
-            # 3. commit: manifest replace is the atomic point. A kill
-            #    BEFORE it leaves orphan table files (deleted at restore,
-            #    rows still served from flat); a kill AFTER it leaves
-            #    tombstoned flat files (deleted at restore, rows served
-            #    from the table). Neither double-counts.
-            with self.lock:
-                self._migrated = {os.path.basename(f) for f in batch}
-                self._table_files = sorted(
-                    set(self._table_files) | set(new_files)
-                )
-                in_batch = set(batch)
-                self._flat_files = [
-                    f for f in self._flat_files if f not in in_batch
-                ]
-                if self.retention_days is not None:
-                    # fold the retention watcher into the migration
-                    # commit: one manifest write covers both
-                    self._apply_retention_locked(self._retention_keep_from())
-                self._write_manifest_locked()
-                self._replan_base_locked()
-                self._rebuild_logs_locked()
-            self.inc("vl_spill_migrations_total", "status", "ok")
-            self._migrate_fails = 0
-            # 4. tier-2: rewrite any day whose live file count crossed
-            #    the gate into clustered files (ingest.write_clustered,
-            #    compact_day's layout: stream-hashed, (_stream_id,
-            #    _time)-sorted, bloom on _stream_id). Same crash
-            #    protocol as every other step — new files are orphans
-            #    until the manifest commit, old files stay on disk
-            #    until the NEXT migration so live plans never lose
-            #    them. Failures here are gated PER DAY
-            #    (_compact_fails, inside _compact_days) and must never
-            #    reach the tier-1 counter: the migration above already
-            #    COMMITTED, so counting a compaction failure against
-            #    _migrate_fails would let one unrewritable day disable
-            #    healthy migrations for the process lifetime — the
-            #    unbounded-flat-pile regression the counter exists to
-            #    prevent (r14 review finding).
-            try:
-                self._compact_full_days()
-            except Exception:  # noqa: BLE001 — per-day gating inside
-                self.inc("vl_spill_compactions_total", "status", "error")
-        except Exception:  # noqa: BLE001 — degrade to the flat pile
-            # the flat files stay live (nothing was committed), reads
-            # stay correct. Transient failures retry at the next flush;
-            # only MIGRATE_MAX_FAILS consecutive failures (a rewrite
-            # that can't work, e.g. a schema the partitioned writer
-            # rejects) stop the lifecycle for the process
-            self._migrate_fails += 1
-            self.inc("vl_spill_migrations_total", "status", "error")
-        finally:
-            with self.lock:
-                self._migrating = False
-
     def _compact_full_days(self) -> None:
         """Rewrite each day partition with >= COMPACT_FILES live files
         into a clustered file set (one output file per ~128 MB of
-        input). Runs inside the migration thread (single-flight with the
-        tier-1 writes, so listing diffs stay attributable); the Spark
-        work holds no lock. Old files are NOT deleted at commit — they
-        tombstone into _table_tombs and are reaped at the next
-        migration (or, after a kill, at restore where the manifest
+        input). Runs inside the flush thread after its commit (table
+        writes are single-flight, so listing diffs stay attributable);
+        the Spark work holds no lock. Old files are NOT deleted at
+        commit — they tombstone into _table_tombs and are reaped one
+        commit later (or, after a kill, at restore where the manifest
         marks them orphans) so plans in flight never lose files."""
         with self.lock:
             days: dict[str, list[str]] = {}
@@ -521,7 +386,7 @@ class _State:
                 # a day whose rewrite keeps failing (e.g. a merged
                 # schema the clustered writer rejects) is skipped after
                 # COMPACT_MAX_FAILS consecutive failures instead of
-                # re-failing every migration; it keeps serving from its
+                # re-failing after every flush; it keeps serving from its
                 # un-compacted files — correct, just not clustered
                 and self._compact_fails.get(d, 0) < self.COMPACT_MAX_FAILS
             ]
@@ -542,8 +407,7 @@ class _State:
                 self._compact_one_day(day, files)
             except Exception:  # noqa: BLE001 — isolate per day
                 # one day's failed rewrite must not abort the other
-                # days' compactions nor (via _migrate's handler) the
-                # tier-1 migration counter; gate this day after
+                # days' compactions; gate this day after
                 # COMPACT_MAX_FAILS consecutive failures
                 with self.lock:
                     self._compact_fails[day] = (
@@ -570,7 +434,7 @@ class _State:
             if not set(files) <= set(self._table_files):
                 # retention (or a manual apply) dropped this day
                 # while we rewrote it: abandon — the new files stay
-                # unlisted and the next restore/migration reaps them
+                # unlisted and the next flush (or restore) reaps them
                 self._table_tombs.update(new_files)
                 return
             self._table_files = sorted(
@@ -593,8 +457,7 @@ class _State:
     def _apply_retention_locked(self, keep_days_from: str) -> list[str]:
         """Drop day partitions older than ``keep_days_from`` and their
         manifest rows; the CALLER commits the manifest and replans (so a
-        migration commit folds retention into its single manifest
-        write). Queries planned before the drop may fail on the deleted
+        flush commit folds retention into its single manifest write). Queries planned before the drop may fail on the deleted
         files — the reference's retention has the same semantics (data
         vanishes under running queries), and it beats serving expired
         rows."""
@@ -608,8 +471,8 @@ class _State:
             self._table_dir, keep_days_from, skip=self._compacting_days
         )
         # a day an in-flight compaction is reading outside the lock is
-        # dropped LOGICALLY only: its files tombstone for the next
-        # migration's reap (the compaction's commit check sees the day
+        # dropped LOGICALLY only: its files tombstone for a later
+        # flush's reap (the compaction's commit check sees the day
         # missing from _table_files and abandons), and the emptied
         # day dir falls to the next physical retention pass
         for day in sorted(self._compacting_days):
@@ -630,13 +493,11 @@ class _State:
 
     def apply_retention(self, keep_days_from: str) -> list[str]:
         """Drop table day-partitions older than ``keep_days_from``
-        (YYYYMMDD) — proof that migrated rows are covered by the same
-        retention the day-partitioned table gets (the reference's
-        retention watcher, storage.go:50). Returns dropped day labels.
-        Rows still in the flat pile or pending union are NOT covered
-        until they migrate — the same window the reference's in-memory
-        parts have. With ``retention_days`` set, this also runs
-        automatically at restore and after every migration commit."""
+        (YYYYMMDD) — the reference's retention watcher, storage.go:50.
+        Returns dropped day labels. Rows still in the pending union are
+        NOT covered until they flush — the same window the reference's
+        in-memory parts have. With ``retention_days`` set, this also
+        runs automatically at restore and at every flush commit."""
         with self.lock:
             dropped = self._apply_retention_locked(keep_days_from)
             if dropped:
@@ -704,8 +565,8 @@ class _State:
                 # job under the lock (the in-lock depth checkpoint was
                 # the biggest remaining lock-holder after the parse
                 # moved out — it fired every 16 posts, ahead of the
-                # 20k-row flush). Early flushes write smaller flat
-                # files; the migration compacts them later anyway.
+                # 20k-row flush). Early flushes write smaller table
+                # files; day compaction rewrites them later anyway.
                 if (
                     self._pending_rows >= self.FLUSH_ROWS
                     or self._depth >= self.CHECKPOINT_EVERY
@@ -720,36 +581,40 @@ class _State:
             self._rebuild_logs_locked()
             return n
 
-    def _start_flush_locked(self) -> None:
-        """Detach the pending union into the single-flight ``_flushing``
-        slot and hand it to a background flusher: the parquet write (the
-        next-biggest lock-held job after the parse moved out) runs with
-        NO lock held — the detached frame is checkpointed and immutable,
-        and readers keep seeing its rows via the ``_flushing`` leg of
-        _rebuild_logs_locked until the commit swaps them into the flat
-        file scan atomically."""
-        if self._flushing is not None:  # a flush is already in flight;
-            return  # re-checked on every append, so the next one catches up
-        self._flushing = self._pending
-        self._flushing_rows = self._pending_rows
+    def _detach_locked(self) -> tuple[DataFrame, int] | None:
+        """Claim the single-flight writer and move the pending union into
+        the ``_flushing`` slot; None when nothing is pending, the spill
+        is degraded, or a write is already running (re-checked on every
+        append, and the running write chains the next flush)."""
+        if self._writing or self._pending is None or not self._spill_ok:
+            return None
+        self._writing = True
+        self._flushing, rows = self._pending, self._pending_rows
         self._pending = None
         self._pending_rows = 0
         self._depth = 0
-        threading.Thread(
-            target=self._flush_bg,
-            args=(self._flushing, self._flushing_rows),
-            daemon=True,
-        ).start()
+        return self._flushing, rows
+
+    def _start_flush_locked(self) -> None:
+        """Hand the pending union to a background flusher: the parquet
+        write (the next-biggest lock-held job after the parse moved out)
+        runs with NO lock held — the detached frame is checkpointed and
+        immutable, and readers keep seeing its rows via the
+        ``_flushing`` leg of _rebuild_logs_locked until the commit swaps
+        them into the table scan atomically."""
+        job = self._detach_locked()
+        if job is not None:
+            threading.Thread(target=self._flush_bg, args=job, daemon=True).start()
 
     def wait_idle(self, timeout: float = 60.0) -> bool:
-        """Block until no background flush or migration is in flight
+        """Block until no background flush or compaction is in flight
         (tests, orderly shutdown). Returns False on timeout."""
         import time as _time
 
         deadline = _time.monotonic() + timeout
         while _time.monotonic() < deadline:
             with self.lock:
-                if self._flushing is None and not self._migrating:
+                if not self._writing:
                     return True
             _time.sleep(0.05)
         return False
@@ -758,74 +623,87 @@ class _State:
         """Synchronous flush of the current pending union (tests, CLI
         maintenance). No-op when empty, degraded, or already in flight."""
         with self.lock:
-            if (
-                self._flushing is not None
-                or self._pending is None
-                or not self._spill_ok
-            ):
-                return
-            self._flushing = self._pending
-            self._flushing_rows = self._pending_rows
-            self._pending = None
-            self._pending_rows = 0
-            self._depth = 0
-            frame, rows = self._flushing, self._flushing_rows
-        self._flush_bg(frame, rows)
+            job = self._detach_locked()
+        if job is not None:
+            self._flush_bg(*job)
 
     def _flush_bg(self, frame: DataFrame, rows: int) -> None:
-        """Write one detached pending union to the spill dir and commit.
-        Falls back to the pure in-memory union (pre-flush behavior) if
-        parquet can't store this schema — e.g. ingested field names
-        containing characters the parquet writer rejects."""
-        import glob as _glob
+        """Append one detached pending union to the day-partitioned
+        table, commit it, run the day compaction check, then reap the
+        files tombstoned before this flush began — one commit later, so
+        plans in flight never lose files. Falls back to the pure
+        in-memory union (pre-flush behavior) if parquet can't store this
+        schema — e.g. ingested field names containing characters the
+        parquet writer rejects, which would fail every later flush too."""
+        from victorialogs_spark.streaming.ingest import append_day_partitioned
 
+        with self.lock:
+            reap = set(self._table_tombs)
         try:
-            # the pending union carries ~32 partitions PER REQUEST (the
-            # parse parallelism); written as-is each flush would emit
-            # hundreds of near-empty files and every later read would
-            # pay a task per file. One output file per ~500k rows keeps
-            # the spill dir at O(flush count) files. The before/after
-            # diff attributes the new files (the _flushing slot makes
-            # flushes single-flight; migrations never write flat files).
-            before = set(_glob.glob(os.path.join(self._spill_dir, "*.parquet")))
-            n_files = max(1, rows // 500_000)
-            frame.coalesce(n_files).write.mode("append").parquet(
-                self._spill_dir
-            )
-            after = set(_glob.glob(os.path.join(self._spill_dir, "*.parquet")))
-        except Exception:  # noqa: BLE001 — degrade, don't drop the rows
-            with self.lock:
-                self._spill_ok = False
-                # re-attach: the rows stay queryable from memory
-                self._pending = (
-                    frame
-                    if self._pending is None
-                    else frame.unionByName(
-                        self._pending, allowMissingColumns=True
-                    )
+            try:
+                # the pending union carries ~32 partitions PER REQUEST
+                # (the parse parallelism); written as-is each flush would
+                # emit hundreds of near-empty files and every later read
+                # would pay a task per file. One output task per ~500k
+                # rows keeps the table at O(flush count) files. Table
+                # writes are single-flight, so the before/after diff
+                # names exactly this flush's files.
+                before = set(self._list_table_files())
+                append_day_partitioned(
+                    frame.coalesce(max(1, rows // 500_000)), self._table_dir
                 )
-                self._pending_rows += rows
+                new_files = set(self._list_table_files()) - before
+            except Exception:  # noqa: BLE001 — degrade, don't drop the rows
+                with self.lock:
+                    self._spill_ok = False
+                    # re-attach: the rows stay queryable from memory
+                    self._pending = (
+                        frame
+                        if self._pending is None
+                        else frame.unionByName(
+                            self._pending, allowMissingColumns=True
+                        )
+                    )
+                    self._pending_rows += rows
+                    self._flushing = None
+                    self._rebuild_logs_locked()
+                self.inc("vl_spill_flushes_total", "status", "error")
+                return
+            with self.lock:
+                # manifest commit: without it a restart would treat these
+                # files as a torn flush and delete them. Retention folds
+                # into the same manifest write
+                self._table_files = sorted(set(self._table_files) | new_files)
+                if self.retention_days is not None:
+                    self._apply_retention_locked(self._retention_keep_from())
+                self._write_manifest_locked()
+                self._replan_base_locked()
                 self._flushing = None
                 self._rebuild_logs_locked()
-            return
-        with self.lock:
-            self._flat_files = sorted(set(self._flat_files) | (after - before))
-            # manifest commit: without it a restart would treat these
-            # files as a torn flush and delete them
-            self._write_manifest_locked()
-            self._replan_base_locked()
-            self._flushing = None
-            self._rebuild_logs_locked()
-            self._maybe_migrate_locked()
-            if self._spill_ok and (
-                self._pending_rows >= self.FLUSH_ROWS
-                or self._depth >= self.CHECKPOINT_EVERY
-            ):
-                # appends that crossed a threshold while this flush was
-                # in flight were skipped (single-flight); chain the next
-                # flush so an idle tail above the threshold never lingers
-                # in memory waiting for another request
-                self._start_flush_locked()
+            self.inc("vl_spill_flushes_total", "status", "ok")
+            try:
+                self._compact_full_days()
+            except Exception:  # noqa: BLE001 — per-day gating inside
+                self.inc("vl_spill_compactions_total", "status", "error")
+            for rel in sorted(reap):
+                try:
+                    os.remove(os.path.join(self._table_dir, rel))
+                except FileNotFoundError:
+                    pass
+            with self.lock:
+                self._table_tombs -= reap
+        finally:
+            with self.lock:
+                self._writing = False
+                if (
+                    self._pending_rows >= self.FLUSH_ROWS
+                    or self._depth >= self.CHECKPOINT_EVERY
+                ):
+                    # appends that crossed a threshold while this write
+                    # ran were skipped (single-flight); chain the next
+                    # flush so an idle tail above the threshold never
+                    # lingers in memory waiting for another request
+                    self._start_flush_locked()
 
     def _rebuild_logs_locked(self) -> None:
         from victorialogs_spark.schema import with_day_partition
@@ -842,7 +720,7 @@ class _State:
                 and "_day" not in part.columns
                 and "_time" in part.columns
             ):
-                # once the migrated table introduces the _day partition
+                # once the table introduces the _day partition
                 # column, in-memory rows must carry a derived one too — a
                 # NULL _day from allowMissingColumns would let the
                 # planner's day pruning silently drop every un-flushed row
@@ -911,6 +789,11 @@ class _Handler(BaseHTTPRequestHandler):
         params = urllib.parse.parse_qs(parsed.query)
         if self.command == "POST":
             ln = int(self.headers.get("Content-Length") or 0)
+            if ln < 0:
+                # rfile.read(-1) on a socket blocks until the client
+                # closes: a keep-alive client would pin this thread
+                self.close_connection = True
+                raise ValueError(f"invalid Content-Length: {ln}")
             body = self.rfile.read(ln) if ln else b""
             self._body = body
             ctype = (self.headers.get("Content-Type") or "").split(";")[0]
@@ -1356,10 +1239,10 @@ class _Handler(BaseHTTPRequestHandler):
 class LogHTTPServer:
     """`serve(spark, df, port).stop()` — a facade instance per test/session.
 
-    ``spill_dir`` is where acked ingest micro-batches are flushed as
-    parquet once _State.FLUSH_ROWS accumulate (bounding read-path plan
-    growth under sustained ingest). Default: a private temp dir removed
-    by stop(). Pass a durable path to keep flushed rows across restarts
+    ``spill_dir`` holds the day-partitioned table acked ingest
+    micro-batches flush into once _State.FLUSH_ROWS accumulate
+    (bounding read-path plan growth under sustained ingest). Default: a
+    private temp dir removed by stop(). Pass a durable path to keep flushed rows across restarts
     (the production shape: acked writes belong in storage)."""
 
     def __init__(
@@ -1395,7 +1278,7 @@ class LogHTTPServer:
 
         self.httpd.shutdown()
         self.httpd.server_close()
-        # orderly shutdown: let an in-flight background flush/migration
+        # orderly shutdown: let an in-flight background flush/compaction
         # commit (a kill skips this — the manifest protocol covers it)
         self.state.wait_idle(timeout=60)
         if self._own_spill:

@@ -167,14 +167,6 @@ def _sort_exprs(df: DataFrame, fields: list[A.SortField], global_desc: bool) -> 
     return exprs
 
 
-# Staged natural keys for GENUINE text fields come from the Arrow pandas
-# UDF (functions/natural_arrow.py) instead of the CodegenFallback HOF
-# expressions — closes the whole-stage-codegen exclusion recorded as
-# r15's "Not yet optimized" item. False = the r15 expression path (kept
-# for the interleaved A/B harness, tools/ab_natural_arrow.py).
-STAGED_TEXT_ARROW = True
-
-
 def _staged_sort(
     df: DataFrame, fields: list[A.SortField], global_desc: bool
 ) -> tuple[DataFrame, list[Column], list[str]]:
@@ -217,35 +209,32 @@ def _staged_sort(
             for k in natural_keys(df, sf.name):
                 orders.append(k.desc() if desc else k.asc())
             continue
-        if STAGED_TEXT_ARROW:
-            # GENUINE text/mixed field: the scanner + run-encoder keys
-            # are CodegenFallback HOF trees — computing them in the
-            # staging Project ran the whole projection INTERPRETED
-            # (whole-stage-codegen exclusion, the r15 open item). One
-            # Arrow pandas UDF computes both per batch
-            # (functions/natural_arrow.py, byte-identical by pinned
-            # tests); the remaining JVM expressions (try_cast + gate +
-            # coalesce) stay codegen-friendly. Staged in two chained
-            # projections: the struct first, the key columns off its
-            # ATTRIBUTE — so the UDF cannot be cloned per extraction.
-            from victorialogs_spark.functions.natural_arrow import (
-                natural_arrow_struct,
-            )
+        # GENUINE text/mixed field: the scanner + run-encoder keys
+        # are CodegenFallback HOF trees — computing them in the
+        # staging Project ran the whole projection INTERPRETED
+        # (whole-stage-codegen exclusion, the r15 open item). One
+        # Arrow pandas UDF computes both per batch
+        # (functions/natural_arrow.py, byte-identical by pinned
+        # tests); the remaining JVM expressions (try_cast + gate +
+        # coalesce) stay codegen-friendly. Staged in two chained
+        # projections: the struct first, the key columns off its
+        # ATTRIBUTE — so the UDF cannot be cloned per extraction.
+        from victorialogs_spark.functions.natural_arrow import (
+            natural_arrow_struct,
+        )
 
-            s = fcol(df, sf.name)
-            n = num(df, sf.name)
-            gated = F.when(n.isNull() & s.rlike("^-?[0-9._]"), s)
-            uname = f"__vl_su{i}"
-            ucols[uname] = natural_arrow_struct(gated, s)
-            u = qcol(uname)
-            nn = F.coalesce(n, u["scan"])
-            keys = [
-                F.when(nn.isNotNull(), F.lit(0)).otherwise(F.lit(1)),
-                F.coalesce(nn, F.lit(0.0)),
-                u["key"],
-            ]
-        else:
-            keys = natural_keys(df, sf.name)
+        s = fcol(df, sf.name)
+        n = num(df, sf.name)
+        gated = F.when(n.isNull() & s.rlike("^-?[0-9._]"), s)
+        uname = f"__vl_su{i}"
+        ucols[uname] = natural_arrow_struct(gated, s)
+        u = qcol(uname)
+        nn = F.coalesce(n, u["scan"])
+        keys = [
+            F.when(nn.isNotNull(), F.lit(0)).otherwise(F.lit(1)),
+            F.coalesce(nn, F.lit(0.0)),
+            u["key"],
+        ]
         for k in keys:
             name = f"__vl_sk{i}"
             i += 1
