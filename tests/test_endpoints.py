@@ -128,12 +128,17 @@ def test_global_time_filter_and_option(spark, logs):
 
 
 def test_options_concurrency(spark, logs):
+    """options(concurrency=N) parses but leaves the session's shuffle
+    width alone: the session conf is shared by every concurrent query."""
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        run_query(spark, logs, "options(concurrency=7) * | stats by (app) count() as c").collect()
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+    q = "* | stats by (app) count() as c"
+    got = run_query(
+        spark, logs, f"options(concurrency={int(before) + 1}) {q}"
+    ).collect()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert sorted(map(tuple, got)) == sorted(
+        map(tuple, run_query(spark, logs, q).collect())
+    )
 
 
 def test_apply_common_args_extra_filters(spark):

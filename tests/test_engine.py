@@ -327,28 +327,16 @@ def test_unpack_json_fields_prefix(spark):
 
 def test_unpack_json_late_key_beyond_sample_horizon(spark):
     """A key first appearing after any bounded sample window must still
-    materialize — exact distinct-keys inference is the default (the
-    reference unpacks per-row with no horizon, pipe_unpack_json.go:15)."""
-    from victorialogs_spark.planner import pipes as pipes_mod
-
+    materialize — distinct-keys inference is exact (the reference
+    unpacks per-row with no horizon, pipe_unpack_json.go:15)."""
     n = 200
     rows = [{"_msg": '{"a": "%d"}' % i} for i in range(n)]
     rows.append({"_msg": '{"a": "x", "late": "seen"}'})
     df = make_logs(spark, rows)
-    # force a tiny sample horizon to prove the default ignores it
-    old = pipes_mod.UNPACK_SAMPLE_ROWS
-    try:
-        pipes_mod.UNPACK_SAMPLE_ROWS = None
-        out = run_query(spark, df, "* | unpack_json from _msg | fields a, late")
-        got = rows_set(out)
-        assert ("x", "seen") in got
-        assert ("0", "") in got
-        # opt-in bounded mode restores the old sampled behavior
-        pipes_mod.UNPACK_SAMPLE_ROWS = 50
-        out2 = run_query(spark, df, "* | unpack_json from _msg | fields a")
-        assert ("x",) in rows_set(out2)
-    finally:
-        pipes_mod.UNPACK_SAMPLE_ROWS = old
+    out = run_query(spark, df, "* | unpack_json from _msg | fields a, late")
+    got = rows_set(out)
+    assert ("x", "seen") in got
+    assert ("0", "") in got
 
 
 def test_unpack_logfmt(spark):
@@ -459,6 +447,18 @@ def test_drop_empty_fields(spark):
     df = make_logs(spark, [{"a": "", "b": "x"}, {"a": "", "b": ""}])
     out = run_query(spark, df, "* | drop_empty_fields")
     assert "a" not in out.columns and out.count() == 1
+
+
+def test_drop_empty_fields_typed_columns_are_values(spark):
+    """A non-null number is a value, not an empty field: the row whose
+    only non-empty field is numeric stays, and a numeric column that is
+    NULL everywhere is dropped like an all-empty string column."""
+    df = spark.createDataFrame(
+        [("", 5, None), ("x", 6, None)], "a string, n bigint, z double"
+    )
+    out = run_query(spark, df, "* | drop_empty_fields")
+    assert out.columns == ["a", "n"]
+    assert rows_set(out) == {("", 5), ("x", 6)}
 
 
 def test_implicit_filter_pipe_exec(spark, logs):

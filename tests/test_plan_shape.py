@@ -6,6 +6,8 @@ column pruning, top-k sort (TakeOrderedAndProject), no unbounded
 broadcast in stream_context, partial aggregation for stats.
 """
 
+import os
+
 import pytest
 
 from victorialogs_spark.api import run_query
@@ -359,24 +361,31 @@ def test_embedding_cartography_plans(spark):
 
 
 def test_drop_empty_fields_no_persist_above_threshold(spark, events):
-    """Above the persist ceiling, drop_empty_fields must NOT cache the
-    filtered input (at 100 TB the spill is the cost) — plan shows a
-    plain scan, not InMemoryTableScan; below the ceiling it caches so
-    flags-agg + downstream share one scan. Results identical either way."""
-    from victorialogs_spark.planner import pipes as pipes_mod
+    """drop_empty_fields never caches its input (at 100 TB the spill is
+    the cost): the flags aggregation and the query each scan the source,
+    so the plan shows a plain scan, not InMemoryTableScan, and every
+    event row has a non-empty field."""
+    out = run_query(spark, events, "* | drop_empty_fields")
+    assert "InMemoryTableScan" not in plan_of(out)
+    assert out.count() == events.count()
 
-    old = pipes_mod.DROP_EMPTY_PERSIST_MAX_BYTES
-    try:
-        pipes_mod.DROP_EMPTY_PERSIST_MAX_BYTES = 1  # force the large branch
-        out_large = run_query(spark, events, "* | drop_empty_fields")
-        assert "InMemoryTableScan" not in plan_of(out_large)
-        n_large = out_large.count()
-        pipes_mod.DROP_EMPTY_PERSIST_MAX_BYTES = old  # small branch again
-        out_small = run_query(spark, events, "* | drop_empty_fields")
-        assert "InMemoryTableScan" in plan_of(out_small)
-        assert out_small.count() == n_large
-    finally:
-        pipes_mod.DROP_EMPTY_PERSIST_MAX_BYTES = old
+
+def test_unpack_and_drop_empty_leave_no_cache(spark):
+    """The unpack pipes (a JVM from_json map and a Python-parsed logfmt
+    map alike) and drop_empty_fields re-scan instead of persisting: after
+    they run, Spark's CacheManager holds nothing."""
+    from victorialogs_spark.schema import events_as_logs
+
+    logs = events_as_logs(spark, os.path.join(os.path.dirname(SF_DIR), "sf0.01"))
+    spark.catalog.clearCache()
+    run_query(spark, logs, "* | unpack_json from props | stats count()").collect()
+    run_query(
+        spark, logs,
+        '* | format "k=<event_type>" as lf | unpack_logfmt from lf '
+        "| stats by (k) count()",
+    ).collect()
+    run_query(spark, logs, "* | drop_empty_fields").count()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_unpack_fields_pushdown_single_parse_plan(spark, events):

@@ -193,14 +193,9 @@ def main() -> int:
     for name, q in queries.items():
         rec = {"name": name}
         for kind, target in (("raw", raw_logs), ("layout", layout_dir)):
-            # drop frames cached by previous entries (unpack_json
-            # persists a parsed-map projection; at 100x that cache is
-            # multi-GB and its eviction churn contaminated this tool's
-            # first measurements) — same protocol as bench.py
+            # drop frames cached by previous entries — same protocol as
+            # bench.py
             spark.catalog.clearCache()
-            from victorialogs_spark.planner.pipes import clear_unpack_caches
-
-            clear_unpack_caches()
             best = float("inf")
             for i in range(4):  # first run warms page/plan caches, dropped
                 spark.conf.set("spark.sql.shuffle.partitions", shuffle_parts)

@@ -37,21 +37,6 @@ def _emit(df, limit: int = 0) -> None:
 
 
 def main(argv: list[str] | None = None) -> int:
-    """Dispatch + guaranteed cache cleanup: every command path (and
-    every exception path) releases any unpack_json parsed-map
-    projections the command persisted — previously only the final
-    query-command return did, so `serve` and the other early-return
-    subcommands leaked pinned executor storage into long-lived
-    embedding sessions."""
-    try:
-        return _run(argv)
-    finally:
-        from victorialogs_spark.planner.pipes import clear_unpack_caches
-
-        clear_unpack_caches()
-
-
-def _run(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="victorialogs-spark")
     ap.add_argument("command", choices=[
         "query", "hits", "facets", "field-names", "field-values",

@@ -6,10 +6,9 @@ registers a strong reference in Spark's CacheManager that lives until an
 explicit ``unpersist`` — but a library function returning a lazy
 DataFrame has no post-materialization hook, so repeated calls in a
 long-lived session (``cli serve``, notebooks) would accumulate cached
-blocks forever. The fix mirrors the planner's ``_DROP_EMPTY_CACHES``
-FIFO (planner/pipes.py): every cached intermediate registers here and
-the oldest entries unpersist once more than ``MAX_LIVE`` are alive — by
-then their dependent actions have long since run.
+blocks forever. The fix is a FIFO: every cached intermediate registers
+here and the oldest entries unpersist once more than ``MAX_LIVE`` are
+alive — by then their dependent actions have long since run.
 
 Callers who want deterministic release can also call
 :func:`release_caches` after materializing their results.

@@ -556,16 +556,5 @@ def query_ndjson(
         start_ns, end_ns, extra_filters, extra_stream_filters, timestamp_ns,
     )
     out = plan_query(spark, df, q)
-    try:
-        for row in out.toLocalIterator():
-            yield json.dumps(
-                row_to_wire_dict(row), separators=(",", ":")
-            )
-    finally:
-        # release any unpack_json parsed-map projections this query
-        # persisted — the consuming action is done (or abandoned); a
-        # concurrent query still reading one simply recomputes the
-        # missing blocks (unpersist is correctness-neutral)
-        from victorialogs_spark.planner.pipes import clear_unpack_caches
-
-        clear_unpack_caches()
+    for row in out.toLocalIterator():
+        yield json.dumps(row_to_wire_dict(row), separators=(",", ":"))

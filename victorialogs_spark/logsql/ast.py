@@ -433,6 +433,10 @@ class PUnpackSyslog(Pipe):
     offset_ns: int = 0
     keep_original_fields: bool = False
     cond: Optional[Filter] = None
+    # the syntax has neither; fixed so every unpack pipe carries the same
+    # extraction options
+    fields: list[str] = field(default_factory=list)
+    skip_empty_results: bool = False
 
 
 @dataclass

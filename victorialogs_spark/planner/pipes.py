@@ -1162,32 +1162,21 @@ def _flat_json_map(c: Column) -> Column:
     return F.from_json(c, "map<string,string>")
 
 
-# When set to an int N, key inference samples only the first N rows
-# (bounded-scan escape hatch for interactive exploration of huge unfiltered
-# inputs). Default None = exact: a full distinct-keys aggregation over the
-# (already filtered) input, so a key that first appears in row N+1 still
-# materializes — the reference unpacks per-row with no sampling horizon
-# (pipe_unpack_json.go:15), and a silent '' for late keys is a correctness
-# trap at 100 TB with schema drift (round-5 verdict, What's wrong #2).
-UNPACK_SAMPLE_ROWS: int | None = None
-
-
-def _infer_keys(df: DataFrame, keys_col: Column, ctx) -> list[str]:
+def _infer_keys(df: DataFrame, keys_col: Column) -> list[str]:
     """Learn the key set (the dynamic-schema step; capped at
     MAX_UNPACK_COLS like the reference's 2000-column block cap,
-    consts.go:30). Exact by default: explode(keys) -> distinct is one
-    extra scan of the filtered input, but the shuffle is tiny (map-side
-    partial distinct reduces it to the key cardinality, not the row count).
+    consts.go:30). Exact: explode(keys) -> distinct is one extra scan of
+    the filtered input, so a key that first appears in the last row still
+    materializes (the reference unpacks per row with no sampling horizon,
+    pipe_unpack_json.go:15); the shuffle is tiny (map-side partial
+    distinct reduces it to the key cardinality, not the row count).
     ``keys_col`` is an ARRAY<STRING> of per-row keys — callers pass the
     cheapest extractor they have (json_object_keys beats building the
     full value map just to drop the values). The cap is applied on
     SORTED keys so which 2000 survive is deterministic, not
     partition-order dependent."""
-    keyed = df.select(keys_col.alias("__ks"))
-    if UNPACK_SAMPLE_ROWS is not None:
-        keyed = keyed.limit(UNPACK_SAMPLE_ROWS)
     rows = (
-        keyed.select(F.explode(qcol("__ks")).alias("k"))
+        df.select(F.explode(keys_col).alias("k"))
         .distinct()
         .sort("k")
         .limit(MAX_UNPACK_COLS)
@@ -1196,37 +1185,27 @@ def _infer_keys(df: DataFrame, keys_col: Column, ctx) -> list[str]:
     return [r["k"] for r in rows]
 
 
-# Inputs whose Catalyst size estimate is under this persist the parsed-map
-# projection so key inference and extraction share ONE JSON parse (the
-# round-6 exact-inference change made unpack_json parse twice). Larger or
-# unestimable inputs keep the two-scan plan: at 100 TB, re-parsing a pruned
-# single-column scan beats spilling the whole projection to executor disks.
-#
-# Gate calibration (round 11, measured with clearCache between runs —
-# i.e. per-SINGLE-execution cost, no cross-run cache reuse): at 123 MB
-# source the persist path LOSES (8.8-10.3 s vs 7.0 s two-scan steady
-# state, plus a ~30 s first-run materialization of a ~12 GB parsed-map
-# cache); at 2 MB the two are within noise per execution and persist
-# wins once the same query repeats (cache reuse across plan-identical
-# runs — the dashboard pattern). The original 2 GiB gate would admit a
-# ~100 GB cache; 64 MiB keeps the repeat-query win for small inputs and
-# bounds the worst-case FIFO storage (~4 x ~10x expansion) to ~2.5 GB.
-UNPACK_PERSIST_MAX_BYTES = 64 << 20
-_UNPACK_CACHES: list = []
-
-
-def clear_unpack_caches() -> None:
-    """Unpersist every cached unpack_json parsed-map projection.
-
-    FIFO displacement alone bounds the cache at 4 entries but keeps up
-    to 4 x UNPACK_PERSIST_MAX_BYTES of executor storage pinned for the
-    PROCESS lifetime in a long-lived multi-tenant session. Callers that
-    know a query's consuming action has completed (the HTTP facade after
-    streaming a response, a batch driver between queries) call this to
-    release the storage immediately; the next unpack_json re-persists
-    from the (cheap, column-pruned) source scan."""
-    while _UNPACK_CACHES:
-        _UNPACK_CACHES.pop().unpersist()
+def _unpack_map(p, df: DataFrame, ctx, m: Column,
+                keys_col: Column) -> DataFrame:
+    """The tail every unpack pipe shares: write the parsed map ``m`` to a
+    temp column, take the keys (``p.fields``, or inferred from
+    ``keys_col``, the per-row key array over the same rows extraction
+    reads), assign ``result_prefix + key`` for each under the pipe's
+    keep/skip/cond rules and drop the temp column. Nothing is cached:
+    inference and extraction each scan the input, as the reference
+    unpacks row by row with no materialization (pipe_unpack_json.go:15);
+    at 100 TB re-reading one pruned column beats spilling the parsed
+    projection to executor disks."""
+    tmp = "__vl_unpack"
+    keys = p.fields or _infer_keys(df, keys_col)
+    cond = compile_filter(p.cond, df, ctx) if p.cond is not None else None
+    out = _assign_extracted_batch(
+        df.withColumn(tmp, m),
+        [(p.result_prefix + k, F.coalesce(qcol(tmp)[k], F.lit("")))
+         for k in keys],
+        p.keep_original_fields, p.skip_empty_results, cond,
+    )
+    return out.drop(tmp)
 
 
 # object-valued key detector: an object value always follows `"key":`;
@@ -1250,89 +1229,21 @@ def _p_unpack_json(p: A.PUnpackJson, df: DataFrame, ctx) -> DataFrame:
     if nested:
         from victorialogs_spark.functions.jsonflat import flatten_json_column
 
+        # inferred from the FLATTENED map: json_object_keys sees only
+        # top-level names ('y', never 'y.z.a')
         m = flatten_json_column(src)
-    else:
-        m = _flat_json_map(src)
-    tmp = "__vl_unpack"
-    with_map = df.withColumn(tmp, m)
-    if p.fields:
-        keys = p.fields
-    else:
-        # Key inference must cover the SAME rows as extraction (from_json
-        # is lenient — NaN/Infinity literals, etc. — while
-        # json_object_keys is strict JSON and returns NULL for them;
-        # round 5 mixed parsers and silently lost keys that only
-        # lenient-parsable rows carried).
-        # estimate on a THROWAWAY frame: forcing queryExecution freezes
-        # that JVM Dataset's lazy plan, which would pin the persisted
-        # frame to a pre-cache physical plan (same trap as
-        # _p_drop_empty_fields)
-        est = _estimated_bytes(df.withColumn(tmp, m))
-        if (
-            UNPACK_SAMPLE_ROWS is None
-            and est is not None
-            and est <= UNPACK_PERSIST_MAX_BYTES
-        ):
-            # single-parse path: persist the parsed-map projection; the
-            # inference scan materializes the cache, the extraction
-            # action reads it — one from_json evaluation total. FIFO
-            # retirement bounds the cache across a long-lived session.
-            from pyspark import StorageLevel
-
-            with_map = with_map.persist(StorageLevel.MEMORY_AND_DISK)
-            _UNPACK_CACHES.append(with_map)
-            while len(_UNPACK_CACHES) > 4:
-                _UNPACK_CACHES.pop(0).unpersist()
-            keys = _infer_keys(with_map, F.map_keys(qcol(tmp)), ctx)
-        else:
-            # two-scan path: cheap strict keys-only parse per row,
-            # falling back to the lenient full-map parse ONLY where
-            # strict parsing fails — coalesce short-circuits, so
-            # well-formed rows (the overwhelming majority at scale)
-            # never pay the map build. Exact: the fallback covers
-            # precisely the rows where the two parsers can disagree, and
-            # for strict-valid JSON both return the same top-level key
-            # set. Keys strict finds on rows lenient can't parse only
-            # add columns whose extraction value is '' — the
-            # reference's missing-key result. Nested inputs must infer
-            # from the FLATTENED map: json_object_keys sees only
-            # top-level names ('y', never 'y.z.a').
-            if nested:
-                keys = _infer_keys(df, F.map_keys(m), ctx)
-            else:
-                keys = _infer_keys(
-                    df,
-                    F.coalesce(F.json_object_keys(src), F.map_keys(m)),
-                    ctx,
-                )
-    cond = compile_filter(p.cond, df, ctx) if p.cond is not None else None
-    out = _assign_extracted_batch(
-        with_map,
-        [(p.result_prefix + k, F.coalesce(qcol(tmp)[k], F.lit("")))
-         for k in keys],
-        p.keep_original_fields, p.skip_empty_results, cond,
-    )
-    return out.drop(tmp)
-
-
-def _maybe_persist_map(df: DataFrame, with_map: DataFrame, tmp: str, m):
-    """The unpack persist gate shared by the UDF-backed unpack pipes
-    (syslog/logfmt — and the same policy _p_unpack_json applies inline):
-    when the projected input is small, persist the parsed-map frame so
-    key inference and extraction share ONE parse; otherwise the two-scan
-    plan re-parses (at 100 TB a pruned single-column re-read beats
-    spilling the whole projection). Returns (with_map, keys_frame,
-    keys_col) to infer from."""
-    est = _estimated_bytes(with_map)
-    if est is not None and est <= UNPACK_PERSIST_MAX_BYTES:
-        from pyspark import StorageLevel
-
-        with_map = with_map.persist(StorageLevel.MEMORY_AND_DISK)
-        _UNPACK_CACHES.append(with_map)
-        while len(_UNPACK_CACHES) > 4:
-            _UNPACK_CACHES.pop(0).unpersist()
-        return with_map, with_map, F.map_keys(qcol(tmp))
-    return with_map, df, F.map_keys(m)
+        return _unpack_map(p, df, ctx, m, F.map_keys(m))
+    m = _flat_json_map(src)
+    # Key inference covers the SAME rows as extraction: a cheap strict
+    # keys-only parse per row, falling back to the lenient full-map parse
+    # ONLY where strict parsing fails (from_json accepts NaN/Infinity
+    # literals etc., json_object_keys returns NULL for them) — coalesce
+    # short-circuits, so well-formed rows never pay the map build. For
+    # strict-valid JSON both return the same top-level key set; keys
+    # strict finds on rows lenient can't parse only add columns whose
+    # extraction value is '' — the reference's missing-key result.
+    keys_col = F.coalesce(F.json_object_keys(src), F.map_keys(m))
+    return _unpack_map(p, df, ctx, m, keys_col)
 
 
 def _p_unpack_logfmt(p: A.PUnpackLogfmt, df: DataFrame, ctx) -> DataFrame:
@@ -1345,29 +1256,11 @@ def _p_unpack_logfmt(p: A.PUnpackLogfmt, df: DataFrame, ctx) -> DataFrame:
     # names (r15 logfmt-parser corpus findings).
     from victorialogs_spark.functions.syslogparse import logfmt_map_column
 
-    src = fcol(df, p.from_field)
-    m = logfmt_map_column(src)
-    tmp = "__vl_unpack"
-    with_map = df.withColumn(tmp, m)
-    if p.fields:
-        keys = p.fields
-    else:
-        with_map, kdf, kcol = _maybe_persist_map(df, with_map, tmp, m)
-        keys = _infer_keys(kdf, kcol, ctx)
-    cond = compile_filter(p.cond, df, ctx) if p.cond is not None else None
-    out = _assign_extracted_batch(
-        with_map,
-        [(p.result_prefix + k, F.coalesce(qcol(tmp)[k], F.lit("")))
-         for k in keys],
-        p.keep_original_fields, p.skip_empty_results, cond,
-    )
-    return out.drop(tmp)
+    m = logfmt_map_column(fcol(df, p.from_field))
+    return _unpack_map(p, df, ctx, m, F.map_keys(m))
 
 
 def _p_unpack_syslog(p: A.PUnpackSyslog, df: DataFrame, ctx) -> DataFrame:
-    src = fcol(df, p.from_field)
-    pre = p.result_prefix
-    cond = compile_filter(p.cond, df, ctx) if p.cond is not None else None
     # Reference-exact PROGRESSIVE parser (syslog_parser.go via
     # functions/syslogparse.py): each header field is optional from the
     # right, RFC3164 timestamps convert to ISO8601-millis UTC with the
@@ -1386,19 +1279,8 @@ def _p_unpack_syslog(p: A.PUnpackSyslog, df: DataFrame, ctx) -> DataFrame:
 
     now = _time.time()
     year = _dt.datetime.now(_dt.timezone.utc).year
-    m = syslog_map_column(src, year, now, p.offset_ns)
-    tmp = "__vl_unpack"
-    with_map = df.withColumn(tmp, m)
-    with_map, kdf, kcol = _maybe_persist_map(df, with_map, tmp, m)
-    keys = _infer_keys(kdf, kcol, ctx)
-    out = _assign_extracted_batch(
-        with_map,
-        [(pre + k, F.coalesce(qcol(tmp)[k], F.lit(""))) for k in keys],
-        p.keep_original_fields,
-        False,
-        cond,
-    )
-    return out.drop(tmp)
+    m = syslog_map_column(fcol(df, p.from_field), year, now, p.offset_ns)
+    return _unpack_map(p, df, ctx, m, F.map_keys(m))
 
 
 def _p_unpack_words(p: A.PUnpackWords, df: DataFrame, ctx) -> DataFrame:
@@ -1758,73 +1640,40 @@ def _p_decolorize(p: A.PDecolorize, df: DataFrame, ctx) -> DataFrame:
     return df.withColumn(p.field_name, F.regexp_replace(src, ANSI_COLOR_RE, ""))
 
 
-# persist ceiling for drop_empty_fields: below it, caching the filtered
-# frame makes the flags aggregation + downstream read share ONE scan; at
-# 100 TB the persist itself IS the cost (every executor spills the whole
-# input to its local disks), so large inputs skip it and accept a second
-# scan of the source — the flags agg reads only the string columns and
-# pushes nothing else, so scan #1 is cheap relative to a full-input spill
-DROP_EMPTY_PERSIST_MAX_BYTES = 2 << 30
-
-
-def _estimated_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan size estimate (file sizes for scans,
-    actual bytes for local relations); None when unavailable."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return None
-
-
 def _p_drop_empty_fields(p: A.PDropEmptyFields, df: DataFrame, ctx) -> DataFrame:
     """Drop rows where all fields are empty, and columns that are empty
     everywhere (fixed-schema approximation of the per-row semantics in
     pipe_drop_empty_fields.go — divergence documented).
 
-    The column-drop half must observe data before the schema can change.
-    Small inputs (Catalyst estimate under DROP_EMPTY_PERSIST_MAX_BYTES)
-    persist the filtered frame so the flags aggregation and the
-    downstream query share one scan; large or unestimable inputs skip
-    the persist — two scans of a 100 TB source beat spilling it to every
-    executor's disks. The two scans read the source at two instants: a
-    concurrent append/compaction between them can drop a column whose
-    values only arrived in between (batch-over-immutable-snapshot is
-    this engine's general read model; run against a quiesced day like
-    every other multi-pass operator)."""
-    str_cols = [c for c, t in df.dtypes if t == "string"]
-    if not str_cols:
+    Every scalar column is read through fcol: NULL or missing is empty, a
+    non-null number, boolean or timestamp is not. Map, array and struct
+    columns (``_other``) take part in neither half, and neither does
+    ``_time``: every stored row has one, so counting it would keep the
+    rows whose fields are all empty.
+
+    The column-drop half must observe data before the schema can change:
+    a flags aggregation scans the filtered input, then the query scans it
+    again. The two scans read the source at two instants: a concurrent
+    append/compaction between them can drop a column whose values only
+    arrived in between (batch-over-immutable-snapshot is this engine's
+    general read model; run against a quiesced day like every other
+    multi-pass operator)."""
+    cols = [
+        c for c, t in df.dtypes
+        if c != "_time" and not t.startswith(("map<", "array<", "struct<"))
+    ]
+    if not cols:
         return df
+    nonempty = [fcol(df, c) != "" for c in cols]
     any_nonempty = F.lit(False)
-    for c in str_cols:
-        any_nonempty = any_nonempty | (fcol(df, c) != "")
-    # estimate on a THROWAWAY frame: forcing queryExecution freezes that
-    # JVM Dataset's lazy plan, which would otherwise pin the persisted
-    # frame to a pre-cache physical plan (it would never read its own
-    # InMemoryRelation)
-    est = _estimated_bytes(df.where(any_nonempty))
+    for ne in nonempty:
+        any_nonempty = any_nonempty | ne
     df = df.where(any_nonempty)
-    if est is not None and est <= DROP_EMPTY_PERSIST_MAX_BYTES:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        # bound the cache across a long-lived session (cli serve): Spark
-        # has no post-execution hook to unpersist, so retire the oldest
-        # cached frames FIFO once more than a few are alive — by then
-        # their downstream actions have run (disk-spilled blocks
-        # otherwise accumulate until session end)
-        _DROP_EMPTY_CACHES.append(df)
-        while len(_DROP_EMPTY_CACHES) > 4:
-            _DROP_EMPTY_CACHES.pop(0).unpersist()
     flags = df.agg(
-        *[F.max(fcol(df, c) != "").alias(c) for c in str_cols]
+        *[F.max(ne).alias(c) for c, ne in zip(cols, nonempty)]
     ).collect()[0]
-    empties = [c for c in str_cols if not flags[c]]
+    empties = [c for c, flag in zip(cols, flags) if not flag]
     return df.drop(*empties) if empties else df
-
-
-_DROP_EMPTY_CACHES: list = []
 
 
 def _local_paths(df: DataFrame) -> list[str]:

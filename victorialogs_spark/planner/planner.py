@@ -176,15 +176,11 @@ def plan_query(
     lookups must see every file or pruning would change results (the
     index is a perf-only structure)."""
     ctx = PlanContext(spark, source_df if source_df is not None else df, q, global_time_ns)
-    # options(concurrency=N) → shuffle parallelism for this plan
-    # (reference: per-query worker count, parser.go:261). Session-scoped by
-    # necessity: Spark reads the conf when the ACTION runs, so a set/restore
-    # pair here would undo itself before execution. The setting therefore
-    # persists until the next concurrency option; AQE coalescing makes the
-    # initial partition count mostly irrelevant either way.
-    conc = q.options.get("concurrency")
-    if conc and str(conc).isdigit():
-        spark.conf.set("spark.sql.shuffle.partitions", int(conc))
+    # options(concurrency=N) (the reference's per-query worker count,
+    # parser.go:261) is parsed and ignored: Spark reads the shuffle width
+    # from the SESSION conf when the action runs, so honouring it would
+    # change the width of every other query in the session. AQE sizes
+    # shuffles from the data instead.
     out = df
     if global_time_ns is not None:
         from victorialogs_spark.planner.filters import _time_range
@@ -250,7 +246,7 @@ def _pushdown_unpack_keys(p, nxt, df: DataFrame):
     learn the key universe, then extracts every key — only for an
     immediately following ``fields`` keep-pipe to drop all but a few.
     When the kept list is wildcard-free, restrict the unpack to exactly
-    the keys those names demand: no inference scan, no persist, one
+    the keys those names demand: no inference scan, one
     parse (at sf1 this was the slowest headline query, and most of its
     wall was inferring keys nobody kept).
 
