@@ -8,6 +8,7 @@ the coverage checklist).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,7 +35,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return dict(QUERIES)
 
 
-def oracle_sql() -> dict[str, str]:
-    from victorialogs_spark.driver_entry import ORACLE
+def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
+    """DuckDB SQL per entry; the block-metadata entries read the events
+    file of ``sf_dir`` (default: $SPARK_GRAFT_ORACLE_SF_DIR, else sf0.01)."""
+    from victorialogs_spark.driver_entry import EVENTS_PQ, ORACLE
 
-    return dict(ORACLE)
+    sf_dir = sf_dir or os.environ.get(
+        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
+    )
+    pq = f"{sf_dir}/events.parquet"
+    return {k: v.replace(EVENTS_PQ, pq) for k, v in ORACLE.items()}

@@ -301,6 +301,20 @@ def test_unpack_json_nested_flatten(spark):
     assert rows_set(out) == {("b",), ("",)}
 
 
+def test_unpack_json_fields_object_valued_name_is_empty(spark):
+    """A requested top-level name whose value is an object unpacks to ''
+    (its members flatten to dotted names), while a string value that
+    merely looks like one is kept. ``map<string,string>`` from_json
+    renders both as the same text, which is why unpack_json probes for
+    nested rows even when every fields name is a plain top-level one."""
+    df = make_logs(spark, [
+        {"_msg": '{"y":{"z":1},"x":"a"}'},
+        {"_msg": '{"y":"{\\"z\\":1}","x":"b"}'},
+    ])
+    out = run_query(spark, df, "* | unpack_json from _msg fields (y, x) | fields x, y")
+    assert rows_set(out) == {("a", ""), ("b", '{"z":1}')}
+
+
 def test_jsonflat_scanner_rules():
     """Unit pins for the reference-exact scanner (json_parser.go)."""
     from victorialogs_spark.functions.jsonflat import flatten_json_message as f

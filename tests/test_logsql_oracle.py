@@ -23,11 +23,9 @@ LOGSQL_PREFIXES = ("f_", "p_", "s_", "ep_")
 def test_logsql_entries_match_oracle(spark, sf_dir, scale):
     import __spark_entry__ as entrymod
 
-    from victorialogs_spark import driver_entry
-
     data = os.path.join(os.path.dirname(sf_dir), scale)
     con = check_oracle.connect(data)
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql(data)
     names = [n for n in qs if n.startswith(LOGSQL_PREFIXES)]
     assert len(names) > 100
     failures = {}
@@ -40,12 +38,7 @@ def test_logsql_entries_match_oracle(spark, sf_dir, scale):
             continue
         if name not in oracles:
             continue
-        # the block-metadata oracles name the events file of the scale
-        # chosen when the registry was imported; point them at this one
-        sql = oracles[name].replace(
-            driver_entry._EVENTS_PQ, os.path.join(data, "events.parquet")
-        )
-        cur = con.execute(sql)
+        cur = con.execute(oracles[name])
         d_cols = [d[0] for d in cur.description]
         problems = check_oracle.compare(s_cols, s_rows, d_cols, cur.fetchall())
         if problems:

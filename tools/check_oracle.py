@@ -87,7 +87,7 @@ def main(argv: list[str]) -> int:
     con = connect()
 
     qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+    oracles = entrymod.oracle_sql(SF_DIR)
     names = argv or list(qs)
     n_pass = n_fail = n_rows_only = 0
     failures = []

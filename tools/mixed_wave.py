@@ -61,10 +61,11 @@ SECONDS = arg("--seconds", 60)
 READERS = arg("--readers", 4)
 WRITERS = arg("--writers", 2)
 PREINGEST = arg("--preingest", 0)
-# --loadonly: writer threads run the SAME Spark work a real post does
-# (ingest_ndjson parse + localCheckpoint + count) but never touch the
-# server state — isolates pure executor-core contention from facade
-# queuing (lock waits, flush, plan growth) in the read-latency gap
+# --loadonly: writer threads run the SAME work a real post does (the
+# driver-side ingest_ndjson parse into a local relation, no Spark job)
+# but never touch the server state — isolates driver-side contention
+# from facade queuing (lock waits, flush, plan growth) in the
+# read-latency gap
 LOADONLY = "--loadonly" in sys.argv
 TAG = strarg("--tag", f"r{READERS}w{WRITERS}")
 BATCH_ROWS = 1000
@@ -207,12 +208,9 @@ def main() -> int:
         lines = batch.splitlines()
         while not stop.is_set():
             t0 = time.monotonic()
-            df = ingest_ndjson(spark, lines, stream_fields=["app"])
-            df = df.localCheckpoint(eager=True)
-            df.count()
+            ingest_ndjson(spark, lines, stream_fields=["app"])
             with lock:
                 write_lat.append(time.monotonic() - t0)
-            df.unpersist()
 
     def writer() -> None:
         while not stop.is_set():

@@ -660,21 +660,15 @@ logsql(
     " AND epoch_us(m.at) + 3600000000",
 )
 # block_stats/blocks_count read parquet row-group metadata; DuckDB's
-# parquet_metadata() is an exact independent oracle for them. The oracle
-# SQL must embed a literal path: default to the driver contract's sf0.01,
-# and follow SPARK_GRAFT_ORACLE_SF_DIR so the multi-scale soak gate
-# (tools/check_oracle.py) stays green at every scale.
-import os as _os
-
-_EVENTS_PQ = (
-    _os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    + "/events.parquet"
-)
+# parquet_metadata() is an exact independent oracle for them. Their SQL
+# must name the events file of the scale the Spark side reads:
+# EVENTS_PQ stands in for it until oracle_sql(sf_dir) fills it in.
+EVENTS_PQ = "<sf_dir>/events.parquet"
 logsql(
     "p_blocks_count",
     "* | blocks_count",
     "SELECT CAST(COUNT(*) AS VARCHAR) AS blocks_count FROM"
-    f" (SELECT DISTINCT file_name, row_group_id FROM parquet_metadata('{_EVENTS_PQ}'))",
+    f" (SELECT DISTINCT file_name, row_group_id FROM parquet_metadata('{EVENTS_PQ}'))",
 )
 logsql(
     "p_block_stats",
@@ -684,7 +678,7 @@ logsql(
     " CAST(total_uncompressed_size AS VARCHAR) AS uncompressed_size,"
     ' CAST(num_values AS VARCHAR) AS "rows",'
     " file_name || '#rg' || row_group_id AS part_path"
-    f" FROM parquet_metadata('{_EVENTS_PQ}')",
+    f" FROM parquet_metadata('{EVENTS_PQ}')",
 )
 
 # ---------------------------------------------------------------------------

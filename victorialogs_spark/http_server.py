@@ -6,9 +6,12 @@ produced by the same code paths the library API uses (an e2e GET of
 /select/logsql/query returns exactly ``endpoints.query_ndjson``'s lines).
 
 stdlib ThreadingHTTPServer on purpose: the work happens in Spark; the
-facade only parses params and streams results. Ingested rows stage in an
-in-memory micro-batch union and FLUSH every _State.FLUSH_ROWS acked rows
-straight into the day-partitioned table ``<spill>/_table/_day=*``, so
+facade only parses params and streams results. An /insert/* body is
+parsed on the driver into one local relation (sources/ndjson.rows_frame)
+— an insert runs no Spark job. Those frames stage in an in-memory union
+and FLUSH every _State.FLUSH_ROWS acked rows (or CHECKPOINT_EVERY
+requests) straight into the day-partitioned table
+``<spill>/_table/_day=*``: the flush is the rows' one Spark job, so
 the queryable frame is (preloaded table ∪ table scan ∪ a bounded union
 tail) no matter how long ingest runs — the production shape, where
 acked writes land in storage and memory only holds the tail. Point
@@ -22,9 +25,11 @@ same background thread then rewrites any day that holds
 _State.COMPACT_FILES live files into clustered ``(_stream_id, _time)``
 files, committed the same way. Table files the manifest does not list
 are orphans (a torn flush or a killed compaction) and are deleted at
-restore; compacted-away files are reaped one commit later, so plans in
-flight never lose files. ``_State.apply_retention`` drops whole day
-partitions, manifest included. Flat parquet in the spill root is the
+restore; a compacted-away file is reaped by a later flush, once every
+/select request that took its frame before the commit has finished its
+response, so plans in flight never lose files.
+``_State.apply_retention`` drops whole day partitions, manifest
+included. Flat parquet in the spill root is the
 layout of older servers: restore folds it into the table once, through
 the flush path.
 """
@@ -42,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from victorialogs_spark import endpoints as ep
 from victorialogs_spark.logsql.parser import parse_time_point
 from victorialogs_spark.schema import ingest_ndjson
+from victorialogs_spark.sources.ndjson import payload_rows, rows_frame
 
 
 def _unix_arg_ns(n: int) -> int:
@@ -107,9 +113,10 @@ def _time_arg_ns(v: str | None, now_ns: int | None = None) -> int | None:
 
 class _State:
     # every append adds a unionByName layer; past this depth the PENDING
-    # frame is localCheckpoint'ed so plan analysis stays O(1) per request
-    # instead of growing with ingest count (the same lineage rule
-    # iterative algorithms follow, datapipe/clusters.py)
+    # union flushes (or, with no spill dir, is localCheckpoint'ed) so
+    # plan analysis stays O(1) per request instead of growing with
+    # ingest count (the same lineage rule iterative algorithms follow,
+    # datapipe/clusters.py)
     CHECKPOINT_EVERY = 16
     # acked micro-batches flush into the day-partitioned table once this
     # many rows accumulate; queries then replan over a plain file scan
@@ -158,8 +165,14 @@ class _State:
             os.path.join(spill_dir, "_MANIFEST.json") if spill_dir else None
         )
         self._table_tombs: set[str] = set()  # compacted-away, not yet rm'd
+        # _base_gen counts installed bases; _readers counts the /select
+        # requests reading each generation's frame (acquire/release), so
+        # a reap can tell whether one may still scan a tombstoned file
+        self._base_gen = 0
+        self._readers: dict[int, int] = {}
         self._table_files: list[str] = []  # manifest-listed, rel to _table
         self._flushing: DataFrame | None = None  # detached, being written
+        self._flush_committed = False  # its files are in _table_files
         # a flush thread (write, commit, day compaction) is running. Table
         # writes are single-flight, so a before/after listing diff names
         # exactly the files the running write added
@@ -221,8 +234,7 @@ class _State:
                 # retention itself)
                 if self._apply_retention_locked(self._retention_keep_from()):
                     self._write_manifest_locked()
-            self._replan_base_locked()
-            self.logs = self._base
+            self._replan_base()
         if fold:
             self._pending = self.spark.read.option(
                 "mergeSchema", "true"
@@ -253,20 +265,38 @@ class _State:
 
     def df(self) -> DataFrame:
         with self.lock:
-            if self.logs is None:
-                # empty store, not an error: a server whose LAST day just
-                # expired under retention (the r14 multi-day soak hit
-                # this — every read 400'd between the drop and the next
-                # ingest) and a fresh server both serve the reference's
-                # empty-result semantics. The planner handles filters on
-                # absent columns (missing field ≡ empty value), so the
-                # canonical two-column empty frame answers any query.
-                if self._empty is None:
-                    self._empty = self.spark.createDataFrame(
-                        [], "_time timestamp, _msg string"
-                    )
-                return self._empty
-            return self.logs
+            return self._df_locked()
+
+    def acquire(self) -> tuple[DataFrame, int]:
+        """:meth:`df` for a request that reads it, with the base
+        generation it pins: no reap deletes a table file that frame lists
+        until :meth:`release` of that generation, after the response."""
+        with self.lock:
+            gen = self._base_gen
+            self._readers[gen] = self._readers.get(gen, 0) + 1
+            return self._df_locked(), gen
+
+    def release(self, gen: int) -> None:
+        with self.lock:
+            self._readers[gen] -= 1
+            if not self._readers[gen]:
+                del self._readers[gen]
+
+    def _df_locked(self) -> DataFrame:
+        if self.logs is None:
+            # empty store, not an error: a server whose LAST day just
+            # expired under retention (the r14 multi-day soak hit
+            # this — every read 400'd between the drop and the next
+            # ingest) and a fresh server both serve the reference's
+            # empty-result semantics. The planner handles filters on
+            # absent columns (missing field ≡ empty value), so the
+            # canonical two-column empty frame answers any query.
+            if self._empty is None:
+                self._empty = self.spark.createDataFrame(
+                    [], "_time timestamp, _msg string"
+                )
+            return self._empty
+        return self.logs
 
     # ---- durable-spill lifecycle -------------------------------------
 
@@ -310,27 +340,39 @@ class _State:
             )
         )
 
-    def _replan_base_locked(self) -> None:
-        """Rebuild ``_base`` = preloaded ∪ table scan. The scan uses an
-        EXPLICIT file list (never a directory glob): a glob would pick up
-        compacted-away files before their reap — an instant double count
-        — and a running write's uncommitted files. When the table carries
-        the ``_day`` partition column, the preloaded part derives it from
-        ``_time`` so the planner's day pruning never sees a NULL ``_day``
-        (allowMissingColumns would fill one, and a pruned query would
-        silently drop every preloaded row)."""
-        from victorialogs_spark.schema import with_day_partition, with_tenant
-
-        parts: list[DataFrame] = []
-        if self._table_files:
-            paths = [
-                os.path.join(self._table_dir, p) for p in self._table_files
-            ]
-            parts.append(
+    def _replan_base(self) -> None:
+        """Rebuild ``_base`` = preloaded ∪ table scan and install it as
+        the next base generation. The scan uses an EXPLICIT file list
+        (never a directory glob): a glob would pick up compacted-away
+        files before their reap — an instant double count — and a
+        running write's uncommitted files. Its mergeSchema footer read is
+        a Spark job, so it runs outside the lock, and a commit that lands
+        meanwhile makes it read again."""
+        while True:
+            with self.lock:
+                files = self._table_files
+            scan = (
                 self.spark.read.option("mergeSchema", "true")
                 .option("basePath", self._table_dir)
-                .parquet(*paths)
+                .parquet(*[os.path.join(self._table_dir, p) for p in files])
+                if files
+                else None
             )
+            with self.lock:
+                if files == self._table_files:
+                    self._install_base_locked(scan)
+                    return
+
+    def _install_base_locked(self, scan: DataFrame | None) -> None:
+        """A committed flush's frame leaves the union in the same step
+        (any base installed after that commit lists its files). When the
+        table carries the ``_day`` partition column, the preloaded part
+        derives it from ``_time`` so the planner's day pruning never sees
+        a NULL ``_day`` (allowMissingColumns would fill one, and a pruned
+        query would silently drop every preloaded row)."""
+        from victorialogs_spark.schema import with_day_partition, with_tenant
+
+        parts = [] if scan is None else [scan]
         pre = self._preloaded
         if pre is not None:
             if (
@@ -359,6 +401,10 @@ class _State:
                 else base.unionByName(p, allowMissingColumns=True)
             )
         self._base = base
+        self._base_gen += 1
+        if self._flush_committed:
+            self._flushing, self._flush_committed = None, False
+        self._rebuild_logs_locked()
 
     def _compact_full_days(self) -> None:
         """Rewrite each day partition with >= COMPACT_FILES live files
@@ -366,9 +412,9 @@ class _State:
         input). Runs inside the flush thread after its commit (table
         writes are single-flight, so listing diffs stay attributable);
         the Spark work holds no lock. Old files are NOT deleted at
-        commit — they tombstone into _table_tombs and are reaped one
-        commit later (or, after a kill, at restore where the manifest
-        marks them orphans) so plans in flight never lose files."""
+        commit — they tombstone into _table_tombs, and a later flush
+        reaps them once no request reads a base that lists them (or,
+        after a kill, restore does: the manifest marks them orphans)."""
         with self.lock:
             days: dict[str, list[str]] = {}
             for p in self._table_files:
@@ -434,7 +480,7 @@ class _State:
             if not set(files) <= set(self._table_files):
                 # retention (or a manual apply) dropped this day
                 # while we rewrote it: abandon — the new files stay
-                # unlisted and the next flush (or restore) reaps them
+                # unlisted and a later flush (or restore) reaps them
                 self._table_tombs.update(new_files)
                 return
             self._table_files = sorted(
@@ -442,8 +488,7 @@ class _State:
             )
             self._table_tombs.update(files)
             self._write_manifest_locked()
-            self._replan_base_locked()
-            self._rebuild_logs_locked()
+        self._replan_base()
         self.inc("vl_spill_compactions_total", "status", "ok")
 
     def _retention_keep_from(self) -> str:
@@ -502,33 +547,17 @@ class _State:
             dropped = self._apply_retention_locked(keep_days_from)
             if dropped:
                 self._write_manifest_locked()
-                self._replan_base_locked()
-                self._rebuild_logs_locked()
-            return dropped
+        if dropped:
+            self._replan_base()
+        return dropped
 
-    def append(self, df: DataFrame) -> int:
-        """Append a parsed request frame; returns its row count. The
-        incoming frame is localCheckpoint-ed FIRST, so the request body
-        is parsed exactly once: the count reads the materialized blocks
-        (a separate count() on the lazy frame re-ran the whole parse —
-        ingest CPU doubled for every protocol, round-6 advice), and
-        queries over the union stop re-parsing request bodies while
-        they wait for the depth checkpoint.
-
-        The Spark work (parse, checkpoint, count) runs OUTSIDE the state
-        lock — it touches only this request's frame. The round-12 wave
-        held the lock through all of it, so every reader's df() queued
-        behind ~1 s of ingest work per post: the like-for-like r13
-        control measured read p95 0.40 s vs 2.21 s mixed (5.6x) before
-        this change. Only the union/bookkeeping takes the lock."""
-        df = df.localCheckpoint(eager=True)
-        n = df.count()
-        # post-checkpoint coalesce (no recompute, no shuffle): the
-        # parse ran at full parallelism, but a ~10^3-row batch does
-        # not need 32 near-empty partitions in every later read —
-        # un-coalesced, a 20-request pending union cost readers 640
-        # scan tasks (measured: read p95 7.3 s mixed-wave)
-        df = df.coalesce(max(1, n // 100_000 + (1 if n % 100_000 else 0)))
+    def append(self, df: DataFrame, n: int) -> None:
+        """Append a request frame of ``n`` rows. The frame is a
+        driver-side local relation (sources/ndjson.rows_frame), so an
+        append runs no Spark job: the rows' one Spark job is the flush
+        that writes them to the table. Only the union bookkeeping takes
+        the lock; with no spill dir, the lineage checkpoint runs after
+        it is released."""
         with self.lock:
             if (
                 self._base is not None
@@ -558,28 +587,31 @@ class _State:
             )
             self._pending_rows += n
             self._depth += 1
+            pending = self._pending
+            consolidate = False
             if self._spill_ok:
                 # with a spill dir, lineage consolidation IS the flush:
                 # detaching the union to the background writer bounds
                 # plan depth without ever running an O(pending) Spark
-                # job under the lock (the in-lock depth checkpoint was
-                # the biggest remaining lock-holder after the parse
-                # moved out — it fired every 16 posts, ahead of the
-                # 20k-row flush). Early flushes write smaller table
+                # job under the lock. Early flushes write smaller table
                 # files; day compaction rewrites them later anyway.
                 if (
                     self._pending_rows >= self.FLUSH_ROWS
                     or self._depth >= self.CHECKPOINT_EVERY
                 ):
                     self._start_flush_locked()
-            elif self._depth >= self.CHECKPOINT_EVERY:
-                # no spill dir: consolidate the union-of-checkpoints
-                # lineage in place (and free the per-request blocks it
-                # referenced) — O(pending), never O(total ingested)
-                self._pending = self._pending.localCheckpoint(eager=True)
-                self._depth = 0
+            else:
+                consolidate = self._depth >= self.CHECKPOINT_EVERY
             self._rebuild_logs_locked()
-            return n
+        if consolidate:
+            # no spill dir: consolidate the union lineage in place —
+            # O(pending), never O(total ingested); an append that
+            # landed meanwhile leaves it to the next one
+            done = pending.localCheckpoint(eager=True)
+            with self.lock:
+                if self._pending is pending:
+                    self._pending, self._depth = done, 0
+                    self._rebuild_logs_locked()
 
     def _detach_locked(self) -> tuple[DataFrame, int] | None:
         """Claim the single-flight writer and move the pending union into
@@ -589,6 +621,7 @@ class _State:
         if self._writing or self._pending is None or not self._spill_ok:
             return None
         self._writing = True
+        self._flush_committed = False
         self._flushing, rows = self._pending, self._pending_rows
         self._pending = None
         self._pending_rows = 0
@@ -597,9 +630,8 @@ class _State:
 
     def _start_flush_locked(self) -> None:
         """Hand the pending union to a background flusher: the parquet
-        write (the next-biggest lock-held job after the parse moved out)
-        runs with NO lock held — the detached frame is checkpointed and
-        immutable, and readers keep seeing its rows via the
+        write runs with NO lock held — the detached frame is immutable,
+        and readers keep seeing its rows via the
         ``_flushing`` leg of _rebuild_logs_locked until the commit swaps
         them into the table scan atomically."""
         job = self._detach_locked()
@@ -630,24 +662,24 @@ class _State:
     def _flush_bg(self, frame: DataFrame, rows: int) -> None:
         """Append one detached pending union to the day-partitioned
         table, commit it, run the day compaction check, then reap the
-        files tombstoned before this flush began — one commit later, so
-        plans in flight never lose files. Falls back to the pure
-        in-memory union (pre-flush behavior) if parquet can't store this
-        schema — e.g. ingested field names containing characters the
-        parquet writer rejects, which would fail every later flush too."""
+        files tombstoned before this flush began (:meth:`_reap`). Falls
+        back to the pure in-memory union (pre-flush behavior) if parquet
+        can't store this schema — e.g. ingested field names containing
+        characters the parquet writer rejects, which would fail every
+        later flush too."""
         from victorialogs_spark.streaming.ingest import append_day_partitioned
 
         with self.lock:
-            reap = set(self._table_tombs)
+            reap, gen = set(self._table_tombs), self._base_gen
         try:
             try:
-                # the pending union carries ~32 partitions PER REQUEST
-                # (the parse parallelism); written as-is each flush would
-                # emit hundreds of near-empty files and every later read
-                # would pay a task per file. One output task per ~500k
-                # rows keeps the table at O(flush count) files. Table
-                # writes are single-flight, so the before/after diff
-                # names exactly this flush's files.
+                # the pending union carries a few partitions PER REQUEST
+                # (a local relation's scan parallelism); written as-is
+                # each flush would emit many near-empty files and every
+                # later read would pay a task per file. One output task
+                # per ~500k rows keeps the table at O(flush count)
+                # files. Table writes are single-flight, so the
+                # before/after diff names exactly this flush's files.
                 before = set(self._list_table_files())
                 append_day_partitioned(
                     frame.coalesce(max(1, rows // 500_000)), self._table_dir
@@ -677,21 +709,14 @@ class _State:
                 if self.retention_days is not None:
                     self._apply_retention_locked(self._retention_keep_from())
                 self._write_manifest_locked()
-                self._replan_base_locked()
-                self._flushing = None
-                self._rebuild_logs_locked()
+                self._flush_committed = True
+            self._replan_base()
             self.inc("vl_spill_flushes_total", "status", "ok")
             try:
                 self._compact_full_days()
             except Exception:  # noqa: BLE001 — per-day gating inside
                 self.inc("vl_spill_compactions_total", "status", "error")
-            for rel in sorted(reap):
-                try:
-                    os.remove(os.path.join(self._table_dir, rel))
-                except FileNotFoundError:
-                    pass
-            with self.lock:
-                self._table_tombs -= reap
+            self._reap(reap, gen)
         finally:
             with self.lock:
                 self._writing = False
@@ -704,6 +729,23 @@ class _State:
                     # flush so an idle tail above the threshold never
                     # lingers in memory waiting for another request
                     self._start_flush_locked()
+
+    def _reap(self, tombs: set[str], gen: int) -> None:
+        """Delete ``tombs``, the files tombstoned before a flush that
+        began at base generation ``gen`` and has since installed its own
+        base: no base after ``gen`` lists them. A request still reading a
+        base from ``gen`` or before (acquire) may scan them, so they then
+        wait for a later flush."""
+        with self.lock:
+            if min(self._readers, default=gen + 1) <= gen:
+                return
+        for rel in sorted(tombs):
+            try:
+                os.remove(os.path.join(self._table_dir, rel))
+            except FileNotFoundError:
+                pass
+        with self.lock:
+            self._table_tombs -= tombs
 
     def _rebuild_logs_locked(self) -> None:
         from victorialogs_spark.schema import with_day_partition
@@ -727,18 +769,6 @@ class _State:
                 part = with_day_partition(part)
             out = out.unionByName(part, allowMissingColumns=True)
         self.logs = out
-
-
-def _lines_df(
-    spark: SparkSession, body: bytes, split: bool = True
-) -> DataFrame:
-    """HTTP body → one-column text DataFrame (the shape every protocol
-    parser accepts). split=False keeps the body as ONE row — loki/datadog
-    bodies are a single JSON document (possibly pretty-printed across
-    lines) that the parser json.loads whole."""
-    text = body.decode("utf-8", "replace")
-    lines = (text.splitlines() or [""]) if split else [text]
-    return spark.createDataFrame([(l,) for l in lines], "value string")
 
 
 def _iter_json_values(df: DataFrame):
@@ -818,21 +848,26 @@ class _Handler(BaseHTTPRequestHandler):
 
         return u32("AccountID"), u32("ProjectID")
 
-    def _append(self, df: DataFrame, proto: str | None = None) -> None:
-        """Stamp ingested rows with the request's tenant before they join
-        the shared frame — physical per-tenant grouping, like the
-        reference's per-tenant storage paths. ``proto`` feeds the
-        vl_rows_ingested_total{type=...} counter; the count comes back
-        from append()'s already-materialized checkpoint, so the body is
-        parsed once (the reference also counts every parsed row,
-        insertutil/common_params.go:318)."""
+    def _append(self, df: DataFrame | None, n: int, proto: str) -> None:
+        """Stamp a request's ``n`` parsed rows with its tenant before
+        they join the shared frame — physical per-tenant grouping, like
+        the reference's per-tenant storage paths — and count them under
+        vl_rows_ingested_total{type=proto} (the reference also counts
+        every parsed row, insertutil/common_params.go:318)."""
         from victorialogs_spark.schema import with_tenant
 
-        n = self.state.append(with_tenant(df, *self._tenant()))
-        if proto:
-            # incremented AFTER the append succeeds — an append failure
-            # must not leave the metric claiming rows /select can't return
-            self.state.inc("vl_rows_ingested_total", "type", proto, n)
+        tenant = self._tenant()
+        if n:
+            self.state.append(with_tenant(df, *tenant), n)
+        # incremented AFTER the append succeeds — an append failure
+        # must not leave the metric claiming rows /select can't return
+        self.state.inc("vl_rows_ingested_total", "type", proto, n)
+
+    def _append_rows(
+        self, rows: list[dict], stream_fields: list[str] | None, proto: str
+    ) -> None:
+        df = rows_frame(self.state.spark, rows, stream_fields) if rows else None
+        self._append(df, len(rows), proto)
 
     def _send(self, code: int, body: bytes, ctype: str = "application/json"):
         self.send_response(code)
@@ -904,9 +939,15 @@ class _Handler(BaseHTTPRequestHandler):
                 # the counters dict without bound
                 if path in _METERED_PATHS:
                     self.state.inc("vl_http_requests_total", "path", path)
-                if path.startswith("/select/"):
-                    return self._select(path, params)
-                return self._insert(path, params)
+                if path.startswith("/insert/"):
+                    return self._insert(path, params)
+                # the request pins the frame's table files until its
+                # response is written (_State._reap)
+                df, self._lease = self.state.acquire()
+                try:
+                    return self._select(path, params, df)
+                finally:
+                    self.state.release(self._lease)
             return self._send(404, b"unknown path\n", "text/plain")
         except BrokenPipeError:
             pass
@@ -918,9 +959,9 @@ class _Handler(BaseHTTPRequestHandler):
             except Exception:
                 pass
 
-    def _select(self, path: str, params):
+    def _select(self, path: str, params, df: DataFrame):
         st = self.state
-        spark, df = st.spark, st.df()
+        spark = st.spark
         if "tenant" in df.columns:
             # queries run over ONE tenant, chosen by the same headers as
             # ingestion (reference: every /select handler resolves
@@ -1013,8 +1054,10 @@ class _Handler(BaseHTTPRequestHandler):
                 # the lambda re-reads state, keeping liveness; each poll
                 # re-applies the request's tenant + time bounds +
                 # extra filters (the reference routes tail through
-                # parseCommonArgs too, logsql.go:501)
-                d = st.df()
+                # parseCommonArgs too, logsql.go:501). The previous
+                # poll's job is done, so its pin moves to the new frame
+                st.release(self._lease)
+                d, self._lease = st.acquire()
                 if "tenant" in d.columns:
                     d = for_tenant(d, acct, proj).drop("tenant")
                 if lo is not None or hi is not None:
@@ -1108,13 +1151,18 @@ class _Handler(BaseHTTPRequestHandler):
         return self._send(404, b"unknown /select path\n", "text/plain")
 
     def _insert(self, path: str, params):
-        st = self.state
+        """Each body parses on the driver with its protocol's pure row
+        parser into one local relation: an insert runs no Spark job."""
+        from victorialogs_spark.sources import protocols as pr
+
         body = getattr(self, "_body", b"")
+        text = body.decode("utf-8", "replace")
+        ctype = (self.headers.get("Content-Type") or "").split(";")[0]
         if path == "/insert/ready":
             # readiness probe for agents (app/vlinsert/main.go:66)
             return self._send(200, b"ok\n", "text/plain")
         if path == "/insert/jsonline":
-            lines = body.decode("utf-8", "replace").splitlines()
+            lines = text.splitlines()
             sf = self._get(params, "_stream_fields", "")
             # _time_field/_msg_field are comma-separated CANDIDATE lists
             # (httputil.GetArray; apptest key_concepts corpus)
@@ -1125,12 +1173,14 @@ class _Handler(BaseHTTPRequestHandler):
                 m for m in self._get(params, "_msg_field", "_msg").split(",") if m
             ] or ["_msg"]
             df = ingest_ndjson(
-                st.spark, lines,
+                self.state.spark, lines,
                 time_field=tfs,
                 msg_field=mfs,
                 stream_fields=[s for s in sf.split(",") if s] or None,
             )
-            self._append(df, "jsonline")
+            # ndjson_row skips exactly the blank lines and raises on any
+            # other line that yields no row: this is the frame's count
+            self._append(df, sum(1 for l in lines if l.strip()), "jsonline")
             return self._send(200, b"", "text/plain")
         if path == "/insert/elasticsearch/_bulk":
             # app/vlinsert/elasticsearch: strictly-alternating bulk NDJSON
@@ -1138,20 +1188,13 @@ class _Handler(BaseHTTPRequestHandler):
             # fields (GetCommonParams defaults: _time, no msg rename) —
             # filebeat-style senders pass ?_time_field=@timestamp&
             # _msg_field=message; a malformed request 400s whole
-            from victorialogs_spark.sources.protocols import (
-                es_bulk_rows,
-                parsed_rows_df,
-            )
-
             def _arr(name, default):
                 vals = [v for p in params.get(name, []) for v in p.split(",") if v]
                 return vals or default
 
             try:
-                rows = es_bulk_rows(
-                    body.decode("utf-8", "replace"),
-                    _arr("_time_field", ["_time"]),
-                    _arr("_msg_field", []),
+                rows = pr.es_bulk_rows(
+                    text, _arr("_time_field", ["_time"]), _arr("_msg_field", [])
                 )
             except ValueError as e:
                 return self._send(
@@ -1159,10 +1202,7 @@ class _Handler(BaseHTTPRequestHandler):
                     f"cannot decode bulk request: {e}\n".encode(),
                     "text/plain",
                 )
-            if rows:
-                self._append(
-                    parsed_rows_df(st.spark, rows), "elasticsearch_bulk"
-                )
+            self._append_rows(rows, None, "elasticsearch_bulk")
             # ES clients require a JSON ack with per-item status
             return self._send(200, b'{"took":0,"errors":false,"items":[]}')
         if path == "/insert/elasticsearch/":
@@ -1171,67 +1211,46 @@ class _Handler(BaseHTTPRequestHandler):
             return self._send(
                 200, b'{"version":{"number":"8.9.0"}}', "application/json"
             )
+        # the remaining protocols ingest nothing from a body their parser
+        # rejects, as parse_payloads drops a malformed payload
         if path == "/insert/loki/api/v1/push":
             # content negotiation like the reference (loki.go:35): only
             # application/json takes the JSON path; everything else is
             # protobuf, snappy-compressed unless Content-Encoding says
             # otherwise (loki_protobuf.go:44)
-            ctype = (self.headers.get("Content-Type") or "").split(";")[0]
             if ctype == "application/json":
-                from victorialogs_spark.sources.protocols import parse_loki_push
-
-                self._append(
-                    parse_loki_push(
-                        st.spark, _lines_df(st.spark, body, split=False)
-                    ),
-                    "loki",
-                )
+                rows = payload_rows(pr.loki_json_rows, text)
             else:
-                from victorialogs_spark.sources.protocols import (
-                    parse_loki_protobuf,
-                )
+                from victorialogs_spark.sources.loki_pb import snappy_decode
 
-                enc = self.headers.get("Content-Encoding") or "snappy"
-                self._append(
-                    parse_loki_protobuf(
-                        st.spark, [body], snappy=(enc == "snappy")
-                    ),
-                    "loki",
+                snappy = (self.headers.get("Content-Encoding") or "snappy") == "snappy"
+                rows = payload_rows(
+                    lambda b: pr.loki_pb_rows(snappy_decode(b) if snappy else b),
+                    body,
                 )
+            self._append_rows(rows, None, "loki")
             return self._send(204, b"", "text/plain")
         if path == "/insert/datadog/api/v2/logs":
-            from victorialogs_spark.sources.protocols import (
-                parse_datadog_logs,
-            )
-
-            self._append(
-                parse_datadog_logs(
-                    st.spark, _lines_df(st.spark, body, split=False)
-                ),
-                "datadog",
-            )
+            self._append_rows(payload_rows(pr.datadog_rows, text), None, "datadog")
             return self._send(202, b'{"status":"accepted"}')
         if path == "/insert/journald":
-            from victorialogs_spark.sources.protocols import (
-                parse_journald_export,
+            self._append_rows(
+                payload_rows(pr.journald_entries, text),
+                pr.JOURNALD_STREAM_FIELDS, "journald",
             )
-
-            blob = st.spark.createDataFrame(
-                [(body.decode("utf-8", "replace"),)], "value string"
-            )
-            self._append(parse_journald_export(st.spark, blob), "journald")
             return self._send(200, b"", "text/plain")
         if path == "/insert/opentelemetry/v1/logs":
             # protobuf ONLY, like the reference (opentelemetry.go:27)
-            ctype = (self.headers.get("Content-Type") or "").split(";")[0]
             if ctype == "application/json":
                 return self._send(
                     415, b"json encoding isn't supported; use protobuf\n",
                     "text/plain",
                 )
-            from victorialogs_spark.sources.protocols import parse_otlp_protobuf
+            from victorialogs_spark.sources.otlp_pb import decode_logs_data
 
-            self._append(parse_otlp_protobuf(st.spark, [body]), "opentelemetry")
+            self._append_rows(
+                payload_rows(decode_logs_data, body), None, "opentelemetry"
+            )
             return self._send(200, b"", "text/plain")
         return self._send(404, b"unknown /insert path\n", "text/plain")
 

@@ -176,43 +176,27 @@ def ingest_ndjson(
     (_time_field/_msg_field/_stream_fields/ignore_fields/extra_fields,
     app/vlinsert/insertutil/common_params.go:32-100) — the server's
     /insert/jsonline path. Lines are parsed on the driver with the shared
-    row transform (sources/ndjson.ndjson_row) into one wide frame:
-    ``_time``, then every key seen, sorted; no ``_other`` spill map. A
-    line that is not a JSON object raises ValueError. For files too big
+    row transform (sources/ndjson.ndjson_row) into one local relation
+    (sources/ndjson.rows_frame): ``_time``, then every key seen, sorted.
+    A line that is not a JSON object raises ValueError. For files too big
     for the driver use sources/ndjson.ingest_ndjson_distributed, or
     streaming/ingest.py for a watched directory.
     """
-    from victorialogs_spark.sources.ndjson import (
-        event_time,
-        finish_row,
-        ndjson_row,
-    )
+    from victorialogs_spark.sources.ndjson import ndjson_row, rows_frame
 
     if isinstance(path_or_lines, str):
         path_or_lines = [
             r.value for r in spark.read.text(path_or_lines).collect()
         ]
-    rows: list[tuple[str, dict[str, str]]] = []
-    keys: set[str] = set()
+    rows = []
     for line in path_or_lines:
         flat = ndjson_row(
             line, time_field, msg_field, ignore_fields, extra_fields,
             decolorize_fields,
         )
         if flat is not None:
-            rows.append(finish_row(flat, default_msg_value))
-            keys.update(flat)
-    cols = sorted(keys)
-    data = [(t, *(flat.get(c, "") for c in cols)) for t, flat in rows]
-    df = spark.createDataFrame(
-        data, schema=", ".join(f"`{c}` string" for c in ["_time", *cols])
-    )
-    df = df.withColumn("_time", event_time(F.col("_time")))
-    # _stream always exists — rows ingested without stream fields belong
-    # to the empty stream "{}" (log_rows.go; r15 log-rows corpus)
-    return with_stream_id(
-        df, [f for f in stream_fields or [] if f in df.columns]
-    )
+            rows.append(flat)
+    return rows_frame(spark, rows, stream_fields or [], default_msg_value)
 
 
 # columns stored as parquet TIMESTAMP(NANOS), which Spark's reader rejects

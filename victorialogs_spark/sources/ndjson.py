@@ -14,9 +14,10 @@ sampled key promotion to top-level string columns (the "promoted
 columns + spill map" model from SURVEY.md §1.2) and the stream id.
 
 ``ingest_ndjson_distributed`` (NDJSON files at scale, never materialized
-on the driver) and streaming/ingest.start_ndjson_ingest run this path;
-``schema.ingest_ndjson`` (the server's /insert/jsonline) runs the same
-:func:`ndjson_row` / :func:`finish_row` in a driver-side loop.
+on the driver) and streaming/ingest.start_ndjson_ingest run this path.
+A request body is small enough for the driver: :func:`rows_frame` puts
+the same parsed rows into one local relation (``schema.ingest_ndjson``
+and the server's /insert/* handlers).
 """
 
 from __future__ import annotations
@@ -137,8 +138,8 @@ def parse_payloads(
     """Payloads → (_time_raw, fields) rows on executors, in Arrow
     batches. ``frame`` holds a ``value`` text column or a binary
     ``content`` column; ``parse`` turns one payload into parsed rows
-    (:func:`finish_row` completes each). A payload whose parse raises is
-    dropped whole: malformed input never fails the ingest."""
+    (:func:`finish_row` completes each) and :func:`payload_rows` drops a
+    payload whose parse raises."""
     col = "content" if "content" in frame.columns else "value"
 
     def _emit(batches: Iterator) -> Iterator:
@@ -147,11 +148,7 @@ def parse_payloads(
         for pdf in batches:
             times, fields = [], []
             for payload in pdf[col]:
-                try:
-                    rows = parse(payload)
-                except Exception:
-                    continue
-                for flat in rows:
+                for flat in payload_rows(parse, payload):
                     t, flat = finish_row(flat, default_msg)
                     times.append(t)
                     fields.append(flat)
@@ -164,6 +161,15 @@ def parse_payloads(
                 )
 
     return frame.mapInPandas(_emit, PARSED_SCHEMA)
+
+
+def payload_rows(parse: Callable[[Any], list[dict]], payload) -> list[dict]:
+    """``parse(payload)``, or no rows when it raises: a malformed payload
+    is dropped whole and never fails the ingest."""
+    try:
+        return parse(payload)
+    except Exception:  # noqa: BLE001 — any parser error means "malformed"
+        return []
 
 
 def parse_ndjson_lines(
@@ -188,9 +194,10 @@ def parse_ndjson_lines(
     return parse_payloads(lines, one, default_msg_value)
 
 
-def event_time(raw: Column) -> Column:
+def event_time(raw: Column, now: Column | None = None) -> Column:
     """A raw ``_time`` string (RFC3339 / unix stamp / empty) → timestamp,
-    ingest-time now() when it is missing or unparseable."""
+    the ingest time ``now`` (default ``current_timestamp()``) when it is
+    missing or unparseable."""
     return F.coalesce(
         # try_*: ANSI mode makes plain to_timestamp THROW on e.g. unix-secs;
         # numeric stamps auto-detect their unit (s/ms/µs/ns, the
@@ -199,7 +206,7 @@ def event_time(raw: Column) -> Column:
         # '0' means "no timestamp" and takes now() like ''/'-'
         # (insertutil parseTimestamp; r15 ingest-timestamp corpus)
         unix_auto_timestamp(F.nullif(raw, F.lit("0"))),
-        F.current_timestamp(),
+        F.current_timestamp() if now is None else now,
     )
 
 
@@ -251,13 +258,69 @@ def finish_parsed(
     stream id. ``stream_fields=None`` keeps a parser-computed per-row
     ``_stream`` (loki labels, OTLP resource attributes) and only hashes
     it; otherwise ``_stream`` is built from the listed fields."""
-    out = promote_columns(with_event_time(parsed), promote_keys)
+    return _with_stream(
+        promote_columns(with_event_time(parsed), promote_keys), stream_fields
+    )
+
+
+def _with_stream(out: DataFrame, stream_fields: list[str] | None) -> DataFrame:
     if stream_fields is None and "_stream" in out.columns:
         return attach_stream_id(out)
     # every row belongs to a stream — without stream fields it is the
     # empty one "{}" (log_rows.go; r15 key-concepts corpus)
     return with_stream_id(
         out, [f for f in stream_fields or [] if f in out.columns]
+    )
+
+
+# engine-owned names a user field cannot take as a column: a literal
+# ``_day`` would hijack the partition column (append_day_partitioned and
+# retention would trust data-controlled day labels), ``_other`` is the
+# spill map itself
+_SPILLED = ("_day", "_other")
+
+
+def rows_frame(
+    spark: SparkSession,
+    rows: list[dict[str, str]],
+    stream_fields: list[str] | None,
+    default_msg: str = DEFAULT_MSG,
+) -> DataFrame:
+    """Parsed rows (consumed) → log rows, built on the driver for a
+    request body. The rows go into one Arrow table, which
+    ``createDataFrame`` plans as a LocalRelation: building the frame runs
+    no Spark job and starts no Python worker. The optimizer evaluates
+    the projections on top (event time, stream id, the server's tenant)
+    over those rows while planning, so a read whose filter excludes
+    them (another tenant) prunes the frame before any job runs.
+
+    Every key becomes a string column ('' where a row lacks it), sorted
+    after ``_time``; only the engine-owned ``_day``/``_other`` keys spill
+    into an ``_other`` map, as in :func:`promote_columns`. A missing or
+    unparseable ``_time`` takes this call's instant, bound as a literal:
+    ``current_timestamp()`` would re-evaluate in every query over the
+    never-materialized frame. ``stream_fields`` as in
+    :func:`finish_parsed`."""
+    import time
+
+    import pyarrow as pa
+
+    now = F.timestamp_micros(F.lit(time.time_ns() // 1000))
+    data = [finish_row(flat, default_msg) for flat in rows]
+    keys = sorted({k for _, flat in data for k in flat})
+    cols = {"_time": pa.array([t for t, _ in data], pa.string())}
+    for k in keys:
+        if k not in _SPILLED:
+            cols[k] = pa.array([f.get(k, "") for _, f in data], pa.string())
+    spilled = [k for k in keys if k in _SPILLED]
+    if spilled:
+        cols["_other"] = pa.array(
+            [{k: f[k] for k in spilled if k in f} or None for _, f in data],
+            pa.map_(pa.string(), pa.string()),
+        )
+    df = spark.createDataFrame(pa.table(cols))
+    return _with_stream(
+        df.withColumn("_time", event_time(F.col("_time"), now)), stream_fields
     )
 
 

@@ -16,8 +16,9 @@ Covered formats (each a mapInPandas batch parser — executors only):
 
 The parsers accept payloads as text files / DataFrames of lines (binary
 files, ``content`` DataFrames or lists of ``bytes`` for the protobuf
-formats); the server's /insert/* handlers (http_server.py) feed them the
-request bodies.
+formats). The server's /insert/* handlers (http_server.py) call the pure
+per-payload row parsers (``es_bulk_rows``, ``loki_json_rows``, ...) on a
+request body and build the frame with sources/ndjson.rows_frame.
 """
 
 from __future__ import annotations
@@ -28,9 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from victorialogs_spark.schema import flatten_json
 from victorialogs_spark.sources.ndjson import (
-    PARSED_SCHEMA,
     finish_parsed,
-    finish_row,
     parse_payloads,
     payload_frame,
 )
@@ -172,21 +171,6 @@ def es_bulk_rows(
         flat = {k: v for k, v in flat.items() if v != ""}
         flat["_time"] = unix_frac_seconds(ts_ns, 10**9) if ts_ns else ""
         rows.append(flat)
-
-
-def parsed_rows_df(
-    spark: SparkSession,
-    rows: list[dict],
-    stream_fields: list[str] | None = None,
-    promote_keys: list[str] | None = None,
-) -> DataFrame:
-    """Driver-side rows (as produced by the pure *_rows parsers) → the
-    finished logs DataFrame. The HTTP layer uses this for protocols whose
-    request-level semantics need stateful/strict parsing (ES bulk
-    alternation) that a per-line distributed parser can't express."""
-    data = [finish_row(dict(flat)) for flat in rows]
-    parsed = spark.createDataFrame(data, PARSED_SCHEMA)
-    return finish_parsed(parsed, stream_fields, promote_keys)
 
 
 # ------------------------------------------------------- unix timestamps
@@ -717,6 +701,10 @@ def parse_syslog_lines(
 # ----------------------------------------------------------------- journald
 
 
+# journald's default stream fields (journald.go defaultStreamFields)
+JOURNALD_STREAM_FIELDS = ["_MACHINE_ID", "_HOSTNAME", "_SYSTEMD_UNIT"]
+
+
 def parse_journald_export(
     spark: SparkSession,
     path_or_blobs,
@@ -730,10 +718,7 @@ def parse_journald_export(
     parsed = parse_payloads(
         payload_frame(spark, path_or_blobs, wholetext=True), journald_entries
     )
-    # journald's default stream fields (journald.go defaultStreamFields)
-    return finish_parsed(
-        parsed, ["_MACHINE_ID", "_HOSTNAME", "_SYSTEMD_UNIT"], promote_keys
-    )
+    return finish_parsed(parsed, JOURNALD_STREAM_FIELDS, promote_keys)
 
 
 _JOURNALD_NAME_RE = __import__("re").compile(rb"^[A-Z_][A-Z0-9_]*$")
