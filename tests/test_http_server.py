@@ -353,6 +353,35 @@ def test_preloaded_table_survives_tenant_stamping(spark):
         srv.stop()
 
 
+def test_preloaded_table_is_tenant_scoped_before_any_insert(spark):
+    """A tenant-less preloaded table belongs to the default tenant from
+    request one: another tenant's read finds none of its rows, before
+    and after the first insert alike."""
+    from pyspark.sql import functions as F
+
+    pre = spark.createDataFrame(
+        [("2024-01-01T00:00:00Z", "preloaded row")], "_time string, _msg string"
+    ).withColumn("_time", F.to_timestamp("_time"))
+    srv = serve(spark, pre)
+    try:
+        def read(acct: str) -> bytes:
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{srv.port}/select/logsql/query?query=*",
+                headers={"AccountID": acct},
+            )
+            return urllib.request.urlopen(req).read()
+
+        assert read("9") == b""
+        assert b"preloaded row" in read("0")
+        _post(srv, "/insert/jsonline", json.dumps(
+            {"_time": "2024-01-01T00:00:01Z", "_msg": "posted row"}
+        ).encode())
+        assert read("9") == b""
+        assert b"preloaded row" in read("0")
+    finally:
+        srv.stop()
+
+
 def test_json_endpoints_stream_large_group_counts(spark):
     """The JSON-shaped endpoints stream via toLocalIterator — a
     stats_query_range over ~100k (group, step) rows must round-trip

@@ -559,18 +559,16 @@ def test_live_tailer_boundary_row_not_dropped(spark, tmp_path):
 
 
 def test_json_parser_corpus():
-    """Replay the reference's json_parser_test.go cases against BOTH
-    flatten implementations: schema.flatten_json (the ingest dict-level
-    helper, ParseLogMessage's 128-char config and the explicit
-    maxFieldLen cases of TestJSONParserTooLongFieldName) and
-    functions/jsonflat.flatten_json_message (the query-side scanner,
-    MaxInt config). Extracted at runtime — the corpus policy."""
+    """Replay the reference's json_parser_test.go cases against
+    functions/jsonflat.flatten_json_message in both configurations:
+    ingest's 128-char names (ParseLogMessage, and the explicit
+    maxFieldLen cases of TestJSONParserTooLongFieldName) and the unpack
+    pipe's unbounded names. Extracted at runtime — the corpus policy."""
     import json as _json
     import re
     from pathlib import Path
 
     from victorialogs_spark.functions.jsonflat import flatten_json_message
-    from victorialogs_spark.schema import flatten_json
 
     src = Path("/root/reference/lib/logstorage/json_parser_test.go").read_text()
 
@@ -599,10 +597,9 @@ def test_json_parser_corpus():
     ):
         data = m.group(1) if m.group(1) is not None else m.group(2)
         want = {} if m.group(3) == "nil" else _fields(m.group(3))
-        got_scan = flatten_json_message(data)
-        assert got_scan == want, f"jsonflat {data!r}: {got_scan} != {want}"
-        got_dict = flatten_json(_json.loads(data))
-        assert got_dict == want, f"flatten_json {data!r}: {got_dict} != {want}"
+        for maxlen in (None, 128):
+            got = flatten_json_message(data, maxlen)
+            assert got == want, f"maxlen={maxlen} {data!r}: {got} != {want}"
         n += 1
     assert n >= 3, f"extraction regressed: {n}"
 
@@ -613,14 +610,120 @@ def test_json_parser_corpus():
         r"\tf\(`([^`]*)`, (\d+), (\[\]Field\{[\s\S]*?\n\t\})\)", body
     ):
         data, maxlen, want = m.group(1), int(m.group(2)), _fields(m.group(3))
-        got = flatten_json(_json.loads(data), max_name_len=maxlen)
+        got = flatten_json_message(data, maxlen)
         assert got == want, f"maxlen={maxlen} {data!r}: {got} != {want}"
         n += 1
     assert n >= 3, f"too-long extraction regressed: {n}"
 
-    # failure cases must flatten to None (scanner) and raise (dict loads)
+    # failure cases leave the row unchanged
     for bad in ["", "{foo", "[1,2,3]", '{"foo",}']:
         assert flatten_json_message(bad) is None
+
+
+def _dict_model_flatten(obj: dict, prefix: str = "", max_name_len=None) -> dict:
+    """The flattener's semantics over a ``json.loads`` dict, kept as the
+    reference model of the property test below: nested objects dot-join,
+    strings decode, nulls drop, other values keep their compact JSON
+    text, an empty top-level name is ``_msg``, and an object whose prefix
+    plus longest key exceeds ``max_name_len`` stays whole as compact
+    JSON under the prefix. It re-renders numbers, so it only models
+    documents whose numbers are already canonical."""
+    if max_name_len is not None and len(prefix) + max(
+        (len(k) for k in obj), default=0
+    ) > max_name_len:
+        return {
+            prefix[:-1] or "_msg": json.dumps(
+                obj, separators=(",", ":"), ensure_ascii=False
+            )
+        }
+    out = {}
+    for k, v in obj.items():
+        name = prefix + k or "_msg"
+        if isinstance(v, dict):
+            out.update(_dict_model_flatten(v, name + ".", max_name_len))
+        elif isinstance(v, str):
+            out[name] = v
+        elif v is not None:
+            out[name] = json.dumps(v, separators=(",", ":"), ensure_ascii=False)
+    return out
+
+
+def test_flattener_matches_dict_model_property():
+    """flatten_json_message equals the dict model on random documents
+    with canonical numbers (json.dumps output), with and without the
+    128-char name rule: escapes, non-ASCII text, nesting, arrays of
+    objects, nulls, empty and long names, NaN/±Infinity."""
+    import random
+
+    from victorialogs_spark.functions.jsonflat import flatten_json_message
+
+    rng = random.Random(1234)
+    alphabet = ["a", "b", ".", '"', "\\", "\n", "\t", "é", "日", "😀", "x" * 7]
+
+    def text() -> str:
+        return "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 5)))
+
+    def name() -> str:
+        r = rng.random()
+        if r < 0.1:
+            return ""
+        if r < 0.2:
+            return "k" * rng.randint(40, 140)
+        return text()
+
+    def value(depth: int):
+        r = rng.random()
+        if depth > 3 or r < 0.3:
+            return text()
+        if r < 0.45:
+            return rng.choice([0, -7, 10**20, 1.5, -0.25, 1e-7, 3e100])
+        if r < 0.5:
+            return rng.choice([float("nan"), float("inf"), float("-inf")])
+        if r < 0.6:
+            return rng.choice([True, False, None])
+        if r < 0.75:
+            return [value(depth + 1) for _ in range(rng.randint(0, 3))]
+        return obj(depth + 1)
+
+    def obj(depth: int) -> dict:
+        return {name(): value(depth) for _ in range(rng.randint(0, 4))}
+
+    def nan_safe(d):
+        # NaN != NaN: compare texts, which is what the fields are anyway
+        return None if d is None else json.dumps(d, sort_keys=True)
+
+    for _ in range(3000):
+        doc = obj(0)
+        text_doc = json.dumps(
+            doc, ensure_ascii=rng.random() < 0.5,
+            separators=rng.choice([(",", ":"), (", ", ": ")]),
+        )
+        for maxlen in (None, 128):
+            got = flatten_json_message(text_doc, maxlen)
+            want = _dict_model_flatten(doc, "", maxlen)
+            assert nan_safe(got) == nan_safe(want), (text_doc, maxlen)
+
+
+def test_flattener_keeps_raw_tokens_and_rejects_non_json():
+    """Numbers and NaN/±Infinity keep their source text, in fields and
+    in re-rendered arrays and subtrees. Spellings that are not JSON
+    (fastjson takes them) make the document unparseable: the flattener
+    returns None, so ingest rejects the line and unpack_json leaves the
+    row unchanged."""
+    from victorialogs_spark.functions.jsonflat import flatten_json_message
+
+    doc = '{"d":1.20,"e":1e5,"z":-0,"big":1e400,"arr":[1.50,2,NaN],"o":{"n":-Infinity}}'
+    want = {"d": "1.20", "e": "1e5", "z": "-0", "big": "1e400",
+            "arr": "[1.50,2,NaN]", "o.n": "-Infinity"}
+    assert flatten_json_message(doc) == want
+    assert flatten_json_message(doc, 128) == want
+    # a too-long name keeps the subtree's raw tokens and duplicate members
+    long = "k" * 130
+    assert flatten_json_message(
+        '{"o":{"%s":1.0, "a":2, "a":3e0}}' % long, 128
+    ) == {"o": '{"%s":1.0,"a":2,"a":3e0}' % long}
+    for bad in ("nan", "inf", "-inf", ".5", "1.", "01", "+1", "0x1F"):
+        assert flatten_json_message('{"a":%s}' % bad) is None, bad
 
 
 def test_ingest_timestamp_corpus(spark):

@@ -1,8 +1,10 @@
 """/insert/* bodies become driver-side local relations: an insert that
 crosses no flush threshold runs no Spark job, its rows read the same
 before and after the flush, and each protocol's driver-built rows equal
-the distributed (mapInPandas) parser's rows for the same payload. Also
-the spill reap: a compacted-away table file outlives every /select
+the distributed (mapInPandas) parser's rows for the same payload. Rows
+read back without storage columns, and one JSON document keeps its
+numbers' source text through every JSON ingest path and unpack_json.
+Also the spill reap: a compacted-away table file outlives every /select
 request that took its frame before the compaction committed."""
 
 import json
@@ -88,13 +90,7 @@ def test_timeless_row_keeps_its_time_through_the_flush(spark, srv):
 
 
 def _wire(df) -> list[dict]:
-    rows = []
-    for r in df.collect():
-        d = ep.row_to_wire_dict(r)
-        # the distributed parsers' spill map of unpromoted keys; every
-        # key is promoted at this size, so it is empty
-        assert d.pop("_other", "{}") == "{}"
-        rows.append(d)
+    rows = [ep.row_to_wire_dict(r) for r in df.collect()]
     return sorted(rows, key=lambda d: json.dumps(d, sort_keys=True))
 
 
@@ -105,12 +101,7 @@ def test_driver_rows_equal_distributed_parser_rows(spark):
         snappy_decode,
         snappy_encode,
     )
-    from victorialogs_spark.sources.ndjson import (
-        PARSED_SCHEMA,
-        finish_parsed,
-        finish_row,
-        rows_frame,
-    )
+    from victorialogs_spark.sources.ndjson import rows_frame
     from victorialogs_spark.sources.otlp_pb import (
         decode_logs_data,
         encode_logs_data,
@@ -153,11 +144,8 @@ def test_driver_rows_equal_distributed_parser_rows(spark):
     ]
     bulk = ('{"index":{}}\n{"@timestamp":"2024-03-01T00:00:00Z",'
             '"message":"es row","svc":"es","deep":{"k":"v"}}\n')
-    es = pr.es_bulk_rows(bulk, ["@timestamp"], ["message"])
-    # the ES path built its frame from the same rows before, through a
-    # createDataFrame(list) of (_time_raw, fields) pairs
-    cases.append((es, None, finish_parsed(spark.createDataFrame(
-        [finish_row(dict(r)) for r in es], PARSED_SCHEMA), None, None)))
+    cases.append((pr.es_bulk_rows(bulk, ["@timestamp"], ["message"]), None,
+                  pr.parse_elasticsearch_bulk(spark, text_df(bulk))))
     for rows, stream_fields, want in cases:
         assert rows
         assert _wire(rows_frame(spark, rows, stream_fields)) == _wire(want)
@@ -172,6 +160,68 @@ def test_engine_owned_keys_spill_instead_of_becoming_columns(spark):
     assert "_day" not in df.columns
     got = {r["_msg"]: r["_other"] for r in df.collect()}
     assert got == {"a": {"_day": "garbage", "_other": "kept"}, "b": None}
+
+
+def test_storage_columns_stay_off_the_wire(spark, srv):
+    """Flushed rows read back without the ``_day`` partition column, a
+    user ``_day`` spilled into ``_other`` comes back under its own name,
+    and a distributed parser's empty spill map adds no field."""
+    from victorialogs_spark.sources.protocols import parse_loki_push
+
+    _post(srv, "/insert/jsonline", b'{"_time":"2024-01-01T00:00:00Z",'
+          b'"_msg":"plain"}\n{"_time":"2024-01-01T00:00:01Z",'
+          b'"_msg":"odd","_day":"garbage"}')
+    for phase in ("pending", "flushed"):
+        rows = {r["_msg"]: r for r in _query(srv)}
+        assert "_day" not in rows["plain"], phase
+        assert rows["odd"]["_day"] == "garbage", phase
+        assert not any("_other" in r for r in rows.values()), phase
+        srv.state.flush_now()
+        assert srv.state.wait_idle() and srv.state._pending is None
+
+    body = json.dumps({"streams": [{"stream": {"job": "x"},
+                                    "values": [["0", "loki row"]]}]})
+    df = parse_loki_push(spark, spark.createDataFrame([(body,)], "value string"))
+    assert "_other" in df.columns
+    (line,) = ep.query_ndjson(spark, df, "*")
+    assert set(json.loads(line)) == {"_time", "_msg", "_stream", "_stream_id", "job"}
+
+
+def test_one_document_same_values_through_every_json_path(spark, srv):
+    """One JSON document keeps its numbers' source text through
+    /insert/jsonline, /insert/elasticsearch/_bulk, Loki's parse_message
+    and nested unpack_json: the one flattener keeps raw tokens."""
+    import sys
+    from pathlib import Path
+
+    from victorialogs_spark.api import run_query
+    from victorialogs_spark.sources.protocols import parse_loki_push
+
+    sys.path.insert(0, str(Path(__file__).parent))
+    from test_engine import make_logs
+
+    doc = '"d":1.20,"e":1e5,"z":-0,"big":1e400,"arr":[1.50,2],"o":{"n":-0.0}'
+    want = {"d": "1.20", "e": "1e5", "z": "-0", "big": "1e400",
+            "arr": "[1.50,2]", "o.n": "-0.0"}
+
+    def picked(row: dict) -> dict:
+        return {k: row.get(k, "") for k in want}
+
+    _post(srv, "/insert/jsonline", ('{"src":"jl",%s}' % doc).encode())
+    _post(srv, "/insert/elasticsearch/_bulk",
+          ('{"index":{}}\n{"src":"es",%s}\n' % doc).encode())
+    assert picked(_query(srv, "src:jl")[0]) == want
+    assert picked(_query(srv, "src:es")[0]) == want
+
+    loki = json.dumps({"streams": [{"stream": {"src": "loki"},
+                                    "values": [["0", "{%s}" % doc]]}]})
+    df = parse_loki_push(spark, spark.createDataFrame([(loki,)], "value string"),
+                         parse_message=True)
+    assert picked(ep.row_to_wire_dict(df.collect()[0])) == want
+
+    out = run_query(spark, make_logs(spark, [{"_msg": "{%s}" % doc}]),
+                    "* | unpack_json from _msg | fields " + ", ".join(want))
+    assert picked(out.collect()[0].asDict()) == want
 
 
 def test_compacted_files_outlive_reads_in_flight(spark, tmp_path, monkeypatch):

@@ -7,7 +7,6 @@ from victorialogs_spark.sources.protocols import (
     parse_elasticsearch_bulk,
     parse_journald_export,
     parse_loki_push,
-    parse_otlp_logs,
     parse_syslog_lines,
 )
 
@@ -17,6 +16,8 @@ def _lines_df(spark, lines):
 
 
 def test_elasticsearch_bulk(spark):
+    """Each ``value`` row is one whole bulk body; a body that breaks the
+    command/document alternation is dropped whole."""
     lines = [
         json.dumps({"index": {"_index": "logs"}}),
         json.dumps({"@timestamp": "2024-01-01T00:00:01Z", "message": "hello",
@@ -24,7 +25,11 @@ def test_elasticsearch_bulk(spark):
         json.dumps({"create": {}}),
         json.dumps({"@timestamp": "2024-01-01T00:00:02Z", "message": "bye", "svc": "db"}),
     ]
-    df = parse_elasticsearch_bulk(spark, _lines_df(spark, lines), stream_fields=["svc"])
+    bad = "\n".join([json.dumps({"delete": {}}), json.dumps({"message": "x"})])
+    df = parse_elasticsearch_bulk(
+        spark, _lines_df(spark, ["\n".join(lines) + "\n", bad]),
+        stream_fields=["svc"],
+    )
     got = {r["_msg"]: r.asDict() for r in df.collect()}
     assert set(got) == {"hello", "bye"}
     assert got["hello"]["nested.a"] == "1"
@@ -46,28 +51,9 @@ def test_loki_push(spark):
     assert rows["line one"]["_time"].isoformat().startswith("2024-01-01T00:00:01")
 
 
-def test_otlp_logs(spark):
-    body = {"resourceLogs": [{
-        "resource": {"attributes": [{"key": "service.name",
-                                     "value": {"stringValue": "cart"}}]},
-        "scopeLogs": [{"logRecords": [
-            {"timeUnixNano": "1704067201000000000",
-             "body": {"stringValue": "oops"},
-             "severityText": "ERROR",
-             "attributes": [{"key": "http.status", "value": {"intValue": 500}}]},
-        ]}],
-    }]}
-    df = parse_otlp_logs(spark, _lines_df(spark, [json.dumps(body)]))
-    r = df.collect()[0].asDict()
-    assert r["_msg"] == "oops"
-    assert r["service.name"] == "cart"
-    assert r["severity"] == "ERROR"
-    assert r["http.status"] == "500"
-
-
 def test_otlp_protobuf_roundtrip(spark):
-    """Wire-format round-trip: encode a LogsData payload, decode it through
-    the distributed parser, match the OTLP/JSON path's output shape."""
+    """Wire-format round-trip: encode a LogsData payload, decode it with
+    the pure decoder and through the distributed parser."""
     from victorialogs_spark.sources.otlp_pb import decode_logs_data, encode_logs_data
 
     payload = encode_logs_data(
@@ -101,7 +87,8 @@ def test_otlp_protobuf_roundtrip(spark):
 
 def test_otlp_protobuf_all_value_types(spark):
     """AnyValue oneof coverage: bool/int/double/bytes/array/kvlist decode
-    to the same stringification the JSON path produces."""
+    to the reference's FormatString text; false/0/0.0 survive instead of
+    collapsing to ''."""
     import struct as st
 
     from victorialogs_spark.sources import otlp_pb as pb
@@ -112,6 +99,9 @@ def test_otlp_protobuf_all_value_types(spark):
     cases = [
         (pb._len_field(1, b"plain"), "plain"),
         (pb._tag(2, 0) + pb._varint(1), "true"),
+        (pb._tag(2, 0) + pb._varint(0), "false"),
+        (pb._tag(3, 0) + pb._varint(0), "0"),
+        (pb._tag(4, 1) + st.pack("<d", 0.0), "0.0"),
         (pb._tag(3, 0) + pb._varint((1 << 64) - 5), "-5"),  # negative int64
         (pb._tag(4, 1) + st.pack("<d", 2.5), "2.5"),
         # bytes render base64 like the reference's FormatString
@@ -189,27 +179,6 @@ def test_datadog_logs(spark):
     assert r["hostname"] == "h1" and r["service"] == "api"
 
 
-def test_otlp_falsy_attribute_values(spark):
-    """false/0/0.0 attribute values must survive, not collapse to ''."""
-    import json as _json
-
-    body = {"resourceLogs": [{
-        "resource": {"attributes": [
-            {"key": "enabled", "value": {"boolValue": False}},
-            {"key": "count", "value": {"intValue": 0}},
-            {"key": "ratio", "value": {"doubleValue": 0.0}},
-        ]},
-        "scopeLogs": [{"logRecords": [
-            {"timeUnixNano": "1704067201000000000",
-             "body": {"stringValue": "m"}}]}],
-    }]}
-    df = parse_otlp_logs(spark, _lines_df(spark, [_json.dumps(body)]))
-    r = df.collect()[0].asDict()
-    assert r["enabled"] == "false"
-    assert r["count"] == "0"
-    assert r["ratio"] == "0.0"
-
-
 def test_syslog_sd_message_with_brackets(spark):
     """Message text containing ']' after structured data must not be
     swallowed by a greedy SD capture."""
@@ -250,27 +219,6 @@ def test_rfc3164_non_month_falls_back_to_raw(spark):
     rows = {r["_msg"] for r in parse_syslog_lines(spark, lines).collect()}
     assert "Okt 12 10:30:00 host app: localized" in rows  # raw, not lost
     assert "real" in rows
-
-
-def test_es_bulk_single_key_document_not_dropped(spark):
-    """A single-key DOCUMENT whose key is named like a bulk action
-    ({"delete": "user pressed delete"}) is a real log row; only
-    object-valued action metadata is skipped (r14 review finding)."""
-    import json
-
-    from victorialogs_spark.sources.protocols import parse_elasticsearch_bulk
-
-    lines = spark.createDataFrame(
-        [(json.dumps({"index": {"_id": "1"}}),),      # action: skipped
-         (json.dumps({"message": "doc one"}),),
-         (json.dumps({"delete": "user pressed delete"}),)],  # document!
-        "value string",
-    )
-    msgs = sorted(
-        (r.asDict().get("_msg") or r.asDict().get("delete") or "")
-        for r in parse_elasticsearch_bulk(spark, lines).collect()
-    )
-    assert len(msgs) == 2
 
 
 def test_journald_corpus():
@@ -900,18 +848,17 @@ def _enc_otlp_payload(resource_logs: list) -> bytes:
     return bytes(out)
 
 
-def test_otlp_corpus(spark):
+def test_otlp_corpus():
     """app/vlinsert/opentelemetry/opentelemetry_test.go TestPushProtoOk
-    replayed through BOTH decoders: the Go struct literals re-encode to
-    wire bytes → decode_logs_data, and to the OTLP/JSON shape →
-    parse_otlp_logs; each must reproduce the reference's rows (severity
-    number names, dot-flattened kvlist attributes, trace/span ids) and
-    timestamps (observed-time fallback; µs resolution)."""
+    replayed through the protobuf decoder: the Go struct literals
+    re-encode to wire bytes → decode_logs_data, which must reproduce the
+    reference's rows (severity number names, dot-flattened kvlist
+    attributes, trace/span ids) and timestamps (observed-time fallback;
+    µs resolution)."""
     import re
     from pathlib import Path
 
     from victorialogs_spark.sources.otlp_pb import decode_logs_data
-    from victorialogs_spark.sources.protocols import parse_otlp_logs
 
     body = Path(
         "/root/reference/app/vlinsert/opentelemetry/opentelemetry_test.go"
@@ -946,30 +893,8 @@ def test_otlp_corpus(spark):
         want = _want_rows(want_s)
         want_ts = [t // 1000 for t in ts_list]
 
-        # protobuf wire path
         rows = decode_logs_data(_enc_otlp_payload(rls))
         got, got_ts = _got_rows(rows)
         if got != want or [t // 1000 if t else 0 for t in got_ts] != want_ts:
             failures.append(f"pb: got {got}\n ts {got_ts}\n want {want}")
-
-        # OTLP/JSON path (distributed)
-        df = parse_otlp_logs(
-            spark,
-            spark.createDataFrame(
-                [(json.dumps({"resourceLogs": rls}),)], "value string"
-            ),
-        )
-        jrows = []
-        for r in df.orderBy("_time").collect():
-            d = {
-                k: v
-                for k, v in r.asDict().items()
-                if v not in (None, "")
-                and k not in ("_time", "_stream_id", "_day", "_stream", "_other")
-            }
-            jrows.append(d)
-        if sorted(
-            json.dumps(x, sort_keys=True) for x in jrows
-        ) != sorted(json.dumps(x, sort_keys=True) for x in want):
-            failures.append(f"json: got {jrows}\n want {want}")
     assert not failures, "\n\n".join(failures[:4])

@@ -56,7 +56,7 @@ def test_pack_unpack_logfmt_roundtrip(spark):
 
 
 def test_ndjson_ingest_flatten_model(spark, tmp_path):
-    from victorialogs_spark.schema import flatten_json
+    from victorialogs_spark.functions.jsonflat import flatten_json_message
     from victorialogs_spark.sources.ndjson import ingest_ndjson_distributed
 
     rng = random.Random(17)
@@ -77,7 +77,7 @@ def test_ndjson_ingest_flatten_model(spark, tmp_path):
     df = ingest_ndjson_distributed(spark, str(p))
     got = {r["_msg"]: r.asDict() for r in df.collect()}
     for obj in objs:
-        flat = flatten_json(obj)
+        flat = flatten_json_message(json.dumps(obj), 128)
         row = got[obj["_msg"]]
         for k, v in flat.items():
             if k == "_time":

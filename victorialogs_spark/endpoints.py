@@ -336,10 +336,18 @@ def row_to_wire_dict(row) -> dict:
     MarshalFieldsToJSON; the r15 key-concepts corpus caught our
     wide-frame ''-columns leaking onto the wire). Before consolidation
     the two tail loops rendered None as the literal string 'None' while
-    the query surfaces rendered '' (r14 review finding)."""
+    the query surfaces rendered '' (r14 review finding). Storage
+    columns stay off the wire: the ``_day`` partition column drops, and
+    the ``_other`` spill map expands into the row's own fields (a user
+    field spilled there, ``_day`` included, keeps its name)."""
     import datetime as _dt
 
     d = row.asDict()
+    d.pop("_day", None)
+    other = d.get("_other")
+    if isinstance(other, dict):
+        del d["_other"]
+        d.update(other)
     for k, v in list(d.items()):
         if v is None or v == "":
             del d[k]

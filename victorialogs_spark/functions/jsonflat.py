@@ -1,8 +1,8 @@
-"""Reference-exact JSON flattening for unpack_json.
+"""Reference-exact JSON flattening: the engine's one JSON → fields
+flattener, for ingest (jsonline, Elasticsearch bulk, Loki
+``parse_message``) and the nested ``unpack_json`` path.
 
-Implements json_parser.go parseLogMessage/appendLogFields semantics
-(maxFieldNameLen = MaxInt, the unpack-pipe configuration,
-pipe_unpack_json.go:92):
+Implements json_parser.go parseLogMessage/appendLogFields semantics:
 
 - nested OBJECTS flatten recursively with dot-joined keys
   ({"y":{"z":{"a":"b"}}} -> y.z.a = "b");
@@ -10,164 +10,102 @@ pipe_unpack_json.go:92):
 - ARRAYS / numbers / true / false keep their source representation:
   numbers as the RAW token (fastjson TypeNumber marshals v.s verbatim —
   "1.20" stays "1.20", NaN stays NaN), arrays re-rendered COMPACTLY
-  (whitespace dropped, strings re-escaped) exactly like
-  fastjson MarshalTo;
+  (whitespace dropped, strings re-escaped, duplicate object members
+  kept) exactly like fastjson MarshalTo;
 - NULL values emit no field (appendLogFields "Skip nulls");
 - an empty TOP-LEVEL key names the field "_msg" (appendLogField);
 - duplicate flattened names: last one wins (fields applied in order);
+- with ``max_name_len`` (ingest's 128, ParseLogMessage), an object whose
+  prefix plus LONGEST key would exceed it stays whole, as compact JSON
+  under the prefix ('_msg' at top level) — the reference marshals the
+  subtree rather than truncating names (json_parser.go:99-113); without
+  it (the unpack pipe's MaxInt, pipe_unpack_json.go:92) names are
+  unbounded;
 - a non-object top level or any syntax error means the row is left
   unchanged (parseLogMessage returns the error) — flatten returns None.
 
-Used by the unpack_json pipe through an Arrow-batched pandas UDF, but
-ONLY for inputs where a plan-time probe finds object-valued keys — flat
-JSON (the overwhelming majority of log data) stays on the JVM
-from_json fast path.
+The parse is CPython's C JSON scanner with hooks that keep each number
+and NaN/±Infinity token as its source text and each object as its
+ordered member pairs. It is strict JSON: spellings fastjson also takes
+(``nan``, ``inf``, ``.5``, ``1.``) are syntax errors here.
+
+``unpack_json`` calls it through an Arrow-batched pandas UDF, but ONLY
+for inputs where a plan-time probe finds object-valued keys — flat JSON
+(the overwhelming majority of log data) stays on the JVM from_json fast
+path.
 """
 
 from __future__ import annotations
 
 import json
-import re
-from json.decoder import scanstring
+from json.encoder import encode_basestring
 
-_WS = " \t\r\n"
 
-# tokens fastjson accepts as non-string scalars (parseRawNumber plus the
-# true/false keywords; null is handled by the caller)
-_TOKEN_OK = re.compile(
-    r"^(?:true|false|null"
-    r"|-?(?:[Nn][Aa][Nn]|[Ii][Nn][Ff](?:[Ii][Nn][Ii][Tt][Yy])?"
-    r"|(?:\d+(?:\.\d*)?|\.\d+)(?:[eE][+-]?\d+)?))$"
+class _Token(str):
+    """A number or NaN/±Infinity literal, kept as its source text."""
+
+    __slots__ = ()
+
+
+# objects decode to tuples of (key, value) pairs (order and duplicate
+# members kept), arrays to lists; strict=False takes raw control
+# characters inside strings, as fastjson does
+_DECODER = json.JSONDecoder(
+    parse_float=_Token,
+    parse_int=_Token,
+    parse_constant=_Token,
+    object_pairs_hook=tuple,
+    strict=False,
 )
 
-_DELIM = ",}] \t\r\n"
+
+def _render(v) -> str:
+    """A decoded value → compact JSON text (fastjson MarshalTo)."""
+    t = type(v)
+    if t is str:
+        return encode_basestring(v)
+    if t is _Token:
+        return str(v)
+    if t is tuple:
+        return "{" + ",".join(
+            encode_basestring(k) + ":" + _render(x) for k, x in v
+        ) + "}"
+    if t is list:
+        return "[" + ",".join(map(_render, v)) + "]"
+    return "null" if v is None else ("true" if v else "false")
 
 
-class _Err(ValueError):
-    pass
-
-
-def _ws(s: str, i: int) -> int:
-    n = len(s)
-    while i < n and s[i] in _WS:
-        i += 1
-    return i
-
-
-def _token(s: str, i: int) -> tuple[str, int]:
-    j = i
-    n = len(s)
-    while j < n and s[j] not in _DELIM:
-        j += 1
-    tok = s[i:j]
-    if not _TOKEN_OK.match(tok):
-        raise _Err(tok)
-    return tok, j
-
-
-def _render_val(s: str, i: int) -> tuple[str, int]:
-    i = _ws(s, i)
-    c = s[i]
-    if c == '"':
-        dec, j = scanstring(s, i + 1, False)
-        return json.dumps(dec, ensure_ascii=False), j
-    if c == "{":
-        return _render_obj(s, i)
-    if c == "[":
-        return _render_arr(s, i)
-    return _token(s, i)
-
-
-def _render_arr(s: str, i: int) -> tuple[str, int]:
-    parts: list[str] = []
-    i = _ws(s, i + 1)
-    if s[i] == "]":
-        return "[]", i + 1
-    while True:
-        v, i = _render_val(s, i)
-        parts.append(v)
-        i = _ws(s, i)
-        if s[i] == ",":
-            i = _ws(s, i + 1)
-            continue
-        if s[i] == "]":
-            return "[" + ",".join(parts) + "]", i + 1
-        raise _Err(s[i])
-
-
-def _render_obj(s: str, i: int) -> tuple[str, int]:
-    parts: list[str] = []
-    i = _ws(s, i + 1)
-    if s[i] == "}":
-        return "{}", i + 1
-    while True:
-        if s[i] != '"':
-            raise _Err(s[i])
-        k, i = scanstring(s, i + 1, False)
-        i = _ws(s, i)
-        if s[i] != ":":
-            raise _Err(s[i])
-        v, i = _render_val(s, i + 1)
-        parts.append(json.dumps(k, ensure_ascii=False) + ":" + v)
-        i = _ws(s, i)
-        if s[i] == ",":
-            i = _ws(s, i + 1)
-            continue
-        if s[i] == "}":
-            return "{" + ",".join(parts) + "}", i + 1
-        raise _Err(s[i])
-
-
-def _flatten_obj(s: str, i: int, prefix: str, out: dict) -> int:
-    i = _ws(s, i + 1)
-    if s[i] == "}":
-        return i + 1
-    while True:
-        if s[i] != '"':
-            raise _Err(s[i])
-        k, i = scanstring(s, i + 1, False)
-        i = _ws(s, i)
-        if s[i] != ":":
-            raise _Err(s[i])
-        i = _ws(s, i + 1)
-        name = prefix + k
-        if name == "":
-            name = "_msg"
-        c = s[i]
-        if c == "{":
-            i = _flatten_obj(s, i, name + ".", out)
-        elif c == "[":
-            v, i = _render_arr(s, i)
+def _flatten(pairs: tuple, prefix: str, out: dict, max_name_len) -> None:
+    if max_name_len is not None and (
+        len(prefix) + max((len(k) for k, _ in pairs), default=0)
+        > max_name_len
+    ):
+        out[prefix[:-1] or "_msg"] = _render(pairs)
+        return
+    for k, v in pairs:
+        name = prefix + k or "_msg"
+        t = type(v)
+        if t is tuple:
+            _flatten(v, name + ".", out, max_name_len)
+        elif t is str:
             out[name] = v
-        elif c == '"':
-            dec, i = scanstring(s, i + 1, False)
-            out[name] = dec
-        else:
-            tok, i = _token(s, i)
-            if tok != "null":
-                out[name] = tok
-        i = _ws(s, i)
-        if s[i] == ",":
-            i = _ws(s, i + 1)
-            continue
-        if s[i] == "}":
-            return i + 1
-        raise _Err(s[i])
+        elif v is not None:
+            out[name] = _render(v)
 
 
-def flatten_json_message(s: str) -> dict[str, str] | None:
-    """Top-level entry: dict of flattened fields, or None when the value
-    is not a parseable JSON object (the caller leaves the row as-is)."""
+def flatten_json_message(
+    s: str, max_name_len: int | None = None
+) -> dict[str, str] | None:
+    """Dict of flattened fields, or None when ``s`` is not a parseable
+    JSON object (the caller leaves the row as-is, or rejects it)."""
     try:
-        i = _ws(s, 0)
-        if i >= len(s) or s[i] != "{":
+        obj = _DECODER.decode(s)
+        if type(obj) is not tuple:
             return None
         out: dict[str, str] = {}
-        j = _flatten_obj(s, i, "", out)
-        if _ws(s, j) != len(s):
-            return None
+        _flatten(obj, "", out, max_name_len)
         return out
-    except (_Err, ValueError, IndexError, RecursionError):
+    except (ValueError, RecursionError):
         # RecursionError: adversarially deep nesting — fastjson errors at
         # its own MaxDepth too; the row is left unchanged either way
         return None

@@ -146,7 +146,14 @@ class _State:
         spill_dir: str | None = None,
         retention_days: int | None = None,
     ):
+        from victorialogs_spark.schema import with_tenant
+
         self.spark = spark
+        if logs is not None and "tenant" not in logs.columns:
+            # a tenant-less preloaded table (cli serve --table DIR)
+            # belongs to the default tenant; stamped here, every read is
+            # tenant-scoped from request one
+            logs = with_tenant(logs, 0, 0)
         self.logs = logs
         self._empty: DataFrame | None = None  # lazy empty-store frame
         self.lock = threading.Lock()
@@ -370,22 +377,11 @@ class _State:
         derives it from ``_time`` so the planner's day pruning never sees
         a NULL ``_day`` (allowMissingColumns would fill one, and a pruned
         query would silently drop every preloaded row)."""
-        from victorialogs_spark.schema import with_day_partition, with_tenant
+        from victorialogs_spark.schema import with_day_partition
 
         parts = [] if scan is None else [scan]
-        pre = self._preloaded
-        if pre is not None:
-            if (
-                "tenant" not in pre.columns
-                and any("tenant" in p.columns for p in parts)
-            ):
-                # flushed rows always carry tenant; a tenant-less
-                # preloaded table belongs to the default tenant —
-                # unioning it unstamped would give its rows a NULL
-                # tenant and hide them from every scoped query
-                pre = with_tenant(pre, 0, 0)
-                self._preloaded = pre
-            parts.insert(0, pre)
+        if self._preloaded is not None:
+            parts.insert(0, self._preloaded)
         if any("_day" in p.columns for p in parts):
             parts = [
                 p
@@ -558,28 +554,14 @@ class _State:
         that writes them to the table. Only the union bookkeeping takes
         the lock; with no spill dir, the lineage checkpoint runs after
         it is released."""
-        with self.lock:
-            if (
-                self._base is not None
-                and "tenant" in df.columns
-                and "tenant" not in self._base.columns
-            ):
-                # a tenant-less base (cli serve --table DIR, or a spill
-                # dir restored from a run that append()-ed tenant-less
-                # rows directly) belongs to the default tenant; stamping
-                # it BEFORE the union keeps it visible — a NULL tenant
-                # from allowMissingColumns would fail every tenant
-                # filter. Stamp _base itself: it may be a restored spill
-                # scan (or preloaded ∪ scan), not the raw preloaded
-                # frame, and _preloaded may be None
-                from victorialogs_spark.schema import with_tenant
+        if "tenant" not in df.columns:
+            # rows appended without a tenant belong to the default one;
+            # a NULL tenant from allowMissingColumns would fail every
+            # tenant filter
+            from victorialogs_spark.schema import with_tenant
 
-                self._base = with_tenant(self._base, 0, 0)
-                if (
-                    self._preloaded is not None
-                    and "tenant" not in self._preloaded.columns
-                ):
-                    self._preloaded = with_tenant(self._preloaded, 0, 0)
+            df = with_tenant(df, 0, 0)
+        with self.lock:
             self._pending = (
                 df
                 if self._pending is None

@@ -10,7 +10,6 @@ partition pruning for `_time` filters.
 
 from __future__ import annotations
 
-import json
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -119,46 +118,6 @@ def for_tenant(df: DataFrame, account_id: int = 0, project_id: int = 0) -> DataF
     if "tenant" not in df.columns:
         return df
     return df.where(F.col("tenant") == f"{account_id}:{project_id}")
-
-
-def flatten_json(obj: dict, prefix: str = "", max_name_len: int = 128) -> dict[str, str]:
-    """Nested JSON → flat string fields with dot-joined keys; arrays/numbers/
-    bools keep their JSON representation; nulls emit nothing
-    (json_parser.go:71,119-147). ``prefix`` carries the trailing dot like
-    the reference's prefixBuf. When the prefix plus this object's LONGEST
-    key would exceed ``max_name_len``, the WHOLE object stays as compact
-    JSON text under the prefix (minus its dot; '_msg' at top level) —
-    the reference marshals the subtree rather than truncating the name
-    (json_parser.go:99-113, pinned by TestJSONParserTooLongFieldName;
-    the old name[:128] truncation was an r15 parity finding). Number
-    re-rendering via json.dumps is this dict-level helper's limit — the
-    query-side scanner (functions/jsonflat.py) keeps raw tokens."""
-    max_key = max((len(k) for k in obj), default=0)
-    if len(prefix) + max_key > max_name_len:
-        name = prefix[:-1] if prefix.endswith(".") else prefix
-        return {
-            name or "_msg": json.dumps(
-                obj, separators=(",", ":"), ensure_ascii=False
-            )
-        }
-    out: dict[str, str] = {}
-    for k, v in obj.items():
-        name = prefix + k
-        if name == "":
-            name = "_msg"
-        if isinstance(v, dict):
-            out.update(flatten_json(v, name + ".", max_name_len))
-        elif isinstance(v, str):
-            out[name] = v
-        elif v is None:
-            pass  # reference skips nulls
-        elif isinstance(v, bool):
-            out[name] = "true" if v else "false"
-        elif isinstance(v, (int, float)):
-            out[name] = json.dumps(v)
-        else:
-            out[name] = json.dumps(v, separators=(",", ":"), ensure_ascii=False)
-    return out
 
 
 def ingest_ndjson(

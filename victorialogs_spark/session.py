@@ -4,9 +4,10 @@ Scale notes (100 TB / 1000-executor design intent):
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting.
 - zstd parquet (mirrors reference's zstd blocks, lib/logstorage/encoding.go:353).
 - Arrow enabled for the few pandas-UDF paths (dedup/similarity).
-- shuffle.partitions default kept small for local[32] tests; a real cluster
-  deployment overrides via spark-defaults (AQE coalescing makes the initial
-  number mostly irrelevant).
+- local mode and shuffle.partitions default to the CPUs this process may
+  run on (``SPARK_GRAFT_CPUS`` overrides); a real cluster deployment
+  overrides via spark-defaults (AQE coalescing makes the initial number
+  mostly irrelevant).
 """
 
 from __future__ import annotations
@@ -21,7 +22,9 @@ def get_spark(
     master: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")

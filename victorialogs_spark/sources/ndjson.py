@@ -22,20 +22,19 @@ and the server's /insert/* handlers).
 
 from __future__ import annotations
 
-import json
 from typing import Any, Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from victorialogs_spark.functions.jsonflat import flatten_json_message
 from victorialogs_spark.functions.natural import unix_auto_timestamp
 from victorialogs_spark.functions.prefixfilter import match_filters
 from victorialogs_spark.functions.text import drop_color_sequences
 from victorialogs_spark.schema import (
     DEFAULT_MSG,
     attach_stream_id,
-    flatten_json,
     with_stream_id,
 )
 
@@ -62,8 +61,9 @@ def ndjson_row(
     the reference's ingest transforms (_time_field/_msg_field/
     ignore_fields/extra_fields/decolorize_fields,
     insertutil/common_params.go:32-100): json_parser.go flattening
-    (nested keys dot-joined, arrays/numbers/bools kept as their JSON
-    text); ignore/decolorize names are prefix FILTERS ('foo.*' drops
+    with the 128-char name rule (functions/jsonflat.flatten_json_message:
+    nested keys dot-joined, arrays/numbers/bools kept as their source
+    JSON text); ignore/decolorize names are prefix FILTERS ('foo.*' drops
     every foo.-prefixed field) and extra fields re-add after the drop
     (log_rows.go via the r15 log-rows corpus); '' in those lists names
     _msg. _time_field/_msg_field are CANDIDATE LISTS: the first PRESENT
@@ -74,10 +74,9 @@ def ndjson_row(
     line = line.strip()
     if not line:
         return None
-    obj = json.loads(line)
-    if not isinstance(obj, dict):
+    flat = flatten_json_message(line, 128)
+    if flat is None:
         raise ValueError(f"JSON log line must be an object, got {line[:64]!r}")
-    flat = flatten_json(obj)
     if ignore_fields:
         ig = [f or "_msg" for f in ignore_fields]
         flat = {k: v for k, v in flat.items() if not match_filters(ig, k)}
@@ -366,17 +365,15 @@ def ingest_ndjson_jvm(
     match ``primitivesAsString`` inference (use a prior run's
     ``df.schema``); rows carrying fields outside the schema lose them.
 
-    Semantics match :func:`ingest_ndjson_distributed` (flatten_json
-    dot-joining, missing ≡ empty, malformed lines dropped) with two
-    documented divergences inherent to schema-driven parsing:
-    - arrays re-serialize from the INFERRED type, so a mixed-type array
-      like ``["a", 1]`` round-trips as ``["a","1"]`` (all-string);
-    - number normalization is the JVM's, not CPython's (identical for
-      typical values; differs in exotic exponent formatting).
-    Two more come from this twin keeping its own tail: a literal
-    ``_time`` on a row without ``time_field`` spills to ``_other``
-    instead of becoming the row time, and without ``stream_fields`` no
-    ``_stream``/``_stream_id`` columns are added.
+    Semantics match :func:`ingest_ndjson_distributed` (jsonflat
+    dot-joining, numbers kept as their source text, missing ≡ empty,
+    malformed lines dropped) with one divergence inherent to
+    schema-driven parsing: arrays re-serialize from the INFERRED type,
+    so ``["a", 1]`` and ``[1.50, 2]`` round-trip as ``["a","1"]`` and
+    ``["1.50","2"]`` (all-string). Two more come from this twin keeping
+    its own tail: a literal ``_time`` on a row without ``time_field``
+    spills to ``_other`` instead of becoming the row time, and without
+    ``stream_fields`` no ``_stream``/``_stream_id`` columns are added.
 
     Schema inference is one extra scan of the input; at 100 TB either
     pass a representative sample's schema or accept the scan — both

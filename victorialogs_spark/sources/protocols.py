@@ -7,18 +7,22 @@ event-time / column-promotion / stream-id tail).
 
 Covered formats (each a mapInPandas batch parser — executors only):
 - Elasticsearch bulk NDJSON  (app/vlinsert/elasticsearch)
-- Loki push JSON             (app/vlinsert/loki/loki_json.go)
-- OpenTelemetry OTLP/JSON    (app/vlinsert/opentelemetry)
+- Loki push JSON + protobuf  (app/vlinsert/loki)
+- OpenTelemetry OTLP         (app/vlinsert/opentelemetry; protobuf only,
+                              like the reference)
 - syslog RFC3164/RFC5424     (app/vlinsert/syslog)
 - journald export format     (app/vlinsert/journald: MESSAGE +
                               __REALTIME_TIMESTAMP µs)
 - Datadog logs JSON          (app/vlinsert/datadog)
 
-The parsers accept payloads as text files / DataFrames of lines (binary
-files, ``content`` DataFrames or lists of ``bytes`` for the protobuf
-formats). The server's /insert/* handlers (http_server.py) call the pure
-per-payload row parsers (``es_bulk_rows``, ``loki_json_rows``, ...) on a
-request body and build the frame with sources/ndjson.rows_frame.
+Each format has ONE pure per-payload row parser (``es_bulk_rows``,
+``loki_json_rows``, ``loki_pb_rows``, ``otlp_pb.decode_logs_data``,
+``journald_entries``, ``datadog_rows``). The ``parse_*`` functions run
+it over payload files / DataFrames (binary files, ``content``
+DataFrames or lists of ``bytes`` for the protobuf formats); the
+server's /insert/* handlers (http_server.py) run it on a request body
+and build the frame with sources/ndjson.rows_frame. JSON documents
+flatten through functions/jsonflat.flatten_json_message.
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
-from victorialogs_spark.schema import flatten_json
+from victorialogs_spark.functions.jsonflat import flatten_json_message
 from victorialogs_spark.sources.ndjson import (
     finish_parsed,
     parse_payloads,
@@ -46,43 +50,24 @@ def stream_label_str(labels: list[tuple[str, str]]) -> str:
 
 # ------------------------------------------------------------ elasticsearch
 
-_ES_ACTIONS = {"index", "create", "delete", "update"}
-
-
 def parse_elasticsearch_bulk(
     spark: SparkSession,
-    path_or_lines,
+    payloads,
     stream_fields: list[str] | None = None,
     promote_keys: list[str] | None = None,
 ) -> DataFrame:
-    """ES bulk NDJSON: alternating action lines ({"index": {...}}) and
-    document lines; only documents become log rows. ``@timestamp`` maps to
-    ``_time``, ``message`` to ``_msg`` (app/vlinsert/elasticsearch)."""
-
-    def one(line: str) -> list[dict]:
-        line = line.strip()
-        if not line:
-            return []
-        obj = json.loads(line)
-        if (
-            len(obj) == 1
-            and next(iter(obj)) in _ES_ACTIONS
-            # bulk action metadata is always an OBJECT value
-            # ({"index": {"_id": ...}}); a single-key DOCUMENT whose key
-            # happens to be named index/create/delete/update (e.g.
-            # {"delete": "user pressed delete"}) is a real log row, not
-            # metadata (r14 review finding)
-            and isinstance(next(iter(obj.values())), dict)
-        ):
-            return []  # action/metadata line
-        flat = flatten_json(obj)
-        if "@timestamp" in flat:
-            flat["_time"] = flat.pop("@timestamp")
-        if "message" in flat and "_msg" not in flat:
-            flat["_msg"] = flat.pop("message")
-        return [flat]
-
-    parsed = parse_payloads(payload_frame(spark, path_or_lines), one)
+    """ES bulk bodies (a path/glob of whole files, or a DataFrame whose
+    ``value`` rows are whole bodies) → log rows through
+    :func:`es_bulk_rows`. ``@timestamp`` (else ``_time``) is the row
+    time and ``_msg`` (else ``message``) the message, as a filebeat-style
+    sender configures the server with ``_time_field``/``_msg_field``. A
+    malformed body is dropped whole."""
+    parsed = parse_payloads(
+        payload_frame(spark, payloads, wholetext=True),
+        lambda body: es_bulk_rows(
+            body, ["@timestamp", "_time"], ["_msg", "message"]
+        ),
+    )
     return finish_parsed(parsed, stream_fields, promote_keys)
 
 
@@ -127,8 +112,6 @@ def es_bulk_rows(
     first present time_fields name is consumed as the row time
     (parse_es_timestamp_ns; absent/zero → ingest-time now → _time "");
     the first non-empty msg_fields name is renamed to _msg."""
-    from victorialogs_spark.functions.jsonflat import flatten_json_message
-
     time_fields = time_fields if time_fields is not None else ["_time"]
     msg_fields = msg_fields if msg_fields is not None else ["_msg"]
     rows: list[dict] = []
@@ -294,8 +277,6 @@ def _loki_row(
     JSON object is inlined instead of becoming _msg, and the first
     non-empty msg_fields name among the per-line (non-label) fields is
     renamed to _msg."""
-    from victorialogs_spark.functions.jsonflat import flatten_json_message
-
     fields = list(labels) + list(metadata)
     parsed_msg = None
     if parse_message and len(msg) >= 2 and msg[0] == "{" and msg[-1] == "}":
@@ -492,147 +473,6 @@ def unix_frac_seconds(value: int, scale: int) -> str:
     double's ~0.24µs ulp and occasionally round it wrong."""
     us = value * (10**6 // scale) if scale <= 10**6 else value // (scale // 10**6)
     return f"{us // 10**6}.{us % 10**6:06d}"
-
-
-def _otlp_value_str(v: dict, toplevel: bool = True) -> str:
-    """AnyValue (OTLP/JSON shape) → FormatString-parity string: strings
-    raw at top level, JSON-quoted nested; bools/ints bare; doubles via
-    es6_float; arrays/kvlists JSON-shaped; bytesValue stays base64
-    (the OTLP/JSON wire already carries base64)."""
-    from victorialogs_spark.sources.otlp_pb import es6_float
-
-    # explicit None checks: an `or` chain collapses false/0/0.0 to ''
-    s = v.get("stringValue")
-    if s is not None:
-        s = str(s)
-        return s if toplevel else json.dumps(s, ensure_ascii=False)
-    b = v.get("boolValue")
-    if b is not None:
-        return "true" if b else "false"
-    i = v.get("intValue")
-    if i is not None:
-        return str(int(i))
-    d = v.get("doubleValue")
-    if d is not None:
-        return es6_float(float(d))
-    arr = v.get("arrayValue")
-    if arr is not None:
-        return "[" + ",".join(
-            _otlp_value_str(x or {}, False) for x in arr.get("values") or []
-        ) + "]"
-    kvl = v.get("kvlistValue")
-    if kvl is not None:
-        return "{" + ",".join(
-            json.dumps(str(kv.get("key", "")), ensure_ascii=False)
-            + ":"
-            + _otlp_value_str(kv.get("value") or {}, False)
-            for kv in kvl.get("values") or []
-        ) + "}"
-    by = v.get("bytesValue")
-    if by is not None:
-        return str(by)
-    return ""
-
-
-def _otlp_flatten_attrs(out: list, attrs: list, parent: str = "") -> None:
-    """appendKeyValues parity for the JSON shape: kvlist-valued
-    attributes flatten recursively into dot-joined names."""
-    for a in attrs or []:
-        key = str(a.get("key", ""))
-        name = f"{parent}.{key}" if parent else key
-        v = a.get("value") or {}
-        kvl = v.get("kvlistValue")
-        if kvl is not None:
-            _otlp_flatten_attrs(out, kvl.get("values") or [], name)
-        else:
-            out.append((name, _otlp_value_str(v, True)))
-
-
-# OTLP severity names indexed by SeverityNumber (re-exported for callers)
-def _otlp_severity(sev_text: str, sev_num: int) -> str:
-    from victorialogs_spark.sources.otlp_pb import LOG_SEVERITIES
-
-    if sev_text:
-        return sev_text
-    if 0 <= sev_num < len(LOG_SEVERITIES):
-        return LOG_SEVERITIES[sev_num]
-    return LOG_SEVERITIES[0]
-
-
-def parse_otlp_logs(
-    spark: SparkSession,
-    path_or_lines,
-    promote_keys: list[str] | None = None,
-    msg_fields: list[str] | None = None,
-) -> DataFrame:
-    """OTLP/JSON logs (one export body per line): resourceLogs →
-    scopeLogs → logRecords, in lockstep with the protobuf path
-    (app/vlinsert/opentelemetry pushFieldsFromScopeLogs): kvlist
-    attributes dot-flatten, a kvlist body flattens (+ msg_fields
-    renaming), severity = severityText else the SeverityNumber name,
-    timeUnixNano falls back to observedTimeUnixNano."""
-
-    def one(line: str) -> list[dict]:
-        line = line.strip()
-        if not line:
-            return []
-        body = json.loads(line)
-        out = []
-        for rl in body.get("resourceLogs", []):
-            res_fields: list = []
-            _otlp_flatten_attrs(
-                res_fields, (rl.get("resource") or {}).get("attributes")
-            )
-            for sl in rl.get("scopeLogs", []):
-                for rec in sl.get("logRecords", []):
-                    fields = list(res_fields)
-                    n_common = len(fields)
-                    body_v = rec.get("body") or {}
-                    body_kvl = body_v.get("kvlistValue")
-                    if body_kvl is not None:
-                        _otlp_flatten_attrs(
-                            fields, body_kvl.get("values") or []
-                        )
-                        for want in msg_fields or []:
-                            hit = next(
-                                (
-                                    i
-                                    for i in range(n_common, len(fields))
-                                    if fields[i][0] == want
-                                    and fields[i][1] != ""
-                                ),
-                                None,
-                            )
-                            if hit is not None:
-                                fields[hit] = ("_msg", fields[hit][1])
-                                break
-                    else:
-                        fields.append(("_msg", _otlp_value_str(body_v, True)))
-                    _otlp_flatten_attrs(fields, rec.get("attributes"))
-                    if rec.get("traceId"):
-                        fields.append(("trace_id", str(rec["traceId"])))
-                    if rec.get("spanId"):
-                        fields.append(("span_id", str(rec["spanId"])))
-                    fields.append((
-                        "severity",
-                        _otlp_severity(
-                            str(rec.get("severityText") or ""),
-                            int(rec.get("severityNumber") or 0),
-                        ),
-                    ))
-                    flat = dict(fields)
-                    # default stream identity: the resource attributes
-                    flat["_stream"] = stream_label_str(res_fields)
-                    t_ns = rec.get("timeUnixNano") or rec.get(
-                        "observedTimeUnixNano"
-                    )
-                    if t_ns:
-                        flat["_time"] = unix_frac_seconds(int(t_ns), 10**9)
-                    out.append(flat)
-        return out
-
-    parsed = parse_payloads(payload_frame(spark, path_or_lines), one)
-    return finish_parsed(parsed, None, promote_keys)
 
 
 def parse_otlp_protobuf(
