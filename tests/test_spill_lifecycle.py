@@ -12,18 +12,20 @@ contract around it:
   replaced must not double-count either (the replaced files are
   unlisted, deleted at restore);
 - a failed flush keeps every acked row queryable from memory;
-- retention on the server covers flushed rows;
+- retention drops whole expired days inside the flush commit, before
+  that flush's day compaction;
 - time-filtered queries keep seeing pending rows once the table part
   introduces the ``_day`` column (the NULL-``_day`` pruning hazard);
 - a spill dir written by an older server (flat parquet in the spill
-  root, with or without a manifest) folds into the table once and its
-  rows are served exactly once.
+  root, with or without a manifest) is refused at startup and nothing
+  in it is deleted.
 """
 
 import collections
 import glob
 import json
 import os
+import re
 import shutil
 import time
 import urllib.parse
@@ -155,7 +157,7 @@ def test_flushed_rows_sit_once_in_listed_table_files(spark, tmp_path,
         assert _flat(spill) == []
         assert _metric(srv, "vl_spill_flushes_total", "ok") >= 2
         manifest = json.load(open(os.path.join(spill, "_MANIFEST.json")))
-        assert manifest["flat_files"] == []
+        assert "flat_files" not in manifest
         assert "migrated_flat" not in manifest
         with srv.state.lock:
             assert sorted(manifest["table_files"]) == srv.state._table_files
@@ -270,33 +272,67 @@ def test_restart_after_partial_table_write(spark, tmp_path,
 
 
 def test_server_retention_covers_migrated_rows(spark, tmp_path,
-                                               tiny_thresholds):
-    """Retention on the server covers rows flushes migrated into the
-    table."""
-    spill = str(tmp_path / "spill")
-    srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
-    try:
-        for i in range(2):
-            _post(srv, "/insert/jsonline?_stream_fields=app",
-                  _lines("2024-01-01", 12, f"o{i}"))
-        for i in range(2):
-            _post(srv, "/insert/jsonline?_stream_fields=app",
-                  _lines("2024-01-05", 12, f"n{i}"))
-        _drain(srv)
-        assert _count(srv, '{app="life"}') == 48
+                                               tiny_thresholds, monkeypatch):
+    """Retention drops an expired day inside the flush commit, before
+    that flush's day compaction lists its days: a day that reaches
+    COMPACT_FILES in the very commit that expires it is dropped whole and
+    never compacted, while a live day compacting in the same commit
+    keeps every row, across a restart too."""
+    import datetime as dt
 
-        dropped = srv.state.apply_retention("20240103")
-        assert dropped == ["20240101"]
-        assert _count(srv, '{app="life"}') == 24
-        assert not os.path.exists(
-            os.path.join(spill, "_table", "_day=20240101")
-        )
+    monkeypatch.setattr(_State, "COMPACT_FILES", 3)
+    compacted = []
+    real = _State._compact_one_day
+
+    def spy(self, day, files):
+        compacted.append(day)
+        return real(self, day, files)
+
+    monkeypatch.setattr(_State, "_compact_one_day", spy)
+    now = dt.datetime.now(dt.timezone.utc)
+    old_day = (now - dt.timedelta(days=30)).strftime("%Y-%m-%d")
+    new_day = now.strftime("%Y-%m-%d")
+    spill = str(tmp_path / "spill")
+    old_dir = os.path.join(spill, "_table", f"_day={old_day.replace('-', '')}")
+    srv = LogHTTPServer(spark, None, 0, spill_dir=spill,
+                        retention_days=60).start()
+    try:
+        # each flush adds one file per day: both days sit one file short
+        # of COMPACT_FILES
+        for i in range(2):
+            _post(srv, "/insert/jsonline?_stream_fields=app",
+                  _lines(old_day, 12, f"o{i}"))
+            _drain(srv)
+            _post(srv, "/insert/jsonline?_stream_fields=app",
+                  _lines(new_day, 12, f"n{i}"))
+            _drain(srv)
+        assert len(glob.glob(os.path.join(old_dir, "*.parquet"))) == 2
+        assert _count(srv, '{app="life"}') == 48
+        assert _metric(srv, "vl_spill_compactions_total", "ok") == 0
+
+        # the window shrinks past the old day, as the clock passing its
+        # cutoff would; one flush then brings both days to COMPACT_FILES
+        srv.state.retention_days = 7
+        _post(srv, "/insert/jsonline?_stream_fields=app",
+              _lines(old_day, 12, "o2") + b"\n" + _lines(new_day, 12, "n2"))
+        _drain(srv)
+        assert not os.path.exists(old_dir)
+        with srv.state.lock:
+            live = list(srv.state._table_files)
+        assert live and all(p.startswith(f"_day={new_day.replace('-', '')}")
+                            for p in live)
+        assert compacted == [f"_day={new_day.replace('-', '')}"]
+        assert _metric(srv, "vl_spill_compactions_total", "ok") == 1
+        assert _metric(srv, "vl_spill_compactions_total", "error") == 0
+        assert _count(srv, '{app="life"}') == 36
     finally:
         srv.stop()
-    # retention survives a restart (manifest was rewritten)
-    srv2 = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
+    # retention survives a restart (the commit rewrote the manifest)
+    srv2 = LogHTTPServer(spark, None, 0, spill_dir=spill,
+                         retention_days=7).start()
     try:
-        assert _count(srv2, '{app="life"}') == 24
+        assert _count(srv2, '{app="life"}') == 36
+        assert not os.path.exists(old_dir)
     finally:
         srv2.stop()
 
@@ -361,73 +397,36 @@ def test_restart_after_torn_flush(spark, tmp_path, tiny_thresholds):
         srv2.stop()
 
 
-def test_legacy_spill_dir_without_manifest(spark, tmp_path,
-                                           tiny_thresholds):
-    """A pre-manifest spill dir (flat parquet, no _MANIFEST.json) must
-    restore every flat file — the flat_files key is absent, which means
-    legacy, not torn — by folding them into the table."""
-    spill = str(tmp_path / "spill")
-    os.makedirs(spill)
-    _write_flat(spark, spill, "2024-01-01", 12, "l0")
-    _write_flat(spark, spill, "2024-01-01", 12, "l1")
-
-    srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
-    try:
-        assert _count(srv, '{app="life"}') == 24
-        assert _flat(spill) == []
-        assert srv.state._table_files
-    finally:
-        srv.stop()
-
-
-def test_restore_folds_older_spill_dir_once(spark, tmp_path,
-                                            tiny_thresholds):
-    """A spill dir an older server left — table files, live flat files
-    listed under "flat_files", and migrated flat files tombstoned under
-    "migrated_flat" — restores with every row served exactly once and
-    no flat parquet left on disk; a second restart serves the same."""
+def test_legacy_spill_dir_without_manifest(spark, tmp_path):
+    """A spill root holding flat parquet is an older server's layout,
+    with no manifest or with one listing "flat_files". Startup refuses
+    it with a ValueError naming the dir and deletes nothing (not even
+    table files the manifest does not list), so acked rows are never
+    silently skipped."""
     from victorialogs_spark.schema import ingest_ndjson, with_tenant
     from victorialogs_spark.streaming.ingest import append_day_partitioned
 
-    spill = str(tmp_path / "spill")
-    table = os.path.join(spill, "_table")
-    os.makedirs(spill)
-    # 12 migrated rows: in the table AND still in a tombstoned flat file
-    migrated = _write_flat(spark, spill, "2024-01-01", 12, "mig")
-    df = ingest_ndjson(
-        spark, _lines("2024-01-01", 12, "mig").decode().splitlines(),
-        stream_fields=["app"],
-    )
-    append_day_partitioned(with_tenant(df, 0, 0), table)
-    table_files = sorted(
-        os.path.relpath(p, table)
-        for p in glob.glob(os.path.join(table, "_day=*", "*.parquet"))
-    )
-    # 24 live rows that never migrated
-    live = _write_flat(spark, spill, "2024-01-02", 12, "live0")
-    live += _write_flat(spark, spill, "2024-01-03", 12, "live1")
-    with open(os.path.join(spill, "_MANIFEST.json"), "w") as fh:
-        json.dump({"migrated_flat": migrated, "table_files": table_files,
-                   "flat_files": live}, fh)
+    def tree(root):
+        return sorted(os.path.relpath(os.path.join(d, f), root)
+                      for d, _, fs in os.walk(root) for f in fs)
 
-    srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
-    try:
-        assert _count(srv, '{app="life"}') == 36
-        assert _count(srv, '"live1"') == 12
-        assert _flat(spill) == []
-        manifest = json.load(open(os.path.join(spill, "_MANIFEST.json")))
-        assert manifest["flat_files"] == []
-        assert "migrated_flat" not in manifest
-        assert set(manifest["table_files"]) == set(
-            srv.state._list_table_files()
-        )
-    finally:
-        srv.stop()
-    srv2 = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
-    try:
-        assert _count(srv2, '{app="life"}') == 36
-    finally:
-        srv2.stop()
+    for shape in ("bare", "manifest"):
+        spill = str(tmp_path / shape)
+        os.makedirs(spill)
+        flat = _write_flat(spark, spill, "2024-01-01", 12, "l0")
+        if shape == "manifest":
+            df = ingest_ndjson(
+                spark, _lines("2024-01-02", 12, "t").decode().splitlines(),
+                stream_fields=["app"],
+            )
+            append_day_partitioned(with_tenant(df, 0, 0),
+                                   os.path.join(spill, "_table"))
+            with open(os.path.join(spill, "_MANIFEST.json"), "w") as fh:
+                json.dump({"table_files": [], "flat_files": flat}, fh)
+        before = tree(spill)
+        with pytest.raises(ValueError, match=re.escape(spill)):
+            LogHTTPServer(spark, None, 0, spill_dir=spill)
+        assert tree(spill) == before
 
 
 def test_automatic_retention_on_migration_and_restore(
@@ -559,138 +558,6 @@ def test_failed_flush_keeps_rows_queryable(spark, tmp_path,
         assert _count(srv, '{app="life"} _time:[2024-01-02, 2024-01-03)') == 48
     finally:
         srv.stop()
-
-
-def test_retention_defers_days_under_compaction(spark, tmp_path,
-                                                tiny_thresholds):
-    """apply_retention() racing a compaction must not physically delete
-    the day files the rewrite is reading: the day drops LOGICALLY (out
-    of _table_files, out of query results, into _table_tombs) and the
-    bytes are reaped by the next flush instead."""
-    import datetime as dt
-
-    spill = str(tmp_path / "spill")
-    old_day = (
-        dt.datetime.now(dt.timezone.utc) - dt.timedelta(days=30)
-    ).strftime("%Y-%m-%d")
-    new_day = dt.datetime.now(dt.timezone.utc).strftime("%Y-%m-%d")
-    old_label = old_day.replace("-", "")
-    srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
-    try:
-        _post(srv, "/insert/jsonline?_stream_fields=app",
-              _lines(old_day, 12, "old"))
-        _post(srv, "/insert/jsonline?_stream_fields=app",
-              _lines(new_day, 12, "new"))
-        _drain(srv)
-        assert _count(srv, '{app="life"}') == 24
-
-        with srv.state.lock:
-            day_files = [p for p in srv.state._table_files
-                         if p.startswith(f"_day={old_label}")]
-        assert day_files
-        # simulate the in-flight compaction window
-        with srv.state.lock:
-            srv.state._compacting_days = {f"_day={old_label}"}
-        keep_from = (
-            dt.datetime.now(dt.timezone.utc) - dt.timedelta(days=7)
-        ).strftime("%Y%m%d")
-        dropped = srv.state.apply_retention(keep_from)
-        assert old_label in dropped
-        # logical drop: results exclude the day immediately...
-        assert _count(srv, '{app="life"}') == 12
-        # ...but the bytes the compaction is reading are still on disk
-        for rel in day_files:
-            assert os.path.exists(os.path.join(spill, "_table", rel))
-        with srv.state.lock:
-            assert set(day_files) <= srv.state._table_tombs
-            srv.state._compacting_days = set()
-
-        # the next flush reaps the deferred bytes
-        _post(srv, "/insert/jsonline?_stream_fields=app",
-              _lines(new_day, 12, "new2"))
-        _drain(srv)
-        for rel in day_files:
-            assert not os.path.exists(os.path.join(spill, "_table", rel))
-        assert _count(srv, '{app="life"}') == 24
-    finally:
-        srv.stop()
-
-
-def test_manual_retention_during_migration_no_resurrection(
-    spark, tmp_path, tiny_thresholds, monkeypatch
-):
-    """A manual apply_retention() landing INSIDE the race window of a
-    flush migrating rows into the table (after the Spark write, before
-    the manifest commit) must not
-    resurrect the expired day's previously-committed table files, must
-    leave live-day rows exact, and must not corrupt lifecycle state
-    (the racing drop of the just-written expired files is semantically
-    the same drop the retention_days fold would apply at that very
-    commit — expired rows may vanish, never double-count)."""
-    import datetime as dt
-
-    from victorialogs_spark.streaming import ingest as ingest_mod
-
-    spill = str(tmp_path / "spill")
-    old_day = (
-        dt.datetime.now(dt.timezone.utc) - dt.timedelta(days=30)
-    ).strftime("%Y-%m-%d")
-    new_day = dt.datetime.now(dt.timezone.utc).strftime("%Y-%m-%d")
-    old_label = old_day.replace("-", "")
-    keep_from = (
-        dt.datetime.now(dt.timezone.utc) - dt.timedelta(days=7)
-    ).strftime("%Y%m%d")
-    srv = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
-    try:
-        # round 1: commit expired-day AND live-day rows into the table
-        _post(srv, "/insert/jsonline?_stream_fields=app",
-              _lines(old_day, 12, "old1"))
-        _post(srv, "/insert/jsonline?_stream_fields=app",
-              _lines(new_day, 12, "new1"))
-        _drain(srv)
-        with srv.state.lock:
-            committed = [p for p in srv.state._table_files
-                         if p.startswith(f"_day={old_label}")]
-        assert committed
-
-        # round 2: more expired-day rows; retention fires inside the
-        # flush's write->commit window
-        real = ingest_mod.append_day_partitioned
-
-        def write_then_retention(df, table_dir):
-            real(df, table_dir)
-            dropped = srv.state.apply_retention(keep_from)
-            assert old_label in dropped
-
-        monkeypatch.setattr(
-            ingest_mod, "append_day_partitioned", write_then_retention
-        )
-        _post(srv, "/insert/jsonline?_stream_fields=app",
-              _lines(old_day, 12, "old2"))
-        _drain(srv)
-        monkeypatch.setattr(ingest_mod, "append_day_partitioned", real)
-
-        with srv.state.lock:
-            live = list(srv.state._table_files)
-        # no resurrection: the round-1 files retention dropped must not
-        # rejoin the manifest at the racing flush's commit
-        assert not (set(committed) & set(live)), (committed, live)
-        # the racing retention deleted the expired day's just-written
-        # files before the commit's listing: expired rows are gone,
-        # live-day rows are exact, nothing double-counts
-        assert _count(srv, '{app="life"}') == 12
-        assert _count(srv, f'{{app="life"}} _time:[{old_day}, {new_day})') == 0
-        with srv.state.lock:
-            assert not [p for p in srv.state._table_files
-                        if p.startswith(f"_day={old_label}")]
-    finally:
-        srv.stop()
-    # restart: the racing commit's manifest restores cleanly, counts hold
-    srv2 = LogHTTPServer(spark, None, 0, spill_dir=spill).start()
-    try:
-        assert _count(srv2, '{app="life"}') == 12
-    finally:
-        srv2.stop()
 
 
 def test_empty_store_serves_empty_results(spark, tmp_path,

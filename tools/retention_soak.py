@@ -27,6 +27,7 @@ import datetime as dt
 import glob
 import json
 import os
+import shutil
 import sys
 import threading
 import time
@@ -235,6 +236,7 @@ def main() -> int:
     for c, ok, d in verdicts:
         print(f"{'PASS' if ok else 'FAIL'}  {c}  [{d}]")
     srv.stop()
+    shutil.rmtree(spill, ignore_errors=True)  # the report keeps the layout
     return 0 if all(ok for _, ok, _ in verdicts) else 1
 
 

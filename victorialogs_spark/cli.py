@@ -58,8 +58,9 @@ def main(argv: list[str] | None = None) -> int:
                     help="serve: durable dir for flushed ingest parquet "
                          "(default: private temp dir, removed on exit)")
     ap.add_argument("--retention-days", type=int, default=0,
-                    help="serve: drop migrated day partitions older than"
-                         " N days (0 = keep forever) — the reference's"
+                    help="serve: drop spill-table day partitions older"
+                         " than N days at startup and at each flush commit"
+                         " (0 = keep forever) — the reference's"
                          " -retentionPeriod watcher")
     ap.add_argument("--port", type=int, default=9428,
                     help="serve: HTTP port (reference default 9428)")

@@ -27,11 +27,15 @@ files, committed the same way. Table files the manifest does not list
 are orphans (a torn flush or a killed compaction) and are deleted at
 restore; a compacted-away file is reaped by a later flush, once every
 /select request that took its frame before the commit has finished its
-response, so plans in flight never lose files.
-``_State.apply_retention`` drops whole day partitions, manifest
-included. Flat parquet in the spill root is the
-layout of older servers: restore folds it into the table once, through
-the flush path.
+response, so plans in flight never lose files. With ``retention_days``
+set, whole expired day partitions drop at restore and inside every
+flush commit, before that flush's day compaction.
+
+One writer owns the table: only the flush thread (or restore, before
+the server accepts requests) changes the table file list, the manifest
+or ``<spill>/_table``; request threads only read it. A spill root
+holding flat parquet (the layout of older servers) is refused at
+startup.
 """
 
 from __future__ import annotations
@@ -112,11 +116,23 @@ def _time_arg_ns(v: str | None, now_ns: int | None = None) -> int | None:
 
 
 class _State:
+    """The served frame and the spill table behind it.
+
+    One writer: the table (``_table_files``, the manifest and
+    ``<spill>/_table``) changes only on the writer thread — the
+    single-flight ``_flush_bg`` (claimed by ``_writing``) or
+    ``_restore``, which runs before the server accepts requests. Flush
+    commit, retention, day compaction and reap run there in that order,
+    so no table change can land between a write and its commit, and an
+    install of a new base always follows the writer's own commit.
+    Request threads append to the pending union and read frames under
+    ``lock``; ``acquire``/``release`` pin the files a read may scan."""
+
     # every append adds a unionByName layer; past this depth the PENDING
-    # union flushes (or, with no spill dir, is localCheckpoint'ed) so
-    # plan analysis stays O(1) per request instead of growing with
-    # ingest count (the same lineage rule iterative algorithms follow,
-    # datapipe/clusters.py)
+    # union flushes (or, once a failed flush degraded the spill, is
+    # localCheckpoint'ed) so plan analysis stays O(1) per request
+    # instead of growing with ingest count (the same lineage rule
+    # iterative algorithms follow, datapipe/clusters.py)
     CHECKPOINT_EVERY = 16
     # acked micro-batches flush into the day-partitioned table once this
     # many rows accumulate; queries then replan over a plain file scan
@@ -143,7 +159,7 @@ class _State:
         self,
         spark: SparkSession,
         logs: DataFrame | None,
-        spill_dir: str | None = None,
+        spill_dir: str,
         retention_days: int | None = None,
     ):
         from victorialogs_spark.schema import with_tenant
@@ -163,14 +179,9 @@ class _State:
         self._base = logs  # preloaded ∪ table scan
         self._pending: DataFrame | None = None  # un-flushed micro-batches
         self._pending_rows = 0
-        self._spill_dir = spill_dir
-        self._spill_ok = spill_dir is not None
-        self._table_dir = (
-            os.path.join(spill_dir, "_table") if spill_dir else None
-        )
-        self._manifest_path = (
-            os.path.join(spill_dir, "_MANIFEST.json") if spill_dir else None
-        )
+        self._spill_ok = True  # False once a failed flush degraded it
+        self._table_dir = os.path.join(spill_dir, "_table")
+        self._manifest_path = os.path.join(spill_dir, "_MANIFEST.json")
         self._table_tombs: set[str] = set()  # compacted-away, not yet rm'd
         # _base_gen counts installed bases; _readers counts the /select
         # requests reading each generation's frame (acquire/release), so
@@ -179,15 +190,10 @@ class _State:
         self._readers: dict[int, int] = {}
         self._table_files: list[str] = []  # manifest-listed, rel to _table
         self._flushing: DataFrame | None = None  # detached, being written
-        self._flush_committed = False  # its files are in _table_files
         # a flush thread (write, commit, day compaction) is running. Table
         # writes are single-flight, so a before/after listing diff names
         # exactly the files the running write added
         self._writing = False
-        # days a compaction rewrite is reading OUTSIDE the lock;
-        # retention defers their physical deletion (logical drop +
-        # tombstones) so the in-flight read never loses files
-        self._compacting_days: set[str] = set()
         # consecutive rewrite failures per day (a success resets its
         # day, COMPACT_MAX_FAILS skips it)
         self._compact_fails: dict[str, int] = {}
@@ -197,60 +203,36 @@ class _State:
         # insertutil/common_params.go:318). Key = (name, label_k, label_v).
         self.counters: dict[tuple[str, str, str], int] = {}
         self._mlock = threading.Lock()
-        if spill_dir is not None:
-            self._restore()
+        self._restore(spill_dir)
 
-    def _restore(self) -> None:
+    def _restore(self, spill_dir: str) -> None:
         """Serve the rows a prior server run flushed into a DURABLE spill
         dir from request one — they were acked. The manifest is the
         commit record: a table file it does not list is a torn flush or
         a killed compaction (kill landed before the commit) and is
-        deleted, so a fraction of a write never half-appears.
+        deleted, so a fraction of a write never half-appears. A prior
+        run's expired days drop here, not only at the next flush commit.
 
-        Flat parquet in the spill root is the layout of older servers
-        (rows flushed there waited for a migration into the table).
-        Live flat files — listed under "flat_files", or every one when
-        the manifest predates that key — fold into the table once,
-        through the flush path; the new manifest lists
-        ``"flat_files": []``, so a flat file still on disk after a kill
-        counts as torn and is deleted, never served twice. Flat files
-        named under "migrated_flat" are already in the table."""
+        Flat parquet in the spill root is the layout of older servers,
+        whose acked rows this server would not serve: it raises, and
+        nothing is deleted."""
         import glob as _glob
 
-        manifest = self._read_manifest()
-        listed = manifest.get("table_files", [])
-        flat_listed = manifest.get("flat_files")
-        tombs = set(manifest.get("migrated_flat", []))
-        fold = []
-        for f in sorted(_glob.glob(os.path.join(self._spill_dir, "*.parquet"))):
-            name = os.path.basename(f)
-            if name in tombs or (
-                flat_listed is not None and name not in flat_listed
-            ):
-                os.remove(f)
-            else:
-                fold.append(f)
+        if _glob.glob(os.path.join(spill_dir, "*.parquet")):
+            raise ValueError(
+                f"spill dir {spill_dir} holds flat parquet from an older"
+                " server; this server only reads the day-partitioned"
+                " table under _table/"
+            )
+        listed = self._read_manifest().get("table_files", [])
         on_disk = set(self._list_table_files())
         self._table_files = [p for p in listed if p in on_disk]
         for orphan in sorted(on_disk - set(listed)):
             os.remove(os.path.join(self._table_dir, orphan))
         if self._table_files:
-            if self.retention_days is not None and not fold:
-                # a prior run's old days must drop at startup, not only
-                # after the next flush commits (a fold commit applies
-                # retention itself)
-                if self._apply_retention_locked(self._retention_keep_from()):
-                    self._write_manifest_locked()
+            if self._apply_retention_locked():
+                self._write_manifest_locked()
             self._replan_base()
-        if fold:
-            self._pending = self.spark.read.option(
-                "mergeSchema", "true"
-            ).parquet(*fold)
-            self._pending_rows = self._pending.count()
-            self.flush_now()
-            if self._spill_ok:  # committed: the rows live in the table
-                for f in fold:
-                    os.remove(f)
 
     def inc(self, name: str, label: str, value: str, n: int = 1) -> None:
         with self._mlock:
@@ -318,19 +300,10 @@ class _State:
         """Atomically replace the manifest — the SINGLE commit point of a
         flush, a compaction and retention. Everything else (parquet
         writes, file deletion) is recoverable from it on restart: table
-        files it does not list are deleted at restore. A degraded spill
-        writes nothing: no table write follows a failed flush, and the
-        manifest on disk must keep listing the flat files a failed
-        restore fold left live (restore filters listed files that
-        retention deleted since)."""
-        if not self._spill_ok:
-            return
+        files it does not list are deleted at restore."""
         tmp = self._manifest_path + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump(
-                {"table_files": sorted(self._table_files), "flat_files": []},
-                fh,
-            )
+            json.dump({"table_files": sorted(self._table_files)}, fh)
             fh.flush()
             os.fsync(fh.fileno())
         os.replace(tmp, self._manifest_path)
@@ -338,7 +311,7 @@ class _State:
     def _list_table_files(self) -> list[str]:
         import glob as _glob
 
-        if self._table_dir is None or not os.path.isdir(self._table_dir):
+        if not os.path.isdir(self._table_dir):
             return []
         return sorted(
             os.path.relpath(p, self._table_dir)
@@ -353,30 +326,28 @@ class _State:
         (never a directory glob): a glob would pick up compacted-away
         files before their reap — an instant double count — and a
         running write's uncommitted files. Its mergeSchema footer read is
-        a Spark job, so it runs outside the lock, and a commit that lands
-        meanwhile makes it read again."""
-        while True:
-            with self.lock:
-                files = self._table_files
-            scan = (
-                self.spark.read.option("mergeSchema", "true")
-                .option("basePath", self._table_dir)
-                .parquet(*[os.path.join(self._table_dir, p) for p in files])
-                if files
-                else None
-            )
-            with self.lock:
-                if files == self._table_files:
-                    self._install_base_locked(scan)
-                    return
+        a Spark job, so it runs outside the lock; only the writer thread
+        calls this, so no commit lands meanwhile."""
+        with self.lock:
+            files = self._table_files
+        scan = (
+            self.spark.read.option("mergeSchema", "true")
+            .option("basePath", self._table_dir)
+            .parquet(*[os.path.join(self._table_dir, p) for p in files])
+            if files
+            else None
+        )
+        with self.lock:
+            self._install_base_locked(scan)
 
     def _install_base_locked(self, scan: DataFrame | None) -> None:
-        """A committed flush's frame leaves the union in the same step
-        (any base installed after that commit lists its files). When the
-        table carries the ``_day`` partition column, the preloaded part
-        derives it from ``_time`` so the planner's day pruning never sees
-        a NULL ``_day`` (allowMissingColumns would fill one, and a pruned
-        query would silently drop every preloaded row)."""
+        """The detached flush frame leaves the union in the same step: the
+        writer installs a base only after its own commit, so the base
+        lists that frame's files. When the table carries the ``_day``
+        partition column, the preloaded part derives it from ``_time`` so
+        the planner's day pruning never sees a NULL ``_day``
+        (allowMissingColumns would fill one, and a pruned query would
+        silently drop every preloaded row)."""
         from victorialogs_spark.schema import with_day_partition
 
         parts = [] if scan is None else [scan]
@@ -398,19 +369,19 @@ class _State:
             )
         self._base = base
         self._base_gen += 1
-        if self._flush_committed:
-            self._flushing, self._flush_committed = None, False
+        self._flushing = None
         self._rebuild_logs_locked()
 
     def _compact_full_days(self) -> None:
         """Rewrite each day partition with >= COMPACT_FILES live files
         into a clustered file set (one output file per ~128 MB of
-        input). Runs inside the flush thread after its commit (table
-        writes are single-flight, so listing diffs stay attributable);
-        the Spark work holds no lock. Old files are NOT deleted at
-        commit — they tombstone into _table_tombs, and a later flush
-        reaps them once no request reads a base that lists them (or,
-        after a kill, restore does: the manifest marks them orphans)."""
+        input). Runs inside the flush thread after its commit, so
+        retention has already dropped expired days and listing diffs
+        stay attributable; the Spark work holds no lock. Old files are
+        NOT deleted at commit — they tombstone into _table_tombs, and a
+        later flush reaps them once no request reads a base that lists
+        them (or, after a kill, restore does: the manifest marks them
+        orphans)."""
         with self.lock:
             days: dict[str, list[str]] = {}
             for p in self._table_files:
@@ -432,18 +403,6 @@ class _State:
                 # un-compacted files — correct, just not clustered
                 and self._compact_fails.get(d, 0) < self.COMPACT_MAX_FAILS
             ]
-            # while the rewrite reads these days outside the lock, a
-            # racing apply_retention() must not physically delete their
-            # files — it defers to a logical drop (the in-memory check
-            # below then abandons the day's commit)
-            self._compacting_days = {d for d, _ in todo}
-        try:
-            self._compact_days(todo)
-        finally:
-            with self.lock:
-                self._compacting_days = set()
-
-    def _compact_days(self, todo: list[tuple[str, list[str]]]) -> None:
         for day, files in todo:
             try:
                 self._compact_one_day(day, files)
@@ -473,12 +432,6 @@ class _State:
         new_files = sorted(set(self._list_table_files()) - before)
         with self.lock:
             self._compact_fails.pop(day, None)  # success resets the gate
-            if not set(files) <= set(self._table_files):
-                # retention (or a manual apply) dropped this day
-                # while we rewrote it: abandon — the new files stay
-                # unlisted and a later flush (or restore) reaps them
-                self._table_tombs.update(new_files)
-                return
             self._table_files = sorted(
                 (set(self._table_files) - set(files)) | set(new_files)
             )
@@ -487,80 +440,40 @@ class _State:
         self._replan_base()
         self.inc("vl_spill_compactions_total", "status", "ok")
 
-    def _retention_keep_from(self) -> str:
+    def _apply_retention_locked(self) -> bool:
+        """With ``retention_days`` set, drop the day partitions older
+        than that and their manifest rows — the reference's retention
+        watcher, storage.go:50. True when a day dropped; the CALLER (the
+        writer thread) commits the manifest and replans, so a flush
+        commit folds retention into its single manifest write. Rows
+        still in the pending union are NOT covered until they flush —
+        the same window the reference's in-memory parts have. Queries
+        planned before the drop may fail on the deleted files — the
+        reference's retention has the same semantics (data vanishes
+        under running queries), and it beats serving expired rows."""
         import datetime as _dt
 
+        from victorialogs_spark.streaming.ingest import apply_retention
+
+        if self.retention_days is None or not self._table_files:
+            return False
         cutoff = _dt.datetime.now(_dt.timezone.utc) - _dt.timedelta(
             days=self.retention_days
         )
-        return cutoff.strftime("%Y%m%d")
-
-    def _apply_retention_locked(self, keep_days_from: str) -> list[str]:
-        """Drop day partitions older than ``keep_days_from`` and their
-        manifest rows; the CALLER commits the manifest and replans (so a
-        flush commit folds retention into its single manifest write). Queries planned before the drop may fail on the deleted
-        files — the reference's retention has the same semantics (data
-        vanishes under running queries), and it beats serving expired
-        rows."""
-        from victorialogs_spark.streaming.ingest import (
-            apply_retention as _apply,
-        )
-
-        if self._table_dir is None or not self._table_files:
-            return []
-        dropped = _apply(
-            self._table_dir, keep_days_from, skip=self._compacting_days
-        )
-        # a day an in-flight compaction is reading outside the lock is
-        # dropped LOGICALLY only: its files tombstone for a later
-        # flush's reap (the compaction's commit check sees the day
-        # missing from _table_files and abandons), and the emptied
-        # day dir falls to the next physical retention pass
-        for day in sorted(self._compacting_days):
-            if day.split("=", 1)[-1] < keep_days_from:
-                pre = f"{day}{os.sep}"
-                deferred = [
-                    p for p in self._table_files if p.startswith(pre)
-                ]
-                if deferred:
-                    self._table_tombs.update(deferred)
-                    dropped.append(day.split("=", 1)[-1])
-        if dropped:
-            gone = tuple(f"_day={d}{os.sep}" for d in dropped)
-            self._table_files = [
-                p for p in self._table_files if not p.startswith(gone)
-            ]
-        return dropped
-
-    def apply_retention(self, keep_days_from: str) -> list[str]:
-        """Drop table day-partitions older than ``keep_days_from``
-        (YYYYMMDD) — the reference's retention watcher, storage.go:50.
-        Returns dropped day labels. Rows still in the pending union are
-        NOT covered until they flush — the same window the reference's
-        in-memory parts have. With ``retention_days`` set, this also
-        runs automatically at restore and at every flush commit."""
-        with self.lock:
-            dropped = self._apply_retention_locked(keep_days_from)
-            if dropped:
-                self._write_manifest_locked()
-        if dropped:
-            self._replan_base()
-        return dropped
+        dropped = apply_retention(self._table_dir, cutoff.strftime("%Y%m%d"))
+        gone = tuple(f"_day={d}{os.sep}" for d in dropped)
+        self._table_files = [
+            p for p in self._table_files if not p.startswith(gone)
+        ]
+        return bool(dropped)
 
     def append(self, df: DataFrame, n: int) -> None:
-        """Append a request frame of ``n`` rows. The frame is a
-        driver-side local relation (sources/ndjson.rows_frame), so an
-        append runs no Spark job: the rows' one Spark job is the flush
-        that writes them to the table. Only the union bookkeeping takes
-        the lock; with no spill dir, the lineage checkpoint runs after
-        it is released."""
-        if "tenant" not in df.columns:
-            # rows appended without a tenant belong to the default one;
-            # a NULL tenant from allowMissingColumns would fail every
-            # tenant filter
-            from victorialogs_spark.schema import with_tenant
-
-            df = with_tenant(df, 0, 0)
+        """Append a request frame of ``n`` tenant-stamped rows
+        (_Handler._append). The frame is a driver-side local relation
+        (sources/ndjson.rows_frame), so an append runs no Spark job: the
+        rows' one Spark job is the flush that writes them to the table.
+        Only the union bookkeeping takes the lock; in degraded mode the
+        lineage checkpoint runs after it is released."""
         with self.lock:
             self._pending = (
                 df
@@ -572,11 +485,11 @@ class _State:
             pending = self._pending
             consolidate = False
             if self._spill_ok:
-                # with a spill dir, lineage consolidation IS the flush:
-                # detaching the union to the background writer bounds
-                # plan depth without ever running an O(pending) Spark
-                # job under the lock. Early flushes write smaller table
-                # files; day compaction rewrites them later anyway.
+                # lineage consolidation IS the flush: detaching the
+                # union to the background writer bounds plan depth
+                # without ever running an O(pending) Spark job under the
+                # lock. Early flushes write smaller table files; day
+                # compaction rewrites them later anyway.
                 if (
                     self._pending_rows >= self.FLUSH_ROWS
                     or self._depth >= self.CHECKPOINT_EVERY
@@ -586,7 +499,7 @@ class _State:
                 consolidate = self._depth >= self.CHECKPOINT_EVERY
             self._rebuild_logs_locked()
         if consolidate:
-            # no spill dir: consolidate the union lineage in place —
+            # degraded spill: consolidate the union lineage in place —
             # O(pending), never O(total ingested); an append that
             # landed meanwhile leaves it to the next one
             done = pending.localCheckpoint(eager=True)
@@ -603,7 +516,6 @@ class _State:
         if self._writing or self._pending is None or not self._spill_ok:
             return None
         self._writing = True
-        self._flush_committed = False
         self._flushing, rows = self._pending, self._pending_rows
         self._pending = None
         self._pending_rows = 0
@@ -686,12 +598,11 @@ class _State:
             with self.lock:
                 # manifest commit: without it a restart would treat these
                 # files as a torn flush and delete them. Retention folds
-                # into the same manifest write
+                # into the same manifest write, before the day compaction
+                # below lists its days
                 self._table_files = sorted(set(self._table_files) | new_files)
-                if self.retention_days is not None:
-                    self._apply_retention_locked(self._retention_keep_from())
+                self._apply_retention_locked()
                 self._write_manifest_locked()
-                self._flush_committed = True
             self._replan_base()
             self.inc("vl_spill_flushes_total", "status", "ok")
             try:
@@ -1243,8 +1154,11 @@ class LogHTTPServer:
     ``spill_dir`` holds the day-partitioned table acked ingest
     micro-batches flush into once _State.FLUSH_ROWS accumulate
     (bounding read-path plan growth under sustained ingest). Default: a
-    private temp dir removed by stop(). Pass a durable path to keep flushed rows across restarts
-    (the production shape: acked writes belong in storage)."""
+    private temp dir removed by stop(). Pass a durable path to keep
+    flushed rows across restarts (the production shape: acked writes
+    belong in storage); a dir holding flat parquet from an older server
+    raises ValueError. ``retention_days`` drops day partitions older
+    than that many days at startup and at every flush commit."""
 
     def __init__(
         self,

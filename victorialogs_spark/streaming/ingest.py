@@ -108,18 +108,13 @@ def list_days(table_dir: str) -> list[str]:
     )
 
 
-def apply_retention(
-    table_dir: str, keep_days_from: str, skip: set[str] = frozenset()
-) -> list[str]:
+def apply_retention(table_dir: str, keep_days_from: str) -> list[str]:
     """Drop every ``_day`` partition strictly older than ``keep_days_from``
     (YYYYMMDD). Returns the dropped day labels. Mirrors the reference's
-    retention watcher deleting whole per-day partitions (storage.go:50).
-    ``skip`` holds day labels (bare or ``_day=``-prefixed) whose physical
-    deletion the caller defers — days an in-flight compaction is reading."""
-    skip_labels = {d.split("=", 1)[-1] for d in skip}
+    retention watcher deleting whole per-day partitions (storage.go:50)."""
     dropped = []
     for day in list_days(table_dir):
-        if day < keep_days_from and day not in skip_labels:
+        if day < keep_days_from:
             shutil.rmtree(Path(table_dir) / f"_day={day}")
             dropped.append(day)
     return dropped
